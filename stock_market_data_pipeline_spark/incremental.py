@@ -37,7 +37,14 @@ incremental cutoff (MAX trade_date of the prior materialization) is
 read from the manifest's footer-stats zone maps — a driver-side fold,
 no Spark job — with a real scan as the fallback when stats are absent
 (measured ~35 s saved per sf1 run vs recomputing the momentum lineage
-for one scalar).
+for one scalar).  The recomputed slice is materialized ONCE before the
+merge and released after its commit: the merge reads its source three
+times (the touched-partition collect and both sides of
+:func:`merge_upsert`), and each read otherwise re-ran the whole-history
+universe + window lineage.  Three evaluations become one, and the
+cache is small — tickers × (new dates + lookback) rows.  The merge
+itself stays generic (its NOTE explains why an in-merge persist loses
+for cheap sources).
 """
 
 from __future__ import annotations
@@ -151,5 +158,12 @@ def incremental_momentum_run(spark: SparkSession, universe: DataFrame,
                                     lookback_days)
     if table.ts == "trade_month":
         recomputed = recomputed.withColumn("trade_month", trade_month_col())
-    table.merge(spark, recomputed, ["ticker", "trade_date"])
+    # one run of the whole-history lineage, not the merge's three
+    # (module docstring, "Scale notes")
+    recomputed = recomputed.persist()
+    try:
+        recomputed.count()
+        table.merge(spark, recomputed, ["ticker", "trade_date"])
+    finally:
+        recomputed.unpersist()
     return table.read(spark)

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StructField, StructType
 
+from ..session import local_frame
+
 CALENDAR_SCHEMA = StructType([StructField("cal_date", DateType())])
 
 
@@ -29,7 +31,7 @@ def trading_days(spark: SparkSession, start: date, end: date,
         if d.weekday() < 5 and d not in hol:
             days.append((d,))
         d += timedelta(days=1)
-    return spark.createDataFrame(days, CALENDAR_SCHEMA)
+    return local_frame(spark, days, CALENDAR_SCHEMA)
 
 
 def last_completed_trading_day(cal: DataFrame, as_of) -> DataFrame:

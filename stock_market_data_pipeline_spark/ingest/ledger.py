@@ -21,6 +21,8 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType, TimestampType,
 )
 
+from ..session import local_frame
+
 LEDGER_SCHEMA = StructType([
     StructField("run_id", StringType()),
     StructField("api_date", StringType()),
@@ -44,7 +46,7 @@ class Ledger:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+            return local_frame(self.spark, [], LEDGER_SCHEMA)
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
     def record(self, api_date: str, status: str, rows_loaded: int = 0,

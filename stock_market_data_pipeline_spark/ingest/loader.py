@@ -3,8 +3,10 @@
 
 normalize_rows: the reference's pandas rename/enrich before load
 (rename t->TS etc., stamp DATE + INGESTED_AT, tz-strip) — here done as
-Catalyst column ops on a DataFrame created straight from the fetched
-rows (Arrow path), so nothing is row-looped.
+Catalyst column ops on a DataFrame built from the fetched rows through
+an Arrow table (:func:`session.local_frame`): Spark plans it as a JVM
+LocalRelation, so an ingested date starts no Python worker, and the
+rows pass createDataFrame's own type verifier first.
 
 ensure_table / append: CREATE IF NOT EXISTS + schema-subset guard +
 bulk append onto a parquet table directory (Delta MERGE/append on a
@@ -23,6 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import local_frame
 from .calendar import trading_days
 from .ledger import Ledger
 from .source import RateLimiter, fetch_with_retry
@@ -59,7 +62,7 @@ def normalize_rows(spark: SparkSession, rows: list[dict],
                    api_date: str) -> DataFrame:
     """P5: rename/enrich fetched rows; P6: project to the exact target
     column subset (src/load.py:36-76, 62-68)."""
-    df = spark.createDataFrame(rows, FETCH_SCHEMA)
+    df = local_frame(spark, rows, FETCH_SCHEMA)
     enriched = df.select(
         F.col("T"),
         F.col("v").alias("V"),

@@ -128,6 +128,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 _PT = "__pt"
 _MANIFEST_DIR = "_manifests"
 _SHARD_DIR = os.path.join(_MANIFEST_DIR, "shards")
@@ -3122,7 +3124,7 @@ class ManifestTable:
                     f"{self.root}: nothing to read and no pinned schema "
                     "to type an empty result")
             ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            return spark.createDataFrame([], ddl)
+            return local_frame(spark, [], ddl)
         return self._read_files(spark, plan["files"], mf,
                                 partitions=plan["partitions"])
 
@@ -3842,7 +3844,10 @@ class ManifestTable:
         # cache forces all columns while each consumer is
         # column-pruned (the touched-partition distinct reads one
         # column), so the A/B ran ~0.5 s SLOWER at sf0.1.  Recompute
-        # with pruning beats cache without it (guide §5).
+        # with pruning beats cache without it (guide §5).  A caller
+        # whose source is EXPENSIVE materializes it before calling —
+        # incremental_momentum_run persists its trailing recompute,
+        # whose lineage is the whole history — so keep this generic.
         if mode == "dv":
             return self._merge_dv(spark, mf, updates, keys,
                                   validate_key_stability, cdf,
@@ -4116,7 +4121,7 @@ class ManifestTable:
                                                   "string"]]
         ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
         if not entries:
-            return spark.createDataFrame([], ddl)
+            return local_frame(spark, [], ddl)
         paths = [os.path.join(self.root, e["path"]) for e in entries]
         if mf.get("cdf_kind") == "insert_files":
             # an append's feed IS its data files (pure inserts, zero
@@ -4482,7 +4487,7 @@ class ManifestTable:
                     f"{self.root}: no changes and no pinned schema "
                     "to type an empty result")
             ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            return spark.createDataFrame([], ddl)
+            return local_frame(spark, [], ddl)
         return self._read_files(spark, files, mf)
 
     def restore(self, version: int) -> None:

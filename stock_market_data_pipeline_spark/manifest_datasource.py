@@ -2068,6 +2068,7 @@ def _run_ddl(spark, query: str, mts: dict):
     m = _CREATE_EMPTY_RE.match(query)
     if m:
         from .manifest import ManifestTable
+        from .session import local_frame
         name, collist, part_col = m.groups()
         if name not in mts:
             raise KeyError(f"CREATE TABLE target {name!r} not in "
@@ -2080,7 +2081,7 @@ def _run_ddl(spark, query: str, mts: dict):
             pass
         cols = parse_cols(collist, "CREATE TABLE column")
         ddl = ", ".join(f"`{n}` {tp}" for n, tp in cols)
-        empty = spark.createDataFrame([], ddl)
+        empty = local_frame(spark, [], ddl)
         t = ManifestTable.create(empty, mts[name].root, ts=part_col)
         mts[name] = t
         return done(t, name)

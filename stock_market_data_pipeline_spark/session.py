@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 _LOCAL_DEFAULTS = {
     # Shuffle partitions sized for local cores; on a real cluster this is
@@ -64,3 +65,35 @@ def get_spark(app_name: str = "stock_market_data_pipeline_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str
+                ) -> DataFrame:
+    """Driver-side ``rows`` (dicts or tuples) as a frame Spark plans as
+    a JVM ``LocalRelation``, so scanning it starts no Python worker.
+    ``spark.createDataFrame(list, schema)`` plans a Python RDD instead,
+    and every action over it runs Python tasks, each paying PySpark's
+    per-task worker set-up, even for zero rows.
+
+    Every row first passes the verifier ``createDataFrame`` applies, so
+    the same rows are rejected (Arrow alone would truncate ``2.5`` into
+    a long column and take ``True`` as ``1.0`` in a double one), and is
+    converted by the same ``toInternal`` (naive datetimes are local
+    time, as there)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*internal)) or [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)

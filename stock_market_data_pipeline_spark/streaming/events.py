@@ -19,6 +19,7 @@ import tempfile
 
 from ..physical import EVENTS_DDL, events_ts_unit, normalize_event_ts
 from ..scratch import scratch_dir
+from ..session import local_frame
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,7 +168,7 @@ def upsert_replay(spark: SparkSession, sf_dir: str,
                             max_files=1)
     # v1: an empty table pinning the schema, so EVERY data batch —
     # including the first — flows through the ledgered merge path
-    empty = (spark.createDataFrame([], stream.schema)
+    empty = (local_frame(spark, [], stream.schema)
              .withColumn("event_date", F.to_date("ts")))
     table = ManifestTable.create(empty, root, ts="event_date")
 
@@ -362,7 +363,7 @@ def manifest_append_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1: an empty table (schema from the stream, no partitions yet) so
     # that EVERY data batch — including the first — flows through the
     # ledgered append_batch path.
-    empty = (spark.createDataFrame([], stream.schema)
+    empty = (local_frame(spark, [], stream.schema)
              .withColumn("event_date", F.to_date("ts")))
     table = ManifestTable.create(empty, root, ts="event_date")
     seen: list[int] = []

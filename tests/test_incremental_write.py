@@ -129,3 +129,36 @@ def test_merge_validate_catches_key_that_moved_partitions(
     rows = sorted(map(tuple, table.read(spark)
                       .select("event_id", "v").collect()))
     assert rows == [("E1", 1.0), ("E2", 20.0)]
+
+
+def test_merge_source_is_materialized_slice(spark, universe,
+                                            tmp_path_factory,
+                                            monkeypatch):
+    """The frame an incremental run hands to ``ManifestTable.merge`` is
+    already materialized: the merge reads its source three times, and
+    a source still carrying the whole-history window lineage would
+    recompute it for each read.  Its optimized plan has no Window."""
+    root = str(tmp_path_factory.mktemp("fct3") / "fct_momentum")
+    table = materialize_momentum(
+        spark, universe.where(F.col("trade_date") <= F.lit(SPLIT)),
+        root, SMALL)
+    def node_names(plan) -> list[str]:
+        # walk the children, not toString(): a cached relation prints
+        # the plan it was built from under itself
+        kids = plan.children()
+        return [plan.nodeName()] + [n for i in range(kids.size())
+                                    for n in node_names(kids.apply(i))]
+
+    plans = []
+    real_merge = ManifestTable.merge
+
+    def merge(self, spark_, updates, keys, **kw):
+        plans.append(node_names(
+            updates._jdf.queryExecution().optimizedPlan()))
+        return real_merge(self, spark_, updates, keys, **kw)
+
+    monkeypatch.setattr(ManifestTable, "merge", merge)
+    incremental_momentum_run(spark, universe, table, SMALL,
+                             lookback_days=4)
+    assert len(plans) == 1
+    assert "Window" not in plans[0], plans[0]

@@ -231,3 +231,92 @@ def test_watermark_drops_too_late_rows(spark, tmp_path):
     assert all(r["n"] == 1 for r in rows), rows
     # windows 0..3 finalized (watermark ends at 4h-10min); hour-4 held
     assert len(rows) == 4, rows
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
+    """The ingest's driver-side frames (the fetched rows, the trading
+    calendar) and an empty ledger scan as JVM LocalRelations: a Python
+    RDD frame (LogicalRDD) would start Python workers on every
+    action over it."""
+    from stock_market_data_pipeline_spark.ingest.calendar import (
+        trading_days,
+    )
+    from stock_market_data_pipeline_spark.ingest.ledger import Ledger
+    from stock_market_data_pipeline_spark.ingest.loader import (
+        normalize_rows,
+    )
+
+    frames = {
+        "normalize_rows": normalize_rows(
+            spark, synthetic_grouped_daily("1998-02-02").rows,
+            "1998-02-02"),
+        "trading_days": trading_days(spark, date(1998, 2, 2),
+                                     date(1998, 2, 15)),
+        "empty ledger": Ledger(spark, str(tmp_path / "none")).read(),
+    }
+    for name, df in frames.items():
+        plan = _optimized_plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (
+            name, plan)
+    assert frames["normalize_rows"].count() == 50
+    assert frames["trading_days"].count() == 10
+    assert frames["empty ledger"].count() == 0
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """The Arrow-built frame holds exactly the rows createDataFrame
+    builds from the same driver rows, nested and temporal types
+    included."""
+    import datetime
+    import decimal
+
+    from stock_market_data_pipeline_spark.session import local_frame
+
+    ddl = ("t timestamp, d date, m decimal(10,2), a array<int>, "
+           "mp map<string,int>, st struct<x:int,y:string>, s string")
+    rows = [(datetime.datetime(2024, 1, 2, 3, 4, 5),
+             datetime.date(2024, 1, 2), decimal.Decimal("1.50"), [1, 2],
+             {"k": 1}, (3, "z"), "a"),
+            (None, None, None, None, None, None, None)]
+    got = local_frame(spark, rows, ddl)
+    assert "LocalRelation" in _optimized_plan(got)
+    assert got.schema == spark.createDataFrame(rows, ddl).schema
+    assert got.collect() == spark.createDataFrame(rows, ddl).collect()
+
+
+@pytest.mark.parametrize("field,value", [
+    ("o", "abc"),       # string in a double field
+    ("n", 2.5),         # float in a long field: Arrow would truncate
+    ("v", True),        # bool in a double field: Arrow would take 1.0
+    ("c", 5),           # int in a double field
+])
+def test_mistyped_payload_row_fails_the_date(spark, tmp_path, field,
+                                             value):
+    """A payload row createDataFrame's verifier rejects fails its date
+    through the Arrow ingest too: the ledger records 'failed' and no
+    bar is appended."""
+    from stock_market_data_pipeline_spark.ingest.ledger import Ledger
+    from stock_market_data_pipeline_spark.ingest.loader import (
+        extract_load_range,
+    )
+
+    def transport(d):
+        resp = synthetic_grouped_daily(d)
+        resp.rows[7] = {**resp.rows[7], field: value}
+        return resp
+
+    wh = str(tmp_path / "wh")
+    with pytest.raises((TypeError, ValueError)):
+        extract_load_range(spark, wh, date(1998, 2, 2), date(1998, 2, 2),
+                           transport=transport)
+    statuses = [(r.api_date, r.status) for r in
+                Ledger(spark, os.path.join(wh, "ingestion_checkpoints"))
+                .read().collect()]
+    assert sorted(statuses) == [("1998-02-02", "failed"),
+                                ("1998-02-02", "started")]
+    bars = os.path.join(wh, "raw_daily_bars")
+    assert not [f for f in os.listdir(bars) if f.endswith(".parquet")]
