@@ -64,6 +64,20 @@ no mutable pointer file):
    storage unchanged; the crash/conflict/race/model test suites run
    against BOTH backends.
 
+Every write after ``create`` runs through ONE optimistic-concurrency
+loop, :meth:`ManifestTable._transact`: read the live snapshot, let the
+op build its commit from it, publish; on :class:`CommitConflict`
+re-read and rebuild, at most ``_COMMIT_ATTEMPTS`` times before raising
+a conflict that names the attempt count (no unbounded spinning under
+contention).  Appends and metadata-only ops rebase; positional (DV)
+writes and rewrites rebase only when the competing commit was disjoint
+from the partitions they read (:func:`_check_unchanged`); ``merge``
+(rewrite), ``overwrite`` and ``restore`` make a single attempt.  A
+commit names only the top-level keys it changes; every other key of
+the commit object carries from the base snapshot (``_commit``), and
+every changed partition ref is rebuilt by one rule
+(:meth:`ManifestTable._rebuild_ref`).
+
 The manifest maps each partition VALUE to a list of FILE entries, each
 carrying row count, byte size, and per-column min/max lifted from the
 parquet footer at stage time (driver-side pyarrow reads — no extra
@@ -148,6 +162,12 @@ _TAG_FILE_RE = re.compile(r"tag-([A-Za-z0-9_\-]{1,64})\.json")
 #: referenced from a small commit object.  Bumped on any incompatible
 #: layout change; ``manifest()`` refuses other versions.
 _FORMAT = 3
+#: publishes one :meth:`ManifestTable._transact` call may lose to
+#: competing writers before it gives up with :class:`CommitConflict`.
+#: Each lost attempt means a competitor's commit landed, so this bounds
+#: a writer's retries by the commits it can be overtaken by — far above
+#: any real race between a handful of writers, far below "spin forever"
+_COMMIT_ATTEMPTS = 32
 
 
 class CrashInjected(RuntimeError):
@@ -599,6 +619,22 @@ def _ref_fp(ref: dict) -> tuple:
     delete snapshot land and silently resurrect the deleted rows."""
     return (ref.get("shard"),
             tuple(e["path"] for e in ref.get("dv", [])))
+
+
+def _check_unchanged(staged_from: dict, snap: dict, values,
+                     msg: str) -> None:
+    """The stale-staging guard of every positional (DV) write and
+    rewrite: its staged work was computed from ``staged_from``, so
+    committing it onto ``snap`` is a REBASE only when no partition in
+    ``values`` it read or addressed changed in between
+    (:func:`_ref_fp`).  Otherwise the staged files could resurrect
+    deleted rows or drop the competitor's, so raise
+    :class:`CommitConflict` (``msg`` tells the caller what to re-run)."""
+    old, new = staged_from["partitions"], snap["partitions"]
+    for v in values:
+        if v in old and (v not in new
+                         or _ref_fp(old[v]) != _ref_fp(new[v])):
+            raise CommitConflict(msg)
 
 
 def _fold_stats(entries: list[dict]) -> dict:
@@ -1204,9 +1240,6 @@ class ManifestTable:
         if self._pt_ctor is not None and ts is None:
             raise ValueError(
                 "a partition transform needs a source column (ts)")
-        #: evolve_partition/clone handshake: (pt_history, active_pt)
-        #: a commit should pin instead of carrying from its base
-        self._pt_evolving = None
         #: the storage-dependent commit primitive (protocol step 3).
         #: Backends interoperate on one table: every backend's publish
         #: is gated on the final name's absence, so mixed writers
@@ -1375,6 +1408,91 @@ class ManifestTable:
             return None
         return -1
 
+    def _rebuild_ref(self, snap: dict, value: str, adds=(), dv_add=(),
+                     dv_rows_add: int = 0) -> dict | None:
+        """THE rule for changing one partition of ``snap``: ``adds``
+        (new file entries) join its files, ``dv_add`` sidecars
+        (``dv_rows_add`` dead rows) join its deletion vectors.  The
+        rebuilt ref carries the base's DVs (they address its kept
+        files — dropping them would resurrect rows) and its text index
+        (it still covers the kept files; added ones are read
+        conservatively), and is marked era-MIXED when active-era adds
+        land in an older-era ref (:meth:`_mixed_pid_for`).  Returns
+        None when every row is dead (the caller drops the partition).
+        With adds the result is the ``{"entries": ...}`` form
+        :meth:`_commit` shards; a DV-only change keeps the shard."""
+        base = snap["partitions"].get(value)
+        if base is None:
+            return {"entries": list(adds)} if adds else None
+        dv = list(base.get("dv", [])) + list(dv_add)
+        dv_rows = base.get("dv_rows", 0) + dv_rows_add
+        if not adds:
+            if dv_rows >= base["rows"]:
+                return None
+            return {**base, "dv": dv, "dv_rows": dv_rows}
+        form: dict = {"entries": self._entries(snap, value) + list(adds)}
+        if dv:
+            form["dv"], form["dv_rows"] = dv, dv_rows
+        if base.get("tidx"):
+            form["tidx"] = base["tidx"]
+        pid = self._mixed_pid_for(base, snap.get("pt_history"))
+        if pid is not None:
+            form["pid"] = pid
+        return form
+
+    def _rebuilt_parts(self, snap: dict, adds: dict,
+                       dv: dict | None = None,
+                       dv_rows: dict | None = None) -> dict:
+        """``snap``'s partitions map with every partition named in
+        ``adds`` / ``dv`` rebuilt through :meth:`_rebuild_ref` (fully
+        dead ones dropped); the rest carry by ref."""
+        dv, dv_rows = dv or {}, dv_rows or {}
+        parts = dict(snap["partitions"])
+        for v in sorted(set(adds) | set(dv)):
+            ref = self._rebuild_ref(snap, v, adds.get(v, ()),
+                                    dv.get(v, ()), dv_rows.get(v, 0))
+            if ref is None:
+                parts.pop(v, None)
+            else:
+                parts[v] = ref
+        return parts
+
+    def _transact(self, build, snap: dict | None = None,
+                  attempts: int = _COMMIT_ATTEMPTS) -> dict | None:
+        """THE optimistic-concurrency loop every write runs: read the
+        live snapshot, ``build(snap)`` the commit, publish it through
+        :meth:`_commit`; on :class:`CommitConflict` re-read and rebuild.
+
+        ``build`` returns the :meth:`_commit` keywords it decides — the
+        new ``partitions`` map (default: the snapshot's, for metadata-
+        only ops) and any top-level key it changes; everything else
+        carries from the snapshot.  It returns None to commit nothing.
+        Each op's conflict rule lives in its ``build``: rebuilding from
+        the fresh ``snap`` is a rebase, and :func:`_check_unchanged`
+        raises when staged work went stale.  ``snap`` seeds the first
+        attempt with a snapshot the caller already read.
+        ``attempts=1`` is the single-attempt form (the conflict
+        propagates); otherwise, after ``attempts`` lost publishes, a
+        :class:`CommitConflict` naming the count is raised.  Returns
+        the committed keywords, or None."""
+        for _ in range(attempts):
+            if snap is None:
+                snap = self._raw()
+            out = build(snap)
+            if out is None:
+                return None
+            try:
+                self._commit(**{"partitions": snap["partitions"], **out},
+                             base_version=snap["version"])
+                return out
+            except CommitConflict:
+                if attempts == 1:
+                    raise
+                snap = None
+        raise CommitConflict(
+            f"{self.root}: gave up after {attempts} commit attempts, "
+            f"each lost to a competing writer; retry the operation")
+
     def _pt_col(self, df: DataFrame | None = None,
                 mf: dict | None = None):
         """The partition-value Column for this table's rows (every
@@ -1471,13 +1589,11 @@ class ManifestTable:
         Delta column-mapping re-add rule): old files NULL-fill the
         fresh physical on read, so dropped data can never
         resurrect under a reused name."""
-        while True:
-            mf = self._raw()
+        def build(mf: dict) -> dict:
             schema = [list(c) for c in (mf.get("schema") or [])]
             have = {n for n, _ in schema}
             colmap = dict(mf.get("colmap") or {})
             occupied = self._occupied_physicals(mf)
-            mapped = False
             for n, t in new_cols:
                 if n in have:
                     raise SchemaMismatch(
@@ -1489,25 +1605,13 @@ class ManifestTable:
                         k += 1
                     colmap[n] = f"{n}__p{k}"
                     occupied.add(f"{n}__p{k}")
-                    mapped = True
                 else:
                     occupied.add(n)
                 have.add(n)
                 schema.append([n, t])
-            try:
-                if mapped:
-                    self._commit(dict(mf["partitions"]),
-                                 base_version=mf["version"],
-                                 streams=mf.get("streams", {}),
-                                 schema=schema, colmap=colmap)
-                else:
-                    self._commit(dict(mf["partitions"]),
-                                 base_version=mf["version"],
-                                 streams=mf.get("streams", {}),
-                                 schema=schema)
-                return
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+            return {"schema": schema, "colmap": colmap or None}
+
+        self._transact(build)
 
     @staticmethod
     def _occupied_physicals(mf: dict) -> set:
@@ -1548,8 +1652,7 @@ class ManifestTable:
         must have the constraint dropped first (Delta's rule — a
         constraint over a ghost column is unenforceable); stored
         ANALYZE stats for the column drop with it."""
-        while True:
-            mf = self._raw()
+        def build(mf: dict) -> dict:
             schema = [list(c) for c in (mf.get("schema") or [])]
             names = [n for n, _ in schema]
             if col not in names:
@@ -1574,33 +1677,28 @@ class ManifestTable:
                         f"first")
             colmap = dict(mf.get("colmap") or {})
             physical = colmap.pop(col, col)
-            retired = sorted(set(mf.get("retired") or [])
-                             | {physical})
-            schema = [c for c in schema if c[0] != col]
-            kw: dict = {}
+            out: dict = {
+                "schema": [c for c in schema if c[0] != col],
+                "colmap": colmap or None,
+                "retired": sorted(set(mf.get("retired") or [])
+                                  | {physical})}
             bspec = mf.get("bloom")
             if bspec and physical in bspec.get("cols", []):
                 # bloom spec keys are physical; shrink the spec (the
                 # per-file filters for the column stay in the shard
                 # entries, harmlessly unprobed)
                 cols = [c for c in bspec["cols"] if c != physical]
-                kw["bloom"] = ({**bspec, "cols": cols} if cols
-                               else None)
+                out["bloom"] = ({**bspec, "cols": cols} if cols
+                                else None)
             cs = mf.get("colstats")
             if cs and col in cs.get("columns", {}):
-                kw["colstats"] = {
+                out["colstats"] = {
                     **cs, "columns": {k: v for k, v
                                       in cs["columns"].items()
                                       if k != col}}
-            try:
-                self._commit(dict(mf["partitions"]),
-                             base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=schema, colmap=colmap or None,
-                             retired=retired, **kw)
-                return
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+            return out
+
+        self._transact(build)
 
     #: safe metadata-only type widenings (Delta/Iceberg type
     #: promotion set for parquet physical compatibility: INT32-family
@@ -1633,8 +1731,7 @@ class ManifestTable:
         The PARTITION column cannot be renamed (its name is baked
         into every shard ref and directory layout; that rename is a
         rewrite by nature) — raises instead of pretending."""
-        while True:
-            mf = self._raw()
+        def build(mf: dict) -> dict:
             schema = [list(c) for c in (mf.get("schema") or [])]
             names = [n for n, _ in schema]
             if old not in names:
@@ -1660,14 +1757,9 @@ class ManifestTable:
             for c in schema:
                 if c[0] == old:
                     c[0] = new
-            try:
-                self._commit(dict(mf["partitions"]),
-                             base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=schema, colmap=colmap or None)
-                return
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+            return {"schema": schema, "colmap": colmap or None}
+
+        self._transact(build)
 
     def widen_column(self, col: str, new_type: str) -> None:
         """METADATA-ONLY type widening (VERDICT r10 #6 — Iceberg
@@ -1684,8 +1776,8 @@ class ManifestTable:
         lossy retype stay forbidden: footer stats/zone maps would
         lie about live data."""
         new_type = new_type.strip().lower()
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict:
             schema = [list(c) for c in (mf.get("schema") or [])]
             cur = {n: t for n, t in schema}
             if col not in cur:
@@ -1705,14 +1797,9 @@ class ManifestTable:
             for c in schema:
                 if c[0] == col:
                     c[1] = new_type
-            try:
-                self._commit(dict(mf["partitions"]),
-                             base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=schema)
-                return
-            except CommitConflict:
-                continue
+            return {"schema": schema}
+
+        self._transact(build)
 
     def evolve_partition(self, partition) -> None:
         """PARTITION-SPEC EVOLUTION (Iceberg's headline metadata op,
@@ -1741,8 +1828,8 @@ class ManifestTable:
             raise ValueError(
                 "evolve_partition: unpartitioned table (ts=None) has "
                 "no spec to evolve")
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict:
             hist = mf.get("pt_history")
             if hist is None:
                 hist = [mf.get("pt")]
@@ -1758,20 +1845,14 @@ class ManifestTable:
                 # era that was active at their write: the last one
                 r.setdefault("pid", prev_active)
                 parts[v] = r
-            self._pt_evolving = (hist + [new], new)
-            try:
-                self._commit(parts, base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=mf.get("schema"))
-                # this handle follows its own evolution (a ctor spec
-                # pinned at open would now read as a stale-writer
-                # mismatch — that guard is for OTHER handles)
-                self._pt_ctor = new
-                return
-            except CommitConflict:
-                continue
-            finally:
-                self._pt_evolving = None
+            return {"partitions": parts, "pt_history": hist + [new],
+                    "pt": new}
+
+        self._transact(build)
+        # this handle follows its own evolution (a ctor spec pinned at
+        # open would now read as a stale-writer mismatch — that guard
+        # is for OTHER handles)
+        self._pt_ctor = new
 
     # -- table constraints (Delta CHECK / NOT NULL analog) -----------
 
@@ -1896,23 +1977,16 @@ class ManifestTable:
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"constraint name {name!r} is not a "
                              f"plain identifier")
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict:
             cons = dict(mf.get("constraints") or {})
             if name in cons:
                 raise ValueError(
                     f"constraint {name!r} already exists on "
                     f"{self.root}")
-            cons[name] = spec
-            try:
-                self._commit(dict(mf["partitions"]),
-                             base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=mf.get("schema"),
-                             constraints=cons)
-                return
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+            return {"constraints": {**cons, name: spec}}
+
+        self._transact(build)
 
     def add_check(self, spark: SparkSession, name: str,
                   expr: str) -> None:
@@ -1972,23 +2046,16 @@ class ManifestTable:
         """Remove a constraint with one metadata-only commit (no
         validation needed: dropping can only widen the legal
         state)."""
-        while True:
-            mf = self._raw()
+        def build(mf: dict) -> dict:
             cons = dict(mf.get("constraints") or {})
             if name not in cons:
                 raise ValueError(
                     f"no constraint {name!r} on {self.root} "
                     f"(have: {sorted(cons)})")
             del cons[name]
-            try:
-                self._commit(dict(mf["partitions"]),
-                             base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=mf.get("schema"),
-                             constraints=cons or None)
-                return
-            except CommitConflict:
-                continue
+            return {"constraints": cons or None}
+
+        self._transact(build)
 
     def constraints_spec(self) -> dict:
         """The live constraint set, name -> spec dict."""
@@ -2024,56 +2091,62 @@ class ManifestTable:
             raise ValueError(f"bloom m={m} must be a power of two >= 64")
         if not (1 <= k <= 16):
             raise ValueError(f"bloom k={k} out of range 1..16")
-        mf = self._raw()
-        prev = mf.get("bloom")
-        if prev and (prev["m"], prev["k"]) != (m, k):
-            # RE-parameterizing is safe only because every filter is
-            # probed under the (m, k) recorded WITH it (r9 ADVICE
-            # item 1) — a legacy file whose filter predates the
-            # per-file record has no such anchor, and probing it
-            # under the new spec silently wrong-skips its live rows.
-            # Refuse until a compact() rebuilds those filters.
-            for v in mf["partitions"]:
-                for e in self._entries(mf, v):
-                    if "bloom" in e and "mk" not in e:
-                        raise SchemaMismatch(
-                            f"set_bloom(m={m}, k={k}) would change "
-                            f"the filter parameters while "
-                            f"{e['path']!r} carries a filter built "
-                            f"under the previous spec (m={prev['m']},"
-                            f" k={prev['k']}) with no per-file "
-                            f"record; probing it under the new "
-                            f"parameters silently skips live rows — "
-                            f"compact() first to rebuild filters, or "
-                            f"keep the existing m/k")
-        dtypes = {n: t for n, t in (mf.get("schema") or [])}
-        for c in cols:
-            if c not in dtypes:
-                raise SchemaMismatch(
-                    f"bloom column {c!r} not in the pinned schema")
-            if dtypes[c] not in _BLOOM_TYPES:
-                raise SchemaMismatch(
-                    f"bloom column {c!r} has type {dtypes[c]!r}; "
-                    f"supported: {sorted(_BLOOM_TYPES)} (types whose "
-                    f"cast-to-string rendering is reproducible on the "
-                    f"probe side)")
-        # the spec pins PHYSICAL names: files are written (and their
-        # filters keyed) under physical names, and scan_plan probes
-        # after its logical->physical predicate translation
-        cm = mf.get("colmap") or {}
-        cols = [cm.get(c, c) for c in cols]
-        self._commit(dict(mf["partitions"]),
-                     base_version=mf["version"],
-                     streams=mf.get("streams", {}),
-                     schema=mf.get("schema"),
-                     bloom={"cols": sorted(cols), "m": m, "k": k})
 
-    #: default for _commit's ``bloom``: carry the base snapshot's
-    #: bloom spec forward unchanged.  A sentinel (not None) so that
-    #: existing callers — and the test doubles that monkeypatch
-    #: _commit forwarding only the kwargs they know — preserve the
-    #: spec without naming it; only ``set_bloom`` passes explicitly.
-    _BLOOM_CARRY = object()
+        def build(mf: dict) -> dict:
+            prev = mf.get("bloom")
+            if prev and (prev["m"], prev["k"]) != (m, k):
+                # RE-parameterizing is safe only because every filter
+                # is probed under the (m, k) recorded WITH it (r9
+                # ADVICE item 1) — a legacy file whose filter predates
+                # the per-file record has no such anchor, and probing
+                # it under the new spec silently wrong-skips its live
+                # rows.  Refuse until a compact() rebuilds those
+                # filters.
+                for v in mf["partitions"]:
+                    for e in self._entries(mf, v):
+                        if "bloom" in e and "mk" not in e:
+                            raise SchemaMismatch(
+                                f"set_bloom(m={m}, k={k}) would change "
+                                f"the filter parameters while "
+                                f"{e['path']!r} carries a filter built "
+                                f"under the previous spec "
+                                f"(m={prev['m']}, k={prev['k']}) with "
+                                f"no per-file record; probing it under "
+                                f"the new parameters silently skips "
+                                f"live rows — compact() first to "
+                                f"rebuild filters, or keep the "
+                                f"existing m/k")
+            dtypes = {n: t for n, t in (mf.get("schema") or [])}
+            for c in cols:
+                if c not in dtypes:
+                    raise SchemaMismatch(
+                        f"bloom column {c!r} not in the pinned schema")
+                if dtypes[c] not in _BLOOM_TYPES:
+                    raise SchemaMismatch(
+                        f"bloom column {c!r} has type {dtypes[c]!r}; "
+                        f"supported: {sorted(_BLOOM_TYPES)} (types "
+                        f"whose cast-to-string rendering is "
+                        f"reproducible on the probe side)")
+            # the spec pins PHYSICAL names: files are written (and
+            # their filters keyed) under physical names, and scan_plan
+            # probes after its logical->physical predicate translation
+            cm = mf.get("colmap") or {}
+            return {"bloom": {"cols": sorted(cm.get(c, c) for c in cols),
+                              "m": m, "k": k}}
+
+        self._transact(build)
+
+    #: commit-object keys that carry from the base snapshot to the next
+    #: commit unless the committing op passes them as a keyword (None
+    #: removes one).  Table identity and metadata every op must
+    #: preserve without knowing about it: the partition transform and
+    #: its era history, the bloom spec, the column mapping and its
+    #: retired-physical ledger, constraints, ANALYZE stats, and the
+    #: adopted-hive-layout marker (correctness-bearing for reads: the
+    #: partition column of adopted files exists only as directory
+    #: names).
+    _CARRIED = ("pt", "pt_history", "bloom", "colmap", "constraints",
+                "colstats", "retired", "adopted_dirs")
 
     def _commit(self, partitions: dict[str, list | dict],
                 base_version: int,
@@ -2081,107 +2154,57 @@ class ManifestTable:
                 schema: list | None = None,
                 cdf: list | None = None,
                 cdf_kind: str = "classified",
-                bloom=_BLOOM_CARRY,
-                colmap=_BLOOM_CARRY,
-                constraints=_BLOOM_CARRY,
-                colstats=_BLOOM_CARRY,
-                retired=_BLOOM_CARRY,
                 row_preserving: bool = False,
-                adopted=_BLOOM_CARRY) -> None:
+                **meta) -> None:
         """Steps 2+3 of the protocol: write a shard file for every
-        partition given as a file-entry LIST (= changed by this
-        commit), carry every ref dict through untouched (= unchanged;
-        shards are immutable, so carrying the ref is free), then write
-        the complete commit object to a hidden temp file and publish
-        it as ``manifest-{base+1}.json`` through the table's
+        partition given as a file-entry LIST or an ``{"entries": ...}``
+        form (= changed by this commit; the form's ``dv``/``dv_rows``/
+        ``tidx``/``pid`` ride into the new ref), carry every ref dict
+        through untouched (= unchanged; shards are immutable, so
+        carrying the ref is free), then write the complete commit
+        object to a hidden temp file and publish it as
+        ``manifest-{base+1}.json`` through the table's
         :class:`CommitBackend`.  The publish is the single atomic
         commit point AND the optimistic-concurrency gate: a competing
         writer that committed from the same base already owns that
         name, so our publish raises :class:`CommitConflict` — the
         competing snapshot stays fully live, nothing of ours (shards
-        included — they become aged-out vacuum orphans) is visible."""
-        # ONE read of the base commit object feeds every carry below
-        # (bloom/colmap/colstats/retired/adopted/constraints/pt/
-        # branch/stamp all consult it): re-opening and re-parsing the
-        # same JSON per carried key was pure repeated I/O on the hot
-        # commit path.  None = no base (v1) or base vacuumed
-        # mid-flight — each carry's fallback below is unchanged.
-        _base_cell: list = []
+        included — they become aged-out vacuum orphans) is visible.
 
-        def _base() -> dict | None:
-            if not _base_cell:
-                mf_ = None
-                if base_version > 0:
-                    try:
-                        mf_ = self._raw(self._mname(base_version))
-                    except (FileNotFoundError, OSError):
-                        mf_ = None
-                _base_cell.append(mf_)
-            return _base_cell[0]
-
-        if bloom is ManifestTable._BLOOM_CARRY:
-            # base vacuumed mid-flight: spec lost (None)
-            bloom = (_base() or {}).get("bloom")
-        if colmap is ManifestTable._BLOOM_CARRY:
-            # column-mapping carries commit-to-commit exactly like the
-            # bloom spec: only rename_column ever passes it explicitly
-            colmap = (_base() or {}).get("colmap")
-        if colstats is ManifestTable._BLOOM_CARRY:
-            # analyzed column stats carry too (meta_column_stats
-            # flags them stale past their recorded version)
-            colstats = (_base() or {}).get("colstats")
-        if retired is ManifestTable._BLOOM_CARRY:
-            # RETIRED physical column names (drop_column's ledger):
-            # physical names that still hold data inside live files
-            # but are no longer addressed by any schema column.  The
-            # set carries commit-to-commit so a later add_columns can
-            # never bind a new logical column to a physical name with
-            # stale data in it (it allocates a fresh physical via the
-            # colmap instead — the Delta column-mapping drop rule).
-            retired = (_base() or {}).get("retired")
-        if adopted is ManifestTable._BLOOM_CARRY:
-            # the adopted-hive-layout marker (see :meth:`adopt`)
-            # carries commit-to-commit like the bloom spec: it is
-            # CORRECTNESS-bearing for reads (the partition column
-            # only exists as directory names in adopted files), so
-            # losing it on a routine append would NULL the column for
-            # every adopted row
-            adopted = (_base() or {}).get("adopted_dirs")
-        if constraints is ManifestTable._BLOOM_CARRY:
-            # table constraints carry commit-to-commit like the bloom
-            # spec / colmap; only add_check / add_range_check /
-            # set_not_null / drop_constraint pass them explicitly
-            constraints = (_base() or {}).get("constraints")
-        # the partition transform is table identity: set at create
-        # (ctor spec), carried verbatim on every later commit; the
-        # spec HISTORY (evolve_partition) carries beside it, and when
-        # it exists every newly-staged ref is stamped with the active
-        # era id so readers prune each ref under the spec its
-        # directories were actually written with
-        pt = self._pt_ctor
-        pt_history = None
+        The carry rule: ``streams`` and ``schema`` default (None) to
+        the base snapshot's, and so does every :attr:`_CARRIED` key
+        not passed in ``meta``.  ``cdf``/``cdf_kind`` and
+        ``row_preserving`` describe this commit only.  Ops do not call
+        this directly: :meth:`_transact` runs the retry loop (bounded
+        by ``_COMMIT_ATTEMPTS``) around it; only the v1 commits of
+        ``create``/``adopt``/``clone`` publish once from base 0."""
+        unknown = sorted(set(meta) - set(self._CARRIED))
+        if unknown:
+            raise TypeError(f"_commit: unknown commit keys {unknown}")
+        # ONE read of the base commit object feeds every carry below.
+        # v1 has no base: the ctor's partition transform is its spec
+        base: dict = {"pt": self._pt_ctor}
         if base_version > 0:
-            base_mf = _base()
-            if base_mf is None:
-                # unlike the bloom/colmap/constraint carries above
-                # (perf-only: losing them costs a rescan), the
-                # partition transform is CORRECTNESS-bearing — a
-                # commit published without `pt` while directories
-                # hold transformed values would make later writes
-                # stage identity values and scan_plan prune under the
-                # wrong spec.  Re-read through the LIVE manifest (the
-                # base may have been vacuumed mid-commit); if the
-                # table has no readable manifest at all, fail the
-                # commit rather than publish a spec-less snapshot.
-                base_mf = self._raw()
-            pt = base_mf.get("pt")
-            pt_history = base_mf.get("pt_history")
-        if getattr(self, "_pt_evolving", None):
-            # evolve_partition's own commit: it supplies the new
-            # history/active spec explicitly via this handshake
-            pt_history, pt = self._pt_evolving
-        active_pid = (len(pt_history) - 1) if pt_history else None
-        mdir = self._mdir()
+            try:
+                base = self._raw(self._mname(base_version))
+            except (FileNotFoundError, OSError):
+                # base vacuumed mid-commit: carry through the LIVE
+                # manifest instead — the carried keys include
+                # correctness-bearing ones (the partition transform,
+                # the adopted-dirs marker, the branch cut point), so
+                # dropping them would publish a snapshot that writes
+                # and prunes under the wrong layout.  A newer live head
+                # makes the publish below conflict anyway; a table with
+                # no readable manifest at all fails the commit.
+                base = self._raw()
+        carried = {k: meta[k] if k in meta else base.get(k)
+                   for k in self._CARRIED}
+        hist = carried["pt_history"]
+        # the spec HISTORY (evolve_partition): when it exists every
+        # newly-staged ref is stamped with the active era id so
+        # readers prune each ref under the spec its directories were
+        # actually written with
+        active_pid = (len(hist) - 1) if hist else None
         sdir = os.path.join(self.root, _SHARD_DIR)
         os.makedirs(sdir, exist_ok=True)
         refs: dict[str, dict] = {}
@@ -2191,12 +2214,10 @@ class ManifestTable:
                 continue
             carry: dict = {}
             if isinstance(es, dict):
-                # {"entries": [...], "dv": [...], "dv_rows": n} — a
-                # blind append to a deletion-vector'd partition: the
-                # file list changed (new shard) but the DV sidecars
-                # must ride along, or the append would silently
-                # resurrect every dv'd row (they address OLD files,
-                # which the append keeps)
+                # {"entries": [...], "dv": [...], ...} — a rebuilt ref
+                # (_rebuild_ref): the file list changed (new shard)
+                # but the DV sidecars / text index / era stamp ride
+                # along
                 carry = {k: es[k] for k in ("dv", "dv_rows", "tidx",
                                             "pid")
                          if k in es}
@@ -2219,10 +2240,11 @@ class ManifestTable:
                                   if nn_sets else [])}
             if active_pid is not None:
                 # staged under the ACTIVE spec unless the caller
-                # marked the ref otherwise (era-mixed appends pass
+                # marked the ref otherwise (era-mixed rebuilds pass
                 # pid=-1 through carry, which overwrites this)
                 refs[value]["pid"] = active_pid
             refs[value].update(carry)
+            bloom = carried["bloom"]
             if bloom and es:
                 # partition-level coarse bloom (_PBLOOM_BITS): lets a
                 # membership probe drop the partition without opening
@@ -2235,7 +2257,6 @@ class ManifestTable:
         import time as _time
 
         version = base_version + 1
-        name = self._mname(version)
         # wall-clock commit stamp (epoch seconds, ms-rounded) — the
         # timestampAsOf resolution domain; informational only, never
         # part of any correctness decision (clocks skew).  STRICTLY
@@ -2243,44 +2264,24 @@ class ManifestTable:
         # millisecond would otherwise make version_at(stamp of the
         # earlier) resolve to the LATER snapshot for every timestamp
         # consumer (SQL TIMESTAMP AS OF, the DSv2 option) — the
-        # ADVICE r14 #4 flake, fixed at the mechanism
+        # ADVICE r14 #4 flake, fixed at the mechanism.  v1: clock wins
         stamp = round(_time.time(), 3)
-        prev = (_base() or {}).get("committed_at")
+        prev = base.get("committed_at")
         if prev is not None and stamp <= prev:
             stamp = round(prev + 0.001, 3)
-        # v1, or base vacuumed (_base() None): clock wins
         body = {"version": version, "ts": self.ts, "format": _FORMAT,
-                "partitions": refs, "streams": streams or {},
-                "schema": schema or [],
+                "partitions": refs,
+                "streams": (base.get("streams", {}) if streams is None
+                            else streams),
+                "schema": ((base.get("schema") or []) if schema is None
+                           else schema),
                 "committed_at": stamp}
         if self.branch is not None:
             # carry the branch's cut point (recorded by create_branch,
             # inherited commit-to-commit): publish_branch needs it to
             # decide whether the fast-forward is still a fast-forward
-            base_for_branch = _base()
-            if base_for_branch is None:
-                # the cut point is correctness-bearing for
-                # publish_branch — fail loudly, never publish a
-                # branch commit that forgot where it was cut
-                raise FileNotFoundError(
-                    f"{self.root}: branch base manifest "
-                    f"{base_version} unreadable; cannot carry the "
-                    f"branch cut point")
-            body["branch"] = base_for_branch["branch"]
-        if pt:
-            body["pt"] = pt
-        if pt_history:
-            body["pt_history"] = pt_history
-        if bloom:
-            body["bloom"] = bloom
-        if colmap:
-            body["colmap"] = colmap
-        if constraints:
-            body["constraints"] = constraints
-        if colstats:
-            body["colstats"] = colstats
-        if retired:
-            body["retired"] = retired
+            body["branch"] = base["branch"]
+        body.update((k, v) for k, v in carried.items() if v)
         if cdf is not None:
             # this commit's row-level change-set file list, inline (a
             # single write's change files — small); readable via
@@ -2292,8 +2293,6 @@ class ManifestTable:
             # extra bytes); changes() adds the constant column.
             body["cdf"] = cdf
             body["cdf_kind"] = cdf_kind
-        if adopted:
-            body["adopted_dirs"] = adopted
         if row_preserving:
             # maintenance rewrite that provably changed no visible row
             # (compact / OPTIMIZE / compact_dvs) — Delta's
@@ -2304,16 +2303,7 @@ class ManifestTable:
             # differ from the base — the map-identity proof used for
             # ANALYZE/DDL commits cannot apply).
             body["row_preserving"] = True
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as f:
-            f.write(json.dumps(body, sort_keys=True))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            self.backend.publish(mdir, name, tmp)           # COMMIT
-        finally:
-            if os.path.exists(tmp):
-                os.remove(tmp)
+        self._publish_body(self._mname(version), body)           # COMMIT
 
     # -- data staging ------------------------------------------------
 
@@ -3350,7 +3340,7 @@ class ManifestTable:
             for e in es:
                 e.pop("cols", None)
         t._commit(parts, base_version=0, schema=sig,
-                  adopted=adopted_dirs)
+                  adopted_dirs=adopted_dirs)
         return t
 
     def adopt_files(self, cdf: bool = False,
@@ -3377,8 +3367,10 @@ class ManifestTable:
         ``fn(ts)`` per file, and an externally-written file has no
         proven alignment with any transformed directory value —
         raises rather than mis-key rows."""
-        while True:
-            mf = self._raw()
+        parts: dict = {}
+
+        def build(mf: dict) -> dict | None:
+            nonlocal parts
             if mf.get("pt") or mf.get("pt_history"):
                 raise ValueError(
                     "adopt_files needs identity partitioning — a "
@@ -3389,12 +3381,12 @@ class ManifestTable:
                               for e in self._entries(mf, v))
             mode = ("dirs" if mf.get("adopted_dirs")
                     else "flat" if ts is None else "stats")
+            # a full re-walk on every attempt: a competitor may have
+            # adopted some of the same files
             parts, _ = _harvest_lake(self.root, ts, mode=mode,
                                      known=known, spark=spark)
-            added = sum(len(es) for es in parts.values())
-            if not added:
-                return {"files_added": 0, "rows_added": 0,
-                        "partitions_touched": 0}
+            if not parts:
+                return None
             # schema safety (the add_files validation): a new file
             # carrying a column the pinned schema does not know would
             # silently drop data on every read — refuse; missing
@@ -3415,33 +3407,13 @@ class ManifestTable:
                             f"adopt_files: {e['path']} carries "
                             f"columns the pinned schema does not "
                             f"know: {extra}")
-            new_parts = dict(mf["partitions"])
-            for v, es in parts.items():
-                base = new_parts.get(v)
-                if base is None:
-                    new_parts[v] = es
-                    continue
-                form: dict = {"entries": self._entries(mf, v) + es}
-                if isinstance(base, dict):
-                    for k in ("dv", "dv_rows", "tidx", "pid"):
-                        if k in base:
-                            form[k] = base[k]
-                new_parts[v] = form
-            cdf_entries = ([e for es in parts.values() for e in es]
-                           if cdf else None)
-            try:
-                self._commit(new_parts, base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=mf.get("schema"),
-                             cdf=cdf_entries,
-                             cdf_kind="insert_files")
-            except CommitConflict:
-                continue        # full re-walk against the new head
-            return {"files_added": int(added),
-                    "rows_added": int(sum(e["rows"]
-                                          for es in parts.values()
-                                          for e in es)),
-                    "partitions_touched": len(parts)}
+            return self._append_commit(mf, parts, cdf)
+
+        self._transact(build)       # parts: the committed harvest
+        return {"files_added": sum(len(es) for es in parts.values()),
+                "rows_added": int(sum(e["rows"] for es in parts.values()
+                                      for e in es)),
+                "partitions_touched": len(parts)}
 
     def _parse_by_source(self, mf: dict, keys: list[str],
                          delete, update, condition):
@@ -3549,6 +3521,72 @@ class ManifestTable:
             out = out.withColumn(c, col.cast(dtypes[c]))
         return out
 
+    def _merge_scope(self, spark: SparkSession, mf: dict,
+                     updates: DataFrame, keys: list[str],
+                     validate_key_stability: bool,
+                     when_matched_delete, by_source) -> tuple:
+        """The front half both MERGE stagings share: split the source
+        into WHEN MATCHED DELETE rows and upserts, and find the touched
+        partition values — expanded to older-era partitions under
+        partition evolution and to by-source-affected partitions for
+        WHEN NOT MATCHED BY SOURCE.  With ``validate_key_stability``
+        it enforces the key-stability precondition (see
+        :meth:`_stage_merge`).  Returns ``(del_rows, upserts,
+        touched, src_keys)``; an empty ``touched`` touches nothing."""
+        if when_matched_delete is not None:
+            if isinstance(when_matched_delete, str):
+                when_matched_delete = F.expr(when_matched_delete)
+            marked = F.coalesce(when_matched_delete, F.lit(False))
+            del_rows = updates.where(marked)
+            upserts = updates.where(~marked)
+        else:
+            del_rows = None
+            upserts = updates
+        if self.ts is None:
+            touched = [] if updates.isEmpty() else ["__all"]
+        else:
+            touched = [str(r[0]) for r in
+                       updates.select(self._pt_col(updates, mf))
+                       .distinct().collect()]
+        # partition evolution: older-era live partitions can hold the
+        # updates' rows under different value strings — expand BEFORE
+        # anything derives reads or stability checks from the set
+        touched = self._era_touched(updates, mf, touched)
+        orig_touched = list(touched)
+        src_keys = None
+        if by_source is not None:
+            src_keys = updates.select(*keys).distinct()
+            touched = sorted(set(touched) | set(
+                self._by_source_affected_values(
+                    spark, mf, src_keys, keys, by_source,
+                    set(touched))))
+        live = mf["partitions"]
+        if touched and validate_key_stability:
+            # the stability contract is about the UPDATE's partitions
+            # (orig_touched): a stray updated key outside them is a
+            # violation even if by-source expansion happens to pull
+            # its partition into the rewrite
+            key_cols = [k for k in keys if k != self.ts]
+            outside = [os.path.join(self.root, e["path"])
+                       for v in live if v not in orig_touched
+                       for e in self._entries(mf, v)]
+            if outside and key_cols:
+                strays = (self._read_files(
+                              spark, outside, mf,
+                              partitions=[v for v in live
+                                          if v not in orig_touched])
+                          .join(updates.select(*key_cols).distinct(),
+                                key_cols, "left_semi"))
+                n = strays.count()
+                if n:
+                    raise ValueError(
+                        f"merge precondition violated: {n} row(s) "
+                        f"carry an updated key in a partition outside "
+                        f"the update's {self.ts} set "
+                        f"{sorted(orig_touched)} — a key moved "
+                        f"partitions")
+        return del_rows, upserts, touched, src_keys
+
     def _stage_merge(self, spark: SparkSession, mf: dict,
                      updates: DataFrame, keys: list[str],
                      validate_key_stability: bool = False,
@@ -3615,59 +3653,12 @@ class ManifestTable:
         partition-value set the caller derives drops from."""
         from .incremental import merge_upsert
 
-        if when_matched_delete is not None:
-            if isinstance(when_matched_delete, str):
-                when_matched_delete = F.expr(when_matched_delete)
-            marked = F.coalesce(when_matched_delete, F.lit(False))
-            del_rows = updates.where(marked)
-            upserts = updates.where(~marked)
-        else:
-            del_rows = None
-            upserts = updates
-        if self.ts is None:
-            touched = [] if updates.isEmpty() else ["__all"]
-        else:
-            touched = [str(r[0]) for r in
-                       updates.select(self._pt_col(updates, mf))
-                       .distinct().collect()]
-        # partition evolution: older-era live partitions can hold the
-        # updates' rows under different value strings — expand BEFORE
-        # anything derives reads or stability checks from the set
-        touched = self._era_touched(updates, mf, touched)
-        orig_touched = list(touched)
-        src_keys = None
-        if by_source is not None:
-            src_keys = updates.select(*keys).distinct()
-            touched = sorted(set(touched) | set(
-                self._by_source_affected_values(
-                    spark, mf, src_keys, keys, by_source,
-                    set(touched))))
+        del_rows, upserts, touched, src_keys = self._merge_scope(
+            spark, mf, updates, keys, validate_key_stability,
+            when_matched_delete, by_source)
         if not touched:
             return {}, ([] if capture_cdf else None), set()
         live = mf["partitions"]
-        if validate_key_stability:
-            # the stability contract is about the UPDATE's partitions
-            # (orig_touched): a stray updated key outside them is a
-            # violation even if by-source expansion happens to pull
-            # its partition into the rewrite
-            key_cols = [k for k in keys if k != self.ts]
-            outside = [os.path.join(self.root, e["path"])
-                       for v in live if v not in orig_touched
-                       for e in self._entries(mf, v)]
-            if outside and key_cols:
-                strays = (self._read_files(
-                              spark, outside, mf,
-                              partitions=[v for v in live
-                                          if v not in orig_touched])
-                          .join(updates.select(*key_cols).distinct(),
-                                key_cols, "left_semi"))
-                n = strays.count()
-                if n:
-                    raise ValueError(
-                        f"merge precondition violated: {n} row(s) "
-                        f"carry an updated key in a partition outside "
-                        f"the update's {self.ts} set {sorted(touched)}"
-                        f" — a key moved partitions")
         prior_files = [os.path.join(self.root, e["path"])
                        for v in touched if v in live
                        for e in self._entries(mf, v)]
@@ -3756,10 +3747,19 @@ class ManifestTable:
         no old file, so no retired physical can resurrect."""
         mf = self._raw()
         staged = self._stage(df, colmap=None)
-        self._commit(staged, base_version=mf["version"],
-                     streams=mf.get("streams", {}),
-                     schema=_schema_sig(df), colmap=None,
-                     retired=None)
+        self._transact(lambda snap: self._refresh(staged, _schema_sig(df)),
+                       snap=mf, attempts=1)
+
+    @staticmethod
+    def _refresh(staged: dict, schema: list) -> dict:
+        """The commit of a FULL REFRESH — :meth:`overwrite` and the
+        DSv2 overwrite both publish exactly this: only the staged
+        partitions, the schema re-pinned from the new frame, and the
+        column mapping and ``retired`` ledger reset (the new files are
+        written under the frame's own names, and no old file survives
+        to hold a retired physical).  Everything else carries."""
+        return {"partitions": staged, "schema": schema, "colmap": None,
+                "retired": None}
 
     def merge(self, spark: SparkSession, updates: DataFrame,
               keys: list[str],
@@ -3849,11 +3849,30 @@ class ManifestTable:
         # incremental_momentum_run persists its trailing recompute,
         # whose lineage is the whole history — so keep this generic.
         if mode == "dv":
-            return self._merge_dv(spark, mf, updates, keys,
-                                  validate_key_stability, cdf,
-                                  when_matched_delete,
-                                  _crash_before_commit,
-                                  by_source=by_source)
+            st = self._stage_merge_dv(spark, mf, updates, keys,
+                                      validate_key_stability, cdf,
+                                      when_matched_delete, by_source)
+            if st is None:
+                return {"rows_dead": 0, "rows_appended": 0}
+            adds, dvs, counts, cdf_entries = st
+            if _crash_before_commit:
+                raise CrashInjected(
+                    "writer died after staging, before commit")
+
+            def build(snap: dict) -> dict:
+                _check_unchanged(
+                    mf, snap, set(counts) | set(adds),
+                    "a concurrent writer changed a partition this "
+                    "merge addressed by row position; re-run "
+                    "merge() against the new snapshot")
+                return {"partitions": self._rebuilt_parts(
+                            snap, adds, dvs, counts),
+                        "cdf": cdf_entries}
+
+            self._transact(build, snap=mf)
+            return {"rows_dead": sum(counts.values()),
+                    "rows_appended": sum(e["rows"] for es in adds.values()
+                                         for e in es)}
         staged, cdf_entries, touched = self._stage_merge(
             spark, mf, updates, keys, validate_key_stability,
             capture_cdf=cdf, when_matched_delete=when_matched_delete,
@@ -3878,80 +3897,37 @@ class ManifestTable:
         parts = {**mf["partitions"], **staged}
         for v in dropped:
             parts.pop(v, None)
-        self._commit(parts,
-                     base_version=mf["version"],
-                     streams=mf.get("streams", {}),
-                     schema=mf.get("schema"),
-                     cdf=cdf_entries)
+        self._transact(lambda snap: {"partitions": parts,
+                                     "cdf": cdf_entries},
+                       snap=mf, attempts=1)
 
-    def _merge_dv(self, spark: SparkSession, mf: dict,
-                  updates: DataFrame, keys: list[str],
-                  validate_key_stability: bool, cdf: bool,
-                  when_matched_delete,
-                  _crash_before_commit: bool,
-                  set_stream: tuple | None = None,
-                  by_source=None) -> dict:
-        """:meth:`merge`'s low-shuffle body: dead-mark every matched
-        live row (DV sidecars), append the upsert rows, one commit.
-        Visible semantics must equal rewrite-mode merge exactly — the
-        model test drives both through random op sequences.
+    def _stage_merge_dv(self, spark: SparkSession, mf: dict,
+                        updates: DataFrame, keys: list[str],
+                        validate_key_stability: bool, cdf: bool,
+                        when_matched_delete,
+                        by_source=None) -> tuple | None:
+        """:meth:`merge`'s low-shuffle staging against ``mf``: dead-mark
+        every matched live row (DV sidecars) and stage the upsert rows
+        as new files.  Returns ``(adds, dvs, dv_rows, cdf_entries)`` —
+        staged file entries, DV sidecars and dead-row counts per
+        partition value — for the caller to commit through
+        :meth:`_rebuilt_parts`, or None when the update touches no
+        partition.  Visible semantics must equal rewrite-mode merge
+        exactly — the model test drives both through random op
+        sequences.
 
         ``by_source``: NOT-MATCHED-BY-SOURCE rows dead-mark like any
         other removal (delete form) or dead-mark + re-append their
         close-out image (update form) — write cost O(affected rows),
         zero data files rewritten: the scale path for a full-snapshot
         sync whose drift is small against a huge target."""
-        if when_matched_delete is not None:
-            if isinstance(when_matched_delete, str):
-                when_matched_delete = F.expr(when_matched_delete)
-            marked = F.coalesce(when_matched_delete, F.lit(False))
-            del_rows = updates.where(marked)
-            upserts = updates.where(~marked)
-        else:
-            del_rows = None
-            upserts = updates
-        if self.ts is None:
-            touched = [] if updates.isEmpty() else ["__all"]
-        else:
-            touched = [str(r[0]) for r in
-                       updates.select(self._pt_col(updates, mf))
-                       .distinct().collect()]
-        # partition evolution: older-era live partitions can hold the
-        # updates' rows under different value strings — expand BEFORE
-        # anything derives reads or stability checks from the set
-        touched = self._era_touched(updates, mf, touched)
-        orig_touched = list(touched)
-        src_keys = None
-        if by_source is not None:
-            src_keys = updates.select(*keys).distinct()
-            touched = sorted(set(touched) | set(
-                self._by_source_affected_values(
-                    spark, mf, src_keys, keys, by_source,
-                    set(touched))))
-        if not touched and set_stream is None:
-            return {"rows_dead": 0, "rows_appended": 0}
+        del_rows, upserts, touched, src_keys = self._merge_scope(
+            spark, mf, updates, keys, validate_key_stability,
+            when_matched_delete, by_source)
+        if not touched:
+            return None
         live = mf["partitions"]
         live_touched = [v for v in touched if v in live]
-        if validate_key_stability:
-            key_cols = [k for k in keys if k != self.ts]
-            outside = [os.path.join(self.root, e["path"])
-                       for v in live if v not in orig_touched
-                       for e in self._entries(mf, v)]
-            if outside and key_cols:
-                strays = (self._read_files(
-                              spark, outside, mf,
-                              partitions=[v for v in live
-                                          if v not in orig_touched])
-                          .join(updates.select(*key_cols).distinct(),
-                                key_cols, "left_semi"))
-                n = strays.count()
-                if n:
-                    raise ValueError(
-                        f"merge precondition violated: {n} row(s) "
-                        f"carry an updated key in a partition outside "
-                        f"the update's {self.ts} set "
-                        f"{sorted(orig_touched)}"
-                        f" — a key moved partitions")
         prior_files = [os.path.join(self.root, e["path"])
                        for v in live_touched
                        for e in self._entries(mf, v)]
@@ -4028,76 +4004,13 @@ class ManifestTable:
             cdf_frame = upserts.withColumn("_change_type",
                                            F.lit("insert"))
         data_staged = self._stage(append_df)
-        n_appended = sum(e["rows"] for es in data_staged.values()
-                         for e in es)
         cdf_entries = None
         if cdf:
             cdf_entries = [e for es in
                            self._stage(cdf_frame, bloom=None,
                                        enforce=False).values()
                            for e in es]
-        if _crash_before_commit:
-            raise CrashInjected(
-                "writer died after staging, before commit")
-        all_touched = sorted(set(counts) | set(data_staged))
-        snap = mf
-        while True:
-            new_parts = dict(snap["partitions"])
-            for v in all_touched:
-                adds = data_staged.get(v, [])
-                dv_add = dv_staged.get(v, [])
-                base = new_parts.get(v)
-                if base is None:
-                    new_parts[v] = adds
-                    continue
-                prior = self._entries(snap, v)
-                dv_all = list(base.get("dv", [])) + dv_add
-                dv_rows = base.get("dv_rows", 0) + counts.get(v, 0)
-                if adds:
-                    form: dict = {"entries": prior + adds}
-                    if dv_all:
-                        form["dv"] = dv_all
-                        form["dv_rows"] = dv_rows
-                    mp = self._mixed_pid_for(
-                        base, snap.get("pt_history"))
-                    if mp is not None:
-                        form["pid"] = mp
-                    new_parts[v] = form
-                elif dv_rows >= base["rows"]:
-                    new_parts.pop(v)     # delete clause emptied it
-                else:
-                    ref = dict(base)
-                    ref["dv"], ref["dv_rows"] = dv_all, dv_rows
-                    new_parts[v] = ref
-            streams = dict(snap.get("streams", {}))
-            if set_stream is not None:
-                sid, bid = set_stream
-                if streams.get(sid, -1) >= bid:
-                    raise CommitConflict(
-                        f"batch {bid} of stream {sid!r} was committed "
-                        f"by a competitor mid-merge")  # replay upstream
-                streams[sid] = bid
-            try:
-                self._commit(new_parts, base_version=snap["version"],
-                             streams=streams,
-                             schema=snap.get("schema"),
-                             cdf=cdf_entries)
-                break
-            except CommitConflict:
-                newer = self._raw()
-                ours = {v: _ref_fp(live[v]) for v in all_touched
-                        if v in live}
-                theirs = {v: _ref_fp(r) for v, r in
-                          newer["partitions"].items()
-                          if v in ours and isinstance(r, dict)}
-                if ours != theirs:
-                    raise CommitConflict(
-                        "a concurrent writer changed a partition this "
-                        "merge addressed by row position; re-run "
-                        "merge() against the new snapshot") from None
-                snap = newer                     # disjoint: rebase
-        return {"rows_dead": sum(counts.values()),
-                "rows_appended": n_appended}
+        return data_staged, dv_staged, counts, cdf_entries
 
     def changes(self, spark: SparkSession, version: int) -> DataFrame:
         """ROW-LEVEL change feed for one commit (Delta's ``table_changes``
@@ -4206,8 +4119,8 @@ class ManifestTable:
             schema = list(self._raw(self._mname(end)).get("schema")
                           or []) + [["_change_type", "string"],
                                     ["_commit_version", "bigint"]]
-            return spark.createDataFrame(
-                [], ", ".join(f"`{n}` {t}" for n, t in schema))
+            return local_frame(
+                spark, [], ", ".join(f"`{n}` {t}" for n, t in schema))
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f, allowMissingColumns=True)
@@ -4260,51 +4173,45 @@ class ManifestTable:
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"merge_batch mode {mode!r}: expected "
                              f"'rewrite' or 'dv'")
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict | None:
             streams = dict(mf.get("streams", {}))
             if streams.get(stream_id, -1) >= batch_id:
-                return False                      # replay: already in
+                return None                       # replay: already in
+            streams[stream_id] = batch_id
             self._check_schema(updates, mf)
             by_source = self._parse_by_source(
                 mf, keys, not_matched_by_source_delete,
                 not_matched_by_source_update,
                 not_matched_by_source_condition)
             if mode == "dv":
-                try:
-                    self._merge_dv(spark, mf, updates, keys, False,
-                                   cdf, when_matched_delete,
-                                   _crash_before_commit,
-                                   set_stream=(stream_id, batch_id),
-                                   by_source=by_source)
-                    return True
-                except CommitConflict:
-                    continue      # re-check ledger, re-stage, redo
-            staged, cdf_entries, touched = self._stage_merge(
-                spark, mf, updates, keys, capture_cdf=cdf,
-                when_matched_delete=when_matched_delete,
-                by_source=by_source)
-            dropped: set[str] = set()
-            if when_matched_delete is not None or (
-                    by_source is not None
-                    and by_source[0] == "delete"):
-                dropped = {v for v in touched - set(staged)
-                           if v in mf["partitions"]}
-            streams[stream_id] = batch_id
+                # an empty batch still commits its ledger entry
+                st = self._stage_merge_dv(spark, mf, updates, keys,
+                                          False, cdf,
+                                          when_matched_delete, by_source)
+                adds, dvs, counts, cdf_entries = (
+                    st or ({}, {}, {}, [] if cdf else None))
+                parts = self._rebuilt_parts(mf, adds, dvs, counts)
+            else:
+                staged, cdf_entries, touched = self._stage_merge(
+                    spark, mf, updates, keys, capture_cdf=cdf,
+                    when_matched_delete=when_matched_delete,
+                    by_source=by_source)
+                parts = {**mf["partitions"], **staged}
+                if when_matched_delete is not None or (
+                        by_source is not None
+                        and by_source[0] == "delete"):
+                    for v in touched - set(staged):
+                        parts.pop(v, None)
             if _crash_before_commit:
                 raise CrashInjected(
                     "writer died after staging, before commit")
-            parts = {**mf["partitions"], **staged}
-            for v in dropped:
-                parts.pop(v, None)
-            try:
-                self._commit(parts,
-                             base_version=mf["version"],
-                             streams=streams, schema=mf.get("schema"),
-                             cdf=cdf_entries)
-                return True
-            except CommitConflict:
-                continue        # merged against a stale snapshot: redo
+            return {"partitions": parts, "streams": streams,
+                    "cdf": cdf_entries}
+
+        # every attempt re-stages against the snapshot it commits onto:
+        # a competitor may have rewritten the partitions this merge read
+        return self._transact(build) is not None
 
     def append(self, df: DataFrame, cdf: bool = False) -> None:
         """Blind append (the streaming-ingest write shape): stage new
@@ -4325,68 +4232,28 @@ class ManifestTable:
         (``cdf_kind='insert_files'``) and :meth:`changes` adds the
         constant classification."""
         staged: dict[str, list] | None = None
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict:
+            nonlocal staged
             self._check_schema(df, mf)
             if staged is None:                    # stage once per call
                 staged = self._stage(df)
-            hist = mf.get("pt_history")
-            active = len(hist) - 1 if hist else None
-            live: dict = dict(mf["partitions"])
-            for value, entries in staged.items():
-                prior_ref = live.get(value)
-                prior = (self._entries(mf, value)
-                         if value in live else [])
-                merged = prior + entries
-                # partition evolution: an append lands under the
-                # ACTIVE spec; when the same value string exists from
-                # an OLDER era whose spec differs (e.g. bucket(4) '3'
-                # vs bucket(8) '3'), the merged ref holds rows from
-                # two transforms — mark it pid=-1 so scan_plan never
-                # partition-prunes it (stats still skip; conservative,
-                # never wrong)
-                mix_pid = None
-                if hist and isinstance(prior_ref, dict):
-                    old_pid = prior_ref.get("pid", active)
-                    if old_pid != active:
-                        mix_pid = (active if 0 <= old_pid < len(hist)
-                                   and hist[old_pid] == hist[active]
-                                   else -1)
-                # an append to a deletion-vector'd partition keeps the
-                # old files, so the DVs addressing them must ride
-                # along into the rebuilt ref (the {"entries": ...}
-                # _commit form) — dropping them would resurrect rows
-                if (isinstance(prior_ref, dict)
-                        and (prior_ref.get("dv")
-                             or prior_ref.get("tidx"))) \
-                        or mix_pid is not None:
-                    keep: dict = {"entries": merged}
-                    if isinstance(prior_ref, dict) \
-                            and prior_ref.get("dv"):
-                        keep["dv"] = prior_ref["dv"]
-                        keep["dv_rows"] = prior_ref.get("dv_rows", 0)
-                    if isinstance(prior_ref, dict) \
-                            and prior_ref.get("tidx"):
-                        # the text index still covers the OLD files;
-                        # the appended ones are simply unindexed
-                        # (search keeps them conservatively) until the
-                        # next build_text_index
-                        keep["tidx"] = prior_ref["tidx"]
-                    if mix_pid is not None:
-                        keep["pid"] = mix_pid
-                    live[value] = keep
-                else:
-                    live[value] = merged
-            try:
-                self._commit(live, base_version=mf["version"],
-                             streams=mf.get("streams", {}),
-                             schema=mf.get("schema"),
-                             cdf=([e for es in staged.values()
-                                   for e in es] if cdf else None),
-                             cdf_kind="insert_files")
-                return
-            except CommitConflict:
-                continue        # someone else committed; re-evaluate
+            return self._append_commit(mf, staged, cdf)
+
+        self._transact(build)
+
+    def _append_commit(self, mf: dict, staged: dict, cdf: bool) -> dict:
+        """The commit of a blind append of ``staged`` onto ``mf`` —
+        :meth:`append`, :meth:`append_batch` and the DSv2 append all
+        publish this: each touched ref rebuilt by
+        :meth:`_rebuild_ref` (an append lands under the ACTIVE spec, so
+        a value string shared with an older era's ref makes it
+        era-mixed, and the base's DVs/text index ride along), and
+        ``cdf`` feeding the staged files themselves."""
+        return {"partitions": self._rebuilt_parts(mf, staged),
+                "cdf": ([e for es in staged.values() for e in es]
+                        if cdf else None),
+                "cdf_kind": "insert_files"}
 
     def append_batch(self, df: DataFrame, stream_id: str,
                      batch_id: int, cdf: bool = False) -> bool:
@@ -4408,38 +4275,20 @@ class ManifestTable:
         the replay check re-runs each attempt, so a competing commit
         of THIS batch is also caught."""
         staged: dict[str, list] | None = None
-        while True:
-            mf = self._raw()
+
+        def build(mf: dict) -> dict | None:
+            nonlocal staged
             streams = dict(mf.get("streams", {}))
             if streams.get(stream_id, -1) >= batch_id:
-                return False                      # replay: already in
+                return None                       # replay: already in
             if staged is None:                    # stage once per call
                 self._check_schema(df, mf)
                 staged = self._stage(df)
-            live: dict = dict(mf["partitions"])
-            for value, entries in staged.items():
-                prior_ref = live.get(value)
-                prior = (self._entries(mf, value)
-                         if value in live else [])
-                merged = prior + entries
-                if (isinstance(prior_ref, dict)
-                        and prior_ref.get("dv")):    # see append()
-                    live[value] = {
-                        "entries": merged,
-                        "dv": prior_ref["dv"],
-                        "dv_rows": prior_ref.get("dv_rows", 0)}
-                else:
-                    live[value] = merged
             streams[stream_id] = batch_id
-            try:
-                self._commit(live, base_version=mf["version"],
-                             streams=streams, schema=mf.get("schema"),
-                             cdf=([e for es in staged.values()
-                                   for e in es] if cdf else None),
-                             cdf_kind="insert_files")
-                return True
-            except CommitConflict:
-                continue        # someone else committed; re-evaluate
+            return {**self._append_commit(mf, staged, cdf),
+                    "streams": streams}
+
+        return self._transact(build) is not None
 
     def added_files(self, since_version: int,
                     manifest_name: str | None = None) -> list[str]:
@@ -4508,23 +4357,21 @@ class ManifestTable:
         its whole file set intact; a vacuumed-away version fails here
         with FileNotFoundError instead of resurrecting dangling
         refs."""
-        mf = self._raw()
         old = self._raw(self._mname(version))
-        self._commit(dict(old["partitions"]),
-                     base_version=mf["version"],
-                     streams=old.get("streams", {}),
-                     schema=old.get("schema"),
-                     # the restored snapshot's OWN column mapping
-                     # (schema and colmap travel together — the
-                     # current mapping may alias names the restored
-                     # schema never had)
-                     colmap=old.get("colmap"),
-                     # retired physicals UNION: the restore brings
-                     # the old version's files back live, so both
-                     # eras' retired names must stay unreusable
-                     retired=sorted(set(old.get("retired") or [])
-                                    | set(mf.get("retired") or []))
-                     or None)
+        self._transact(lambda mf: {
+            "partitions": old["partitions"],
+            "streams": old.get("streams", {}),
+            "schema": old.get("schema"),
+            # the restored snapshot's OWN column mapping (schema and
+            # colmap travel together — the current mapping may alias
+            # names the restored schema never had)
+            "colmap": old.get("colmap"),
+            # retired physicals UNION: the restore brings the old
+            # version's files back live, so both eras' retired names
+            # must stay unreusable
+            "retired": sorted(set(old.get("retired") or [])
+                              | set(mf.get("retired") or [])) or None},
+            attempts=1)
 
     def read_pruned_by_keys(self, spark: SparkSession,
                             keys: DataFrame, on: str,
@@ -4571,8 +4418,8 @@ class ManifestTable:
         mf = self._raw()
         if not plan["files"]:
             schema = mf.get("schema") or []
-            df = spark.createDataFrame(
-                [], ", ".join(f"`{n}` {t}" for n, t in schema))
+            df = local_frame(
+                spark, [], ", ".join(f"`{n}` {t}" for n, t in schema))
         else:
             df = self._read_files(spark, plan["files"], mf,
                                   partitions=plan["partitions"])
@@ -4658,18 +4505,14 @@ class ManifestTable:
                 per_file[rel][str(r["_w"])] = r["_b"]
         sdir = os.path.join(self.root, _SHARD_DIR)
         os.makedirs(sdir, exist_ok=True)
-        stats = {"files": len(rel_all), "indexed": len(per_file)}
-        while True:
-            cur = self._raw()
+
+        def build(cur: dict) -> dict:      # metadata-only: rebases
             parts: dict = {}
             for value, ref in cur["partitions"].items():
                 es = self._entries(cur, value)
                 fmap = {e["path"]: per_file[e["path"]]
                         for e in es if e["path"] in per_file}
-                ref2 = dict(ref) if isinstance(ref, dict) else None
-                if ref2 is None:          # in-flight list form: skip
-                    parts[value] = ref
-                    continue
+                ref2 = dict(ref)
                 if not fmap:
                     ref2.pop("tidx", None)
                     parts[value] = ref2
@@ -4682,17 +4525,13 @@ class ManifestTable:
                     f.write(json.dumps(fmap, sort_keys=True))
                     f.flush()
                     os.fsync(f.fileno())
-                tidx = dict(ref2.get("tidx") or {})
-                tidx[col] = {"shard": shard_rel, "m": m, "k": k}
-                ref2["tidx"] = tidx
+                ref2["tidx"] = {**(ref2.get("tidx") or {}),
+                                col: {"shard": shard_rel, "m": m, "k": k}}
                 parts[value] = ref2
-            try:
-                self._commit(parts, base_version=cur["version"],
-                             streams=cur.get("streams", {}),
-                             schema=cur.get("schema"))
-                return stats
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+            return {"partitions": parts}
+
+        self._transact(build)
+        return {"files": len(rel_all), "indexed": len(per_file)}
 
     def search_text(self, spark: SparkSession, col: str, terms,
                     manifest_name: str | None = None):
@@ -4743,8 +4582,8 @@ class ManifestTable:
                 raise FileNotFoundError(
                     f"{self.root}: nothing to read and no pinned "
                     f"schema to type an empty result")
-            df = spark.createDataFrame(
-                [], ", ".join(f"`{n}` {t}" for n, t in schema))
+            df = local_frame(
+                spark, [], ", ".join(f"`{n}` {t}" for n, t in schema))
         else:
             df = self._read_files(spark, kept_files, mf,
                                   partitions=kept_parts)
@@ -4857,28 +4696,25 @@ class ManifestTable:
             for c, fut in f_ddq.items():
                 stats[c]["ddq"] = {"scale": float(quantile_scale),
                                    "buckets": fut.result()}
-        while True:
-            cur = self._raw()
-            # the analyze commit itself changes no data, so stats
-            # computed from the snapshot we read are valid AT the
-            # version this commit creates — unless the table moved
-            # under the scan, in which case they are recorded against
-            # the version actually read and staleness shows honestly
-            payload = {"version": (cur["version"] + 1
-                                   if cur["version"] == mf["version"]
-                                   else mf["version"]),
-                       "approx": bool(approx),
-                       "columns": {**(cur.get("colstats") or {}
-                                      ).get("columns", {}), **stats}}
-            try:
-                self._commit(dict(cur["partitions"]),
-                             base_version=cur["version"],
-                             streams=cur.get("streams", {}),
-                             schema=cur.get("schema"),
-                             colstats=payload)
-                return payload
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+        return self._record_colstats(mf, stats, approx)
+
+    def _record_colstats(self, mf: dict, stats: dict,
+                         approx: bool) -> dict:
+        """Commit ``stats`` (per-column ANALYZE payloads computed from
+        snapshot ``mf``) over the live stats of the other columns —
+        metadata-only, so a conflict rebases.  The analyze commit
+        itself changes no data, so stats computed from ``mf`` are
+        valid AT the version this commit creates — unless the table
+        moved under the scan, in which case they are recorded against
+        the version actually read and staleness shows honestly.
+        Returns the recorded payload."""
+        return self._transact(lambda cur: {"colstats": {
+            "version": (cur["version"] + 1
+                        if cur["version"] == mf["version"]
+                        else mf["version"]),
+            "approx": bool(approx),
+            "columns": {**(cur.get("colstats") or {}).get("columns", {}),
+                        **stats}}})["colstats"]
 
     def _column_stats(self, df: DataFrame, cols: list[str],
                       approx: bool) -> dict:
@@ -5045,23 +4881,8 @@ class ManifestTable:
                         "buckets": sketches.ddq_merge_py(
                             p_["ddq"]["buckets"],
                             sketches.ddq_buckets(frame, c, s))}
-        while True:
-            cur = self._raw()
-            payload = {"version": (cur["version"] + 1
-                                   if cur["version"] == mf["version"]
-                                   else mf["version"]),
-                       "approx": True,
-                       "columns": {**(cur.get("colstats") or {}
-                                      ).get("columns", {}), **merged}}
-            try:
-                self._commit(dict(cur["partitions"]),
-                             base_version=cur["version"],
-                             streams=cur.get("streams", {}),
-                             schema=cur.get("schema"),
-                             colstats=payload)
-                return {**payload, "scanned_files": len(paths)}
-            except CommitConflict:
-                continue        # metadata-only: rebase and reapply
+        return {**self._record_colstats(mf, merged, True),
+                "scanned_files": len(paths)}
 
     def estimate_frequency(self, col: str, value) -> int:
         """Estimated row count of ``value`` in ``col`` from the
@@ -5410,11 +5231,6 @@ class ManifestTable:
         mf = self._raw(name)
         dest = ManifestTable(dest_root, mf.get("ts"), backend=backend,
                              partition=mf.get("pt"))
-        if mf.get("pt_history"):
-            # the spec history (and each ref's era stamp below) must
-            # survive the clone or source-column predicates would
-            # prune the borrowed directories under the wrong transform
-            dest._pt_evolving = (mf["pt_history"], mf.get("pt"))
         if os.path.exists(os.path.join(dest_root, _MANIFEST_DIR)):
             raise RuntimeError(
                 f"clone destination {dest_root!r} already holds a "
@@ -5516,17 +5332,19 @@ class ManifestTable:
             parts[value] = {"entries": entries, "dv": dv_out,
                             "dv_rows": ref.get("dv_rows", 0),
                             **extra}
-        try:
-            dest._commit(parts, base_version=0, streams={},
-                         schema=mf.get("schema"),
-                         bloom=mf.get("bloom"),
-                         colmap=mf.get("colmap"),
-                         constraints=mf.get("constraints"),
-                         # the clone borrows/copies the source's
-                         # files, so its retired physicals ride along
-                         retired=mf.get("retired"))
-        finally:
-            dest._pt_evolving = None
+        dest._commit(parts, base_version=0, streams={},
+                     schema=mf.get("schema"),
+                     bloom=mf.get("bloom"),
+                     colmap=mf.get("colmap"),
+                     constraints=mf.get("constraints"),
+                     # the clone borrows/copies the source's files, so
+                     # its retired physicals ride along
+                     retired=mf.get("retired"),
+                     # the spec history (and each ref's era stamp
+                     # above) must survive the clone or source-column
+                     # predicates would prune the borrowed directories
+                     # under the wrong transform
+                     pt_history=mf.get("pt_history"))
         return dest
 
     # -- write-audit-publish branches --------------------------------
@@ -5836,7 +5654,6 @@ class ManifestTable:
         if not counts:
             return {"rows_deleted": 0, "partitions_rewritten": 0,
                     "partitions_dropped": 0}
-        live = mf["partitions"]
         rewrite_files = [os.path.join(self.root, e["path"])
                          for v in counts for e in self._entries(mf, v)]
         kept = self._read_files(spark, rewrite_files, mf,
@@ -5862,29 +5679,17 @@ class ManifestTable:
         # — rebase over its commit; one that did makes the staged
         # rewrite stale (it could resurrect deleted rows or drop the
         # competitor's) — surface CommitConflict for a re-run.
-        snap = mf
-        while True:
-            new_parts = dict(snap["partitions"])
-            for v in counts:
-                new_parts.pop(v, None)
-            new_parts.update(staged)
-            try:
-                self._commit(new_parts, base_version=snap["version"],
-                             streams=snap.get("streams", {}),
-                             schema=snap.get("schema"),
-                             cdf=cdf_entries)
-                break
-            except CommitConflict:
-                newer = self._raw()
-                ours = {v: _ref_fp(live[v]) for v in counts}
-                theirs = {v: _ref_fp(r) for v, r in
-                          newer["partitions"].items() if v in ours}
-                if ours != theirs:
-                    raise CommitConflict(
-                        "a concurrent writer rewrote a partition this "
-                        "delete read; re-run delete_where() against "
-                        "the new snapshot") from None
-                snap = newer                     # disjoint: rebase
+        def build(snap: dict) -> dict:
+            _check_unchanged(mf, snap, counts,
+                             "a concurrent writer rewrote a partition "
+                             "this delete read; re-run delete_where() "
+                             "against the new snapshot")
+            parts = {v: r for v, r in snap["partitions"].items()
+                     if v not in counts}
+            return {"partitions": {**parts, **staged},
+                    "cdf": cdf_entries}
+
+        self._transact(build, snap=mf)
         return {"rows_deleted": sum(counts.values()),
                 "partitions_rewritten": len(staged),
                 "partitions_dropped": len(set(counts) - set(staged))}
@@ -5929,47 +5734,26 @@ class ManifestTable:
         if _crash_before_commit:
             raise CrashInjected(
                 "writer died after staging, before commit")
-        live = mf["partitions"]
-        snap = mf
-        while True:
-            new_parts = dict(snap["partitions"])
-            dropped = 0
-            for v in counts:
-                ref = dict(new_parts[v])
-                ref["dv"] = list(ref.get("dv", [])) + dv_staged[v]
-                ref["dv_rows"] = ref.get("dv_rows", 0) + counts[v]
-                if ref["dv_rows"] >= ref["rows"]:
-                    new_parts.pop(v)         # every row dead: drop
-                    dropped += 1
-                else:
-                    new_parts[v] = ref
-            try:
-                self._commit(new_parts, base_version=snap["version"],
-                             streams=snap.get("streams", {}),
-                             schema=snap.get("schema"),
-                             cdf=cdf_entries)
-                break
-            except CommitConflict:
-                # positional addresses are only valid against the
-                # exact file set they were computed over: any change
-                # to a touched partition (rewrite OR append — both
-                # replace its shard) invalidates them; untouched-
-                # partition commits rebase cleanly
-                newer = self._raw()
-                ours = {v: _ref_fp(live[v]) for v in counts}
-                theirs = {v: _ref_fp(r) for v, r in
-                          newer["partitions"].items()
-                          if v in ours and isinstance(r, dict)}
-                if ours != theirs:
-                    raise CommitConflict(
-                        "a concurrent writer changed a partition this "
-                        "delete addressed by row position; re-run "
-                        "delete_where() against the new snapshot"
-                    ) from None
-                snap = newer                     # disjoint: rebase
+
+        # positional addresses are only valid against the exact file
+        # set they were computed over: any change to a touched
+        # partition (rewrite OR append — both replace its shard)
+        # invalidates them; untouched-partition commits rebase cleanly
+        def build(snap: dict) -> dict:
+            _check_unchanged(mf, snap, counts,
+                             "a concurrent writer changed a partition "
+                             "this delete addressed by row position; "
+                             "re-run delete_where() against the new "
+                             "snapshot")
+            return {"partitions": self._rebuilt_parts(
+                        snap, {}, dv_staged, counts),
+                    "cdf": cdf_entries}
+
+        parts = self._transact(build, snap=mf)["partitions"]
         return {"rows_deleted": sum(counts.values()),
                 "partitions_rewritten": 0,
-                "partitions_dropped": dropped}
+                # every row dead: the partition dropped
+                "partitions_dropped": len(set(counts) - set(parts))}
 
     def update_where(self, spark: SparkSession,
                      set_exprs: dict, condition,
@@ -6055,57 +5839,21 @@ class ManifestTable:
         if _crash_before_commit:
             raise CrashInjected(
                 "writer died after staging, before commit")
-        live = mf["partitions"]
         touched = sorted(set(counts) | set(data_staged))
-        snap = mf
-        while True:
-            new_parts = dict(snap["partitions"])
-            for v in touched:
-                adds = data_staged.get(v, [])
-                dv_add = dv_staged.get(v, [])
-                base = new_parts.get(v)
-                if base is None:            # rows MOVED here: new part
-                    new_parts[v] = adds
-                    continue
-                prior = self._entries(snap, v)
-                dv_all = list(base.get("dv", [])) + dv_add
-                dv_rows = base.get("dv_rows", 0) + counts.get(v, 0)
-                if adds:
-                    form: dict = {"entries": prior + adds}
-                    if dv_all:
-                        form["dv"] = dv_all
-                        form["dv_rows"] = dv_rows
-                    mp = self._mixed_pid_for(
-                        base, snap.get("pt_history"))
-                    if mp is not None:
-                        form["pid"] = mp
-                    new_parts[v] = form
-                elif dv_rows >= base["rows"]:
-                    new_parts.pop(v)        # all rows moved away
-                else:
-                    ref = dict(base)
-                    ref["dv"], ref["dv_rows"] = dv_all, dv_rows
-                    new_parts[v] = ref
-            try:
-                self._commit(new_parts, base_version=snap["version"],
-                             streams=snap.get("streams", {}),
-                             schema=snap.get("schema"),
-                             cdf=cdf_entries)
-                break
-            except CommitConflict:
-                newer = self._raw()
-                ours = {v: _ref_fp(live[v]) for v in touched
-                        if v in live}
-                theirs = {v: _ref_fp(r) for v, r in
-                          newer["partitions"].items()
-                          if v in ours and isinstance(r, dict)}
-                if ours != theirs:
-                    raise CommitConflict(
-                        "a concurrent writer changed a partition this "
-                        "update addressed by row position; re-run "
-                        "update_where() against the new snapshot"
-                    ) from None
-                snap = newer                     # disjoint: rebase
+
+        def build(snap: dict) -> dict:
+            _check_unchanged(mf, snap, touched,
+                             "a concurrent writer changed a partition "
+                             "this update addressed by row position; "
+                             "re-run update_where() against the new "
+                             "snapshot")
+            # updated images may MOVE rows into new partitions, and a
+            # partition whose rows all moved away drops
+            return {"partitions": self._rebuilt_parts(
+                        snap, data_staged, dv_staged, counts),
+                    "cdf": cdf_entries}
+
+        self._transact(build, snap=mf)
         return {"rows_updated": sum(counts.values()),
                 "partitions_rewritten": 0,
                 "partitions_touched": len(touched)}
@@ -6159,28 +5907,18 @@ class ManifestTable:
                            full)
             staged[v] = {"path": rel, "rows": len(pdf),
                          "bytes": os.path.getsize(full)}
-        snap = mf
-        while True:
-            new_parts = dict(snap["partitions"])
+
+        def build(snap: dict) -> dict:
+            _check_unchanged(mf, snap, staged,
+                             "a concurrent writer changed a partition "
+                             "whose deletion vectors this compaction "
+                             "consolidated; re-run compact_dvs()")
+            parts = dict(snap["partitions"])
             for v, e in staged.items():
-                base = new_parts.get(v)
-                if base is None or _ref_fp(base) != _ref_fp(todo[v]):
-                    raise CommitConflict(
-                        "a concurrent writer changed a partition "
-                        "whose deletion vectors this compaction "
-                        "consolidated; re-run compact_dvs()")
-                ref = dict(base)
-                ref["dv"] = [e]
-                ref["dv_rows"] = e["rows"]
-                new_parts[v] = ref
-            try:
-                self._commit(new_parts, base_version=snap["version"],
-                             streams=snap.get("streams", {}),
-                             schema=snap.get("schema"),
-                             row_preserving=True)
-                break
-            except CommitConflict:
-                snap = self._raw()   # fingerprints re-checked above
+                parts[v] = {**parts[v], "dv": [e], "dv_rows": e["rows"]}
+            return {"partitions": parts, "row_preserving": True}
+
+        self._transact(build, snap=mf)
         return {"partitions": len(staged), "sidecars_before": before,
                 "sidecars_after": len(staged)}
 
@@ -6346,9 +6084,11 @@ class ManifestTable:
         # partitions (another merge/delete landed there) makes our
         # staged files stale — surface CommitConflict; the caller
         # re-runs compaction against the new snapshot.
-        snap = mf
-        files_after = 0
-        while True:
+        def build(snap: dict) -> dict:
+            _check_unchanged(mf, snap, todo_vals,
+                             "a concurrent writer rewrote a partition "
+                             "this compaction read; re-run compact() "
+                             "against the new snapshot")
             # every compacted partition drops its OLD key before the
             # staged rewrites land: re-staging runs under the ACTIVE
             # spec, so under partition evolution a compaction MIGRATES
@@ -6363,55 +6103,21 @@ class ManifestTable:
             # into its month value while that month already holds rows
             # appended under the new spec.  Replacing would clobber
             # those rows; instead the staged entries MERGE into the
-            # colliding ref exactly as an append does ({"entries":
-            # prior + adds} with the base's DV sidecars carried — they
-            # address the prior files, which the merge keeps first and
-            # in order).  Because this merged map is rebuilt from
-            # `snap` on every rebase, a concurrent append landing on a
-            # colliding key is re-read here rather than needing its
-            # own conflict fingerprint (the fingerprint below guards
-            # only todo_vals, whose staged rewrites CAN go stale).
-            base_parts = {k: v for k, v in snap["partitions"].items()
-                          if k not in set(todo_vals)}
-            new_parts = dict(base_parts)
-            files_after = 0
-            for k, es in staged.items():
-                base = new_parts.get(k)
-                if base is None:
-                    new_parts[k] = es
-                    files_after += len(es)
-                    continue
-                prior = self._entries(snap, k)
-                form: dict = {"entries": prior + list(es)}
-                if isinstance(base, dict):
-                    if base.get("dv"):
-                        form["dv"] = list(base["dv"])
-                        form["dv_rows"] = base.get("dv_rows", 0)
-                    mp = self._mixed_pid_for(
-                        base, snap.get("pt_history"))
-                    if mp is not None:
-                        form["pid"] = mp
-                new_parts[k] = form
-                files_after += len(prior) + len(es)
-            try:
-                self._commit(new_parts,
-                             base_version=snap["version"],
-                             streams=snap.get("streams", {}),
-                             schema=snap.get("schema"),
-                             row_preserving=True)
-                break
-            except CommitConflict:
-                newer = self._raw()
-                ours = {v: _ref_fp(mf["partitions"][v])
-                        for v in todo_vals}
-                theirs = {v: _ref_fp(r) for v, r in
-                          newer["partitions"].items() if v in ours}
-                if ours != theirs:
-                    raise CommitConflict(
-                        "a concurrent writer rewrote a partition this "
-                        "compaction read; re-run compact() against "
-                        "the new snapshot") from None
-                snap = newer                     # disjoint: rebase
+            # colliding ref exactly as an append does
+            # (:meth:`_rebuild_ref`).  Because this merged map is
+            # rebuilt from `snap` on every rebase, a concurrent append
+            # landing on a colliding key is re-read here rather than
+            # needing its own conflict fingerprint (the fingerprint
+            # guards only todo_vals, whose staged rewrites CAN go
+            # stale).
+            rest = {k: v for k, v in snap["partitions"].items()
+                    if k not in set(todo_vals)}
+            return {"partitions": self._rebuilt_parts(
+                        {**snap, "partitions": rest}, staged),
+                    "row_preserving": True}
+
+        parts = self._transact(build, snap=mf)["partitions"]
+        files_after = sum(len(parts[k]["entries"]) for k in staged)
         return {"partitions": len(todo_vals),
                 "files_before": files_before,
                 "files_after": files_after}

@@ -1196,10 +1196,11 @@ def _commit_staged(root: str, ts: str | None, staged: dict,
                    pt: dict | None = None) -> bool:
     """Steps 2+3 for the DSv2 write: publish the staged files as one
     manifest commit.  First commit on a fresh root CREATES the table
-    (pins the frame's schema); append rebases through CommitConflict
-    exactly like :meth:`ManifestTable.append` (blind appends commute),
-    carrying deletion vectors on touched refs; overwrite is the atomic
-    full refresh (schema re-pins).  ``stream`` = (stream_id, batch_id)
+    (pins the frame's schema); append publishes
+    :meth:`ManifestTable.append`'s commit and rebases through
+    CommitConflict like it (blind appends commute); overwrite is
+    :meth:`ManifestTable.overwrite`'s atomic full refresh (schema
+    re-pins, column mapping and ``retired`` reset).  ``stream`` = (stream_id, batch_id)
     makes the commit EXACTLY-ONCE through the manifest's stream
     ledger: a replayed micro-batch is recognized and dropped (its
     staged files become vacuum orphans — the sink cannot refuse to
@@ -1221,20 +1222,23 @@ def _commit_staged(root: str, ts: str | None, staged: dict,
     from .manifest import CommitConflict, ManifestTable, SchemaMismatch
 
     t = ManifestTable(root, ts)
-    while True:
+    try:
+        t._raw()
+    except FileNotFoundError:
         try:
-            mf = t._raw()
-        except FileNotFoundError:
-            try:
-                t._commit(
-                    staged, base_version=0, schema=schema_sig,
-                    streams={stream[0]: stream[1]} if stream else None,
-                    cdf=([e for es in staged.values() for e in es]
-                         if cdf else None),
-                    cdf_kind="insert_files")
-                return True
-            except CommitConflict:
-                continue          # create race: rebase onto the winner
+            t._commit(
+                staged, base_version=0, schema=schema_sig,
+                streams={stream[0]: stream[1]} if stream else None,
+                cdf=([e for es in staged.values() for e in es]
+                     if cdf else None),
+                cdf_kind="insert_files")
+            return True
+        except CommitConflict:
+            pass                  # create race: commit onto the winner
+    replay = False
+
+    def build(mf: dict) -> dict | None:
+        nonlocal replay
         want = mf.get("schema")
         evolved = None
         if (want and not overwrite
@@ -1297,55 +1301,20 @@ def _commit_staged(root: str, ts: str | None, staged: dict,
         streams = dict(mf.get("streams", {}))
         if stream is not None:
             if streams.get(stream[0], -1) >= stream[1]:
-                return False      # replay: already committed
+                replay = True     # already committed: drop
+                return None
             streams[stream[0]] = stream[1]
         if overwrite:
-            live: dict = dict(staged)
-            schema = schema_sig   # full refresh re-pins (overwrite())
-        else:
-            if not staged:
-                return True       # empty append: no no-op version bump
-            live = dict(mf["partitions"])
-            for value, entries in staged.items():
-                prior_ref = live.get(value)
-                prior = (t._entries(mf, value)
-                         if value in live else [])
-                merged = prior + entries
-                form: dict = {"entries": merged}
-                # DVs addressing the kept files ride along (append())
-                if (isinstance(prior_ref, dict)
-                        and prior_ref.get("dv")):
-                    form["dv"] = prior_ref["dv"]
-                    form["dv_rows"] = prior_ref.get("dv_rows", 0)
-                # value-string collision with an OLD-era ref under
-                # partition evolution: the merged ref becomes era-
-                # MIXED (pid -1, never partition-pruned) exactly like
-                # ManifestTable.append's collision stance; active-era
-                # priors leave pid to _commit's active stamp
-                mp = t._mixed_pid_for(prior_ref,
-                                      mf.get("pt_history"))
-                if mp is not None:
-                    form["pid"] = mp
-                live[value] = form if prior else merged
-            schema = evolved or want or schema_sig
-        try:
-            if overwrite:
-                # full refresh: the column mapping resets with the
-                # re-pinned schema (overwrite()'s stance — the new
-                # files ARE the new physical names)
-                t._commit(live, base_version=mf["version"],
-                          streams=streams, schema=schema,
-                          cdf=None, cdf_kind="insert_files",
-                          colmap=None)
-            else:
-                t._commit(live, base_version=mf["version"],
-                          streams=streams, schema=schema,
-                          cdf=([e for es in staged.values()
-                                for e in es] if cdf else None),
-                          cdf_kind="insert_files")
-            return True
-        except CommitConflict:
-            continue              # someone else committed; re-evaluate
+            # the full refresh — the same commit overwrite() publishes
+            return {**t._refresh(staged, schema_sig), "streams": streams}
+        if not staged:
+            return None           # empty append: no no-op version bump
+        return {**t._append_commit(mf, staged, cdf), "streams": streams,
+                "schema": evolved or want or schema_sig}
+
+    # blind appends (and full refreshes) commute: rebase on conflict
+    t._transact(build)
+    return not replay
 
 
 class ManifestBatchWriter(DataSourceArrowWriter):

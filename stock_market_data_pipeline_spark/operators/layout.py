@@ -1,5 +1,6 @@
-"""Storage-layout operators: bucketed tables (co-located joins),
-compaction (the small-files problem), and layout helpers.
+"""Storage-layout operators: bucketed tables (co-located joins) and
+layout helpers.  Compaction (the small-files problem) is table
+maintenance on the manifest layer: ``ManifestTable.compact``.
 
 These are the operational levers that matter at 100 TB:
 
@@ -8,18 +9,11 @@ These are the operational levers that matter at 100 TB:
   once at write, amortized over every read. The reference's
   `cluster_by=['ticker']` (fct_trading_momentum.sql:5) is the
   Snowflake analog.
-- COMPACTION: streaming/incremental appends produce many small files;
-  scans then pay per-file open cost and tiny row groups kill the
-  columnar advantage. Periodic rewrite to target-sized files is
-  standard table maintenance.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,
@@ -33,35 +27,3 @@ def write_bucketed(df: DataFrame, table: str, key: str,
          .bucketBy(n_buckets, key))
     w = w.sortBy(*(sort_by or [key]))
     w.saveAsTable(table)
-
-
-def compact_parquet(spark: SparkSession, path: str,
-                    target_mb: int = 128) -> dict[str, int]:
-    """Rewrite a parquet directory into ~``target_mb``-sized files:
-    read, coalesce to ceil(bytes/target), write to a sibling dir, then
-    atomically swap. ``coalesce`` (not repartition) so compaction
-    itself is shuffle-free — it only concatenates co-located splits.
-
-    Returns {files_before, files_after, bytes}. On a real deployment
-    this runs per partition directory (compact only partitions whose
-    file count exceeds a threshold), keeping the rewrite incremental.
-    """
-    def _files(p: str) -> list[str]:
-        return [os.path.join(dp, f)
-                for dp, _, fs in os.walk(p)
-                for f in fs if f.endswith(".parquet")]
-
-    before = _files(path)
-    total_bytes = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact"
-    df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    # swap: keep the old dir until the new one is fully written
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    import shutil
-    shutil.rmtree(old, ignore_errors=True)
-    return {"files_before": len(before), "files_after": len(_files(path)),
-            "bytes": total_bytes}

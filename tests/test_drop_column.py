@@ -265,10 +265,15 @@ def test_clone_carries_retired(spark, t, tmp_path):
     assert c.read(spark).where(F.col("w").isNotNull()).count() == 0
 
 
-def test_overwrite_resets_retired(spark, t):
+@pytest.mark.parametrize("path", ["overwrite", "dsv2"])
+def test_overwrite_resets_retired(spark, t, push, path):
     t.drop_column("w")
     assert t._raw()["retired"] == ["w"]
-    t.overwrite(_frame(spark, 0, 50, extra=False))
+    if path == "overwrite":
+        t.overwrite(_frame(spark, 0, 50, extra=False))
+    else:
+        _frame(spark, 0, 50, extra=False) \
+            .write.format("manifest").mode("overwrite").save(t.root)
     assert "retired" not in t._raw()
     # the refresh's snapshot holds no old file: re-add is collision-
     # free and needs no mapping

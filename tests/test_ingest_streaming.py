@@ -239,9 +239,9 @@ def _optimized_plan(df) -> str:
 
 def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
     """The ingest's driver-side frames (the fetched rows, the trading
-    calendar) and an empty ledger scan as JVM LocalRelations: a Python
-    RDD frame (LogicalRDD) would start Python workers on every
-    action over it."""
+    calendar), an empty ledger and an empty change-feed range scan as
+    JVM LocalRelations: a Python RDD frame (LogicalRDD) would start
+    Python workers on every action over it."""
     from stock_market_data_pipeline_spark.ingest.calendar import (
         trading_days,
     )
@@ -249,6 +249,7 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
     from stock_market_data_pipeline_spark.ingest.loader import (
         normalize_rows,
     )
+    from stock_market_data_pipeline_spark.manifest import ManifestTable
 
     frames = {
         "normalize_rows": normalize_rows(
@@ -258,6 +259,12 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
                                      date(1998, 2, 15)),
         "empty ledger": Ledger(spark, str(tmp_path / "none")).read(),
     }
+    # a change-feed range holding only metadata-only commits
+    t = ManifestTable.create(
+        spark.range(4).selectExpr("id", "cast(id % 2 AS string) AS pt"),
+        str(tmp_path / "tc"), "pt")
+    t.add_columns([("z", "bigint")])
+    frames["empty table_changes"] = t.table_changes(spark, 2)
     for name, df in frames.items():
         plan = _optimized_plan(df)
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, (
@@ -265,6 +272,7 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
     assert frames["normalize_rows"].count() == 50
     assert frames["trading_days"].count() == 10
     assert frames["empty ledger"].count() == 0
+    assert frames["empty table_changes"].count() == 0
 
 
 def test_local_frame_matches_create_dataframe(spark):

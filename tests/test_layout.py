@@ -73,27 +73,3 @@ def test_partitioned_write_prunes_at_scan(spark, tmp_path):
     m = re.search(r"PartitionFilters: \[([^\]]*)", p)
     assert m and "event_type" in m.group(1), p[-1500:]
     assert q.count() == ev.where(F.col("event_type") == "click").count()
-
-
-def test_compaction_reduces_files_preserves_content(spark, tmp_path):
-    from stock_market_data_pipeline_spark.operators.layout import (
-        compact_parquet,
-    )
-
-    tgt = str(tmp_path / "frag")
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    # simulate streaming appends: 16 tiny files
-    ev.repartition(16).write.mode("overwrite").parquet(tgt)
-    before = spark.read.parquet(tgt)
-    n_before = before.count()
-    sum_before = before.agg(
-        F.sum(F.col("value").cast("decimal(18,2)"))).first()[0]
-
-    stats = compact_parquet(spark, tgt, target_mb=128)
-    assert stats["files_before"] == 16
-    assert stats["files_after"] == 1
-
-    after = spark.read.parquet(tgt)
-    assert after.count() == n_before
-    assert after.agg(
-        F.sum(F.col("value").cast("decimal(18,2)"))).first()[0] == sum_before

@@ -520,6 +520,33 @@ def test_append_batch_retries_through_conflict(spark, table, monkeypatch):
     assert table.manifest()["streams"] == {"s1": 0}
 
 
+@pytest.mark.parametrize("op", ["append", "add_columns"])
+def test_commit_retries_are_bounded(spark, table, monkeypatch, op):
+    """A contention storm in which EVERY publish loses: a rebasing
+    writer (a blind append, a metadata-only op) must give up after the
+    attempt cap with a CommitConflict naming the count — not spin —
+    and nothing of its may become visible."""
+    from stock_market_data_pipeline_spark import manifest as M
+    from stock_market_data_pipeline_spark.manifest import CommitConflict
+
+    published: list[str] = []
+
+    def storm(mdir, name, tmp):
+        published.append(name)
+        raise CommitConflict(f"{name}: claimed by a competing writer")
+
+    monkeypatch.setattr(table.backend, "publish", storm)
+    rows, v = _snap(table.read(spark)), table.version()
+    with pytest.raises(CommitConflict,
+                       match=f"after {M._COMMIT_ATTEMPTS} commit"):
+        if op == "append":
+            table.append(_mkdf(spark, [("ZZZ", "2024-01-05", 1.0)]))
+        else:
+            table.add_columns([("extra", "bigint")])
+    assert len(published) == M._COMMIT_ATTEMPTS
+    assert table.version() == v and _snap(table.read(spark)) == rows
+
+
 def test_clustered_compaction_enables_file_skipping(spark, tmp_path):
     """Sort-within-partition + maxRecordsPerFile = the ZORDER-lite
     maintenance op: after `compact(cluster_by=["close"])` each file's

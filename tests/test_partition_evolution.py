@@ -172,7 +172,8 @@ def test_compact_migrates_everything(spark, tmp_path):
     assert plan["partitions"] == ["2024-02"]
 
 
-def test_mixed_ref_never_partition_prunes_wrong(spark, tmp_path):
+@pytest.mark.parametrize("write", ["append", "append_batch"])
+def test_mixed_ref_never_partition_prunes_wrong(spark, tmp_path, write):
     """bucket(2) -> bucket(4) shares value strings across eras: an
     append that collides marks the ref era-MIXED (pid -1), which must
     disable partition pruning for it — a probe under either spec must
@@ -185,7 +186,10 @@ def test_mixed_ref_never_partition_prunes_wrong(spark, tmp_path):
     t.evolve_partition(("bucket", 4))
     extra = spark.createDataFrame(
         [(f"N{i}", 100.0 + i) for i in range(40)], df.schema)
-    t.append(extra)
+    if write == "append":
+        t.append(extra)
+    else:
+        t.append_batch(extra, "s", 0)
     mf = t._raw()
     assert any(r.get("pid") == -1 for r in mf["partitions"].values())
     for probe in ["K3", "N7", "K11", "N0"]:
