@@ -987,6 +987,25 @@ def _owning_pt(mf: dict | None = None) -> Column:
     return c
 
 
+def _adopted_fill(mf: dict, rel: str) -> dict | None:
+    """Constant-fill dict for one file of a dirs-adopted table: the
+    partition column exists only as a ``col=value`` directory name in
+    the file's relative path, so every Python read path (batch,
+    stream, CDF) must reconstruct it per task.  None for tables
+    without ``adopted_dirs`` and for paths carrying no such component
+    — engine-written files hold the column on disk, and a fill for a
+    present column is ignored by the readers anyway."""
+    adn = mf.get("adopted_dirs")
+    if not adn:
+        return None
+    pre = f"{adn}="
+    for comp in rel.split("/"):
+        if comp.startswith(pre):
+            inv = {p: l for l, p in (mf.get("colmap") or {}).items()}
+            return {inv.get(adn, adn): comp[len(pre):]}
+    return None
+
+
 def _pt_eras(mf: dict) -> list:
     """The table's partition-spec history: list of specs indexed by
     era id (``pid``), newest = active.  Tables that never evolved
@@ -1229,7 +1248,8 @@ class ManifestTable:
         #: partition "__all"; every op keeps its contract, partition
         #: pruning simply never applies.
         self.root = root
-        self.ts = ts
+        self._ts_ctor = ts
+        self._ts_known = False   # committed column resolved (see ts)
         #: optional partition TRANSFORM over ``ts`` (hidden
         #: partitioning, :func:`_pt_norm_spec`): the directory value is
         #: fn(ts) instead of ts itself, and scan_plan prunes from
@@ -1260,6 +1280,29 @@ class ManifestTable:
             raise ValueError(
                 f"branch name {branch!r} must match "
                 f"{_BRANCH_RE.pattern} (it becomes a filename segment)")
+
+    @property
+    def ts(self) -> str | None:
+        """The partition column.  Like the transform (:meth:`_pt`),
+        the committed manifest's is authoritative: a handle opened
+        with ``ts=None`` (the plain-reader form) uses it, and a ctor
+        column that CONTRADICTS it raises — honoring either would
+        commit ``ts: None`` and stage every row into ``__all`` beside
+        the table's real partitions.  The ctor's applies only before
+        v1 exists.  Resolved once: the column never changes after v1
+        (``evolve_partition`` keeps its source column)."""
+        if not self._ts_known:
+            try:
+                committed = self._raw().get("ts")
+            except (FileNotFoundError, OSError):
+                return self._ts_ctor
+            if self._ts_ctor is not None and self._ts_ctor != committed:
+                raise ValueError(
+                    f"{self.root}: table committed with partition "
+                    f"column {committed!r} but opened declaring "
+                    f"{self._ts_ctor!r}")
+            self._ts, self._ts_known = committed, True
+        return self._ts
 
     # -- manifest plumbing -------------------------------------------
 
@@ -2504,6 +2547,24 @@ class ManifestTable:
 
     # -- read path ---------------------------------------------------
 
+    def _dv_paths(self, ref: dict) -> list[str]:
+        """Absolute paths of a partition ref's DV sidecars."""
+        return [os.path.join(self.root, d["path"])
+                for d in ref.get("dv", [])]
+
+    def _file_record(self, mf: dict, entry: dict, dvs: list[str]) -> dict:
+        """One kept file as a reader consumes it: absolute ``path``;
+        ``rel``, the entry's OWN path — the DV row-address namespace
+        (absolute for a shallow clone's borrowed files, which
+        ``os.path.relpath`` would turn into a "../.." string no
+        sidecar address matches); ``bytes`` from the commit object;
+        ``dv``, the owning ref's sidecar paths; and ``fill``, the
+        adopted-dir constant columns (:func:`_adopted_fill`)."""
+        rel = entry["path"]
+        return {"path": os.path.join(self.root, rel), "rel": rel,
+                "bytes": entry.get("bytes"), "dv": dvs,
+                "fill": _adopted_fill(mf, rel)}
+
     def scan_plan(self, where: dict | None = None,
                   manifest_name: str | None = None) -> dict:
         """Resolve the file set for a read, applying partition pruning
@@ -2540,7 +2601,12 @@ class ManifestTable:
         the metadata AND data I/O plans (``bloom_skipped`` counts
         within ``skipped``; ``pbloom_pruned`` partitions' files count
         within ``bloom_skipped``; ``bloom_probes`` counts individual
-        filter probes, the sketch-ordering win)."""
+        filter probes, the sketch-ordering win).
+
+        ``records`` is the same kept set resolved for a reader, one
+        :meth:`_file_record` per file, all from the ONE commit object
+        read here — the only place a reader resolves a file's DV
+        sidecars, adopted fill and size."""
         where = where or {}
         mf = self._raw(manifest_name)
         cm = mf.get("colmap") or {}
@@ -2659,6 +2725,7 @@ class ManifestTable:
                     continue
             entries = self._entries(mf, value)
             shards_opened += 1
+            dvs = self._dv_paths(ref)
             for e in entries:
                 drop = any(
                     col in e["stats"]
@@ -2688,10 +2755,11 @@ class ManifestTable:
                 if drop:
                     skipped += 1
                 else:
-                    kept.append(os.path.join(self.root, e["path"]))
+                    kept.append(self._file_record(mf, e, dvs))
                     if (not kept_parts) or kept_parts[-1] != value:
                         kept_parts.append(value)
-        return {"files": kept, "partitions": kept_parts,
+        return {"files": [r["path"] for r in kept], "records": kept,
+                "partitions": kept_parts,
                 "skipped": skipped,
                 "bloom_skipped": bloom_skipped,
                 "bloom_probes": bloom_probes,
@@ -2989,8 +3057,21 @@ class ManifestTable:
         only address a file inside its own partition directory, so a
         partition-pruned read need not open the other 10^4 partitions'
         sidecars.  None = load all refs' sidecars (correct, more I/O:
-        callers passing ad-hoc file lists)."""
+        callers passing ad-hoc file lists).
+
+        An empty ``files`` (a fully-pruned or still-empty snapshot, an
+        empty change set) reads as an EMPTY frame with the pinned
+        schema — never a zero-path reader error."""
         schema = mf.get("schema")
+        if not files:
+            if not schema:
+                raise FileNotFoundError(
+                    f"{self.root}: nothing to read and no pinned schema "
+                    "to type an empty result")
+            cols = list(schema) + ([["__rel", "string"], ["__ri", "bigint"]]
+                                   if keep_pos else [])
+            return local_frame(
+                spark, [], ", ".join(f"`{n}` {t}" for n, t in cols))
         cm = mf.get("colmap") or {}
         reader = spark.read
         if schema:
@@ -3105,17 +3186,9 @@ class ManifestTable:
         zone-map skipping.  A fully-pruned (or still-empty) snapshot
         reads as an EMPTY frame with the pinned schema — never a
         zero-path reader error."""
-        plan = self.scan_plan(where, manifest_name)
-        mf = self._raw(manifest_name)
-        if not plan["files"]:
-            schema = mf.get("schema")
-            if not schema:
-                raise FileNotFoundError(
-                    f"{self.root}: nothing to read and no pinned schema "
-                    "to type an empty result")
-            ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            return local_frame(spark, [], ddl)
-        return self._read_files(spark, plan["files"], mf,
+        name = manifest_name or self._current_name()   # one snapshot
+        plan = self.scan_plan(where, name)
+        return self._read_files(spark, plan["files"], self._raw(name),
                                 partitions=plan["partitions"])
 
     def register(self, spark: SparkSession, name: str,
@@ -4305,16 +4378,24 @@ class ManifestTable:
         between the two commit objects are skipped without opening a
         shard; only changed partitions load their (two) shards for the
         path diff — O(changed), not O(table)."""
+        return [r["path"] for r in
+                self._added_records(since_version, manifest_name)]
+
+    def _added_records(self, since_version: int,
+                       manifest_name: str | None = None) -> list[dict]:
+        """:meth:`added_files` as reader records (:meth:`_file_record`
+        — the stream source's incremental plan)."""
         new = self._raw(manifest_name)
         old = self._raw(self._mname(since_version))
-        out: list[str] = []
+        out: list[dict] = []
         for value, ref in new["partitions"].items():
             old_ref = old["partitions"].get(value)
             if old_ref is not None and old_ref["shard"] == ref["shard"]:
                 continue                      # identical by ref
             old_paths = ({e["path"] for e in self._entries(old, value)}
                          if old_ref is not None else set())
-            out.extend(os.path.join(self.root, e["path"])
+            dvs = self._dv_paths(ref)
+            out.extend(self._file_record(new, e, dvs)
                        for e in self._entries(new, value)
                        if e["path"] not in old_paths)
         return out
@@ -4327,17 +4408,9 @@ class ManifestTable:
         downstream incremental pipeline tails instead of re-scanning
         the table: at 100 TB the read is bounded by the CHANGE volume,
         not the table size."""
-        files = self.added_files(since_version)
-        mf = self._raw()
-        if not files:
-            schema = mf.get("schema")
-            if not schema:
-                raise FileNotFoundError(
-                    f"{self.root}: no changes and no pinned schema "
-                    "to type an empty result")
-            ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            return local_frame(spark, [], ddl)
-        return self._read_files(spark, files, mf)
+        name = self._current_name()                      # one snapshot
+        return self._read_files(
+            spark, self.added_files(since_version, name), self._raw(name))
 
     def restore(self, version: int) -> None:
         """Delta's ``RESTORE TABLE ... TO VERSION`` analog: commit a
@@ -4414,16 +4487,10 @@ class ManifestTable:
             b = kd.agg(F.min(on).alias("lo"),
                        F.max(on).alias("hi")).collect()[0]
             where = {on: (canon(b["lo"]), canon(b["hi"]))}
-        plan = self.scan_plan(where)
-        mf = self._raw()
-        if not plan["files"]:
-            schema = mf.get("schema") or []
-            df = local_frame(
-                spark, [], ", ".join(f"`{n}` {t}" for n, t in schema))
-        else:
-            df = self._read_files(spark, plan["files"], mf,
-                                  partitions=plan["partitions"])
-        return df, plan
+        name = self._current_name()                      # one snapshot
+        plan = self.scan_plan(where, name)
+        return self._read_files(spark, plan["files"], self._raw(name),
+                                partitions=plan["partitions"]), plan
 
     def build_text_index(self, spark: SparkSession, col: str,
                          m: int = 1 << 15, k: int = 5) -> dict:
@@ -4576,17 +4643,7 @@ class ManifestTable:
                 kept_files.append(os.path.join(self.root, e["path"]))
                 if not kept_parts or kept_parts[-1] != value:
                     kept_parts.append(value)
-        if not kept_files:
-            schema = mf.get("schema")
-            if not schema:
-                raise FileNotFoundError(
-                    f"{self.root}: nothing to read and no pinned "
-                    f"schema to type an empty result")
-            df = local_frame(
-                spark, [], ", ".join(f"`{n}` {t}" for n, t in schema))
-        else:
-            df = self._read_files(spark, kept_files, mf,
-                                  partitions=kept_parts)
+        df = self._read_files(spark, kept_files, mf, partitions=kept_parts)
         pred = None
         for w in words:
             one = F.lower(F.col(col)).rlike(

@@ -26,6 +26,16 @@ treats zone-map skipping (kept set is a superset; the residual
 predicate runs on top).  Strict bounds (``>``) prune with their
 non-strict range, conservative by construction.
 
+One plan, one conformer.  Every reader plans from the file RECORDS of
+one commit-object read — ``ManifestTable.scan_plan`` for the batch
+read and the stream's catch-up batch, its ``_added_records`` twin
+for an incremental micro-batch — and :func:`_file_partitions` turns
+them into tasks (packing included); nothing here re-derives a file's
+DV sidecars, adopted fill or size.  Executor-side, :func:`_conform`
+is the one Arrow reconciliation to the pinned schema (colmap renames,
+adopted fills, NULL-filled added columns, pin order, widening and
+canonical casts) for the file, packed and CDF reads alike.
+
 Deletion vectors apply EXECUTOR-SIDE: each partition ships its ref's
 DV sidecar paths; the reader drops dead row positions from its own
 file before emitting Arrow batches, so a merge-on-read DELETE is
@@ -203,23 +213,53 @@ def _pack_opt(options) -> int:
     return n
 
 
+def _file_partitions(records: list[dict], pack: int) -> list:
+    """THE reader plan: one :class:`ManifestFilePartition` per file
+    record (:meth:`ManifestTable._file_record`), packed into byte-
+    budget bins when ``pack`` (a :func:`_pack_opt` value) asks.  The
+    batch reader, both stream branches and :func:`expected_scan_tasks`
+    all plan through here."""
+    out = [ManifestFilePartition(r["path"], r["rel"], r["dv"], r["fill"])
+           for r in records]
+    if pack and len(out) > 1:
+        sizes = {r["rel"]: r["bytes"] for r in records}
+        budget = (pack if pack > 0 else
+                  _auto_pack_budget(sum(b or 0 for b in sizes.values())))
+        out = _pack_file_partitions(out, sizes, budget)
+    return out
+
+
+def _canon_where(where: dict) -> dict:
+    """scan_plan wants (lo, hi) tuples for ranges, lists for IN-lists;
+    date/datetime filter values arrive as Python objects — canonicalize
+    to ISO strings, the manifest stats' form."""
+    import datetime
+
+    def canon(v):
+        if isinstance(v, (datetime.date, datetime.datetime)):
+            return v.isoformat()
+        return v
+
+    return {c: ([canon(v) for v in s] if isinstance(s, list)
+                else (canon(s[0]), canon(s[1])))
+            for c, s in where.items()}
+
+
 def expected_scan_tasks(table, where: dict | None = None,
                         manifest_name: str | None = None,
                         pack: str | int = "auto") -> int:
     """The deterministic task count the manifest reader will plan for
     this (snapshot, where, packFiles) triple — computed by running THE
     SAME driver-side code path the reader runs at plan time (scan_plan
-    pruning + greedy byte-budget packing over the commit object's
-    per-file sizes).  The pruning-proof entries gate their default
-    (packed) reads on this: a lost pushdown plans bins over the FULL
-    file set and produces a different count.  ``where`` uses
-    scan_plan's form ((lo, hi) tuples / value lists)."""
-    body = table._raw(manifest_name)
-    rdr = ManifestReader(table.root, body.get("schema") or [],
-                         manifest_name, colmap=body.get("colmap"),
-                         pack=_pack_opt({"packFiles": str(pack)}))
-    rdr.where = dict(where or {})
-    return len(rdr.partitions())
+    pruning + :func:`_file_partitions`' greedy byte-budget packing
+    over the commit object's per-file sizes).  The pruning-proof
+    entries gate their default (packed) reads on this: a lost
+    pushdown plans bins over the FULL file set and produces a
+    different count.  ``where`` uses scan_plan's form ((lo, hi)
+    tuples / value lists)."""
+    plan = table.scan_plan(_canon_where(where or {}), manifest_name)
+    return len(_file_partitions(plan["records"],
+                                _pack_opt({"packFiles": str(pack)})))
 
 
 class ManifestCDFPartition(InputPartition):
@@ -236,25 +276,6 @@ class ManifestCDFPartition(InputPartition):
                  version: int, fill: dict | None = None):
         self.path, self.ctype, self.version = path, ctype, version
         self.fill = fill
-
-
-def _adopted_fill(mf: dict, rel: str) -> dict | None:
-    """Constant-fill dict for one file of a dirs-adopted table: the
-    partition column exists only as a ``col=value`` directory name in
-    the file's relative path, so every read path (batch, stream,
-    CDF) must reconstruct it per task.  None for tables without
-    ``adopted_dirs`` and for paths carrying no such component —
-    engine-written files hold the column on disk, and a fill for a
-    present column is ignored by the readers anyway."""
-    adn = mf.get("adopted_dirs")
-    if not adn:
-        return None
-    pre = f"{adn}="
-    for comp in rel.split("/"):
-        if comp.startswith(pre):
-            inv = {p: l for l, p in (mf.get("colmap") or {}).items()}
-            return {inv.get(adn, adn): comp[len(pre):]}
-    return None
 
 
 class ManifestReader(DataSourceReader):
@@ -311,75 +332,13 @@ class ManifestReader(DataSourceReader):
     def partitions(self) -> list[ManifestFilePartition]:
         from .manifest import ManifestTable
 
-        # ctor ts is irrelevant to reads: scan_plan prunes on the
-        # REAL partition column recorded in the manifest
-        table = ManifestTable(self.root, None)
-        mf = table._raw(self.manifest_name)
-        plan = table.scan_plan(self._normalized_where(),
-                               self.manifest_name)
-        out = []
-        by_value = {v: mf["partitions"][v] for v in plan["partitions"]}
-        adn = mf.get("adopted_dirs")
-        fill_col = None
-        if adn:
-            # adopted hive layout: the partition column exists only
-            # as directory names in adopted files — each file's task
-            # carries its owning value as a constant fill (applied
-            # executor-side ONLY when the column is absent on disk,
-            # so engine-written post-adoption files keep stored data)
-            inv = {p: l for l, p in (mf.get("colmap") or {}).items()}
-            fill_col = inv.get(adn, adn)
-        rel_to_dv = {}
-        abs_to_rel = {}
-        rel_fill: dict = {}
-        rel_bytes: dict = {}
-        for v, ref in by_value.items():
-            dvs = [os.path.join(self.root, e["path"])
-                   for e in ref.get("dv", [])]
-            for e in table._entries(mf, v):
-                rel_to_dv[e["path"]] = dvs
-                rel_bytes[e["path"]] = e.get("bytes")
-                # the entry's OWN path is the file's canonical rel —
-                # for a shallow clone's BORROWED files it is absolute
-                # (outside the table root), and os.path.relpath would
-                # derive a "../.."-form string that matches neither
-                # the dv map keys nor the sidecars' rewritten
-                # addresses (silent DV-row resurrection)
-                abs_to_rel[os.path.abspath(
-                    os.path.join(self.root, e["path"]))] = e["path"]
-                if fill_col is not None:
-                    rel_fill[e["path"]] = {fill_col: v}
-        for abspath in plan["files"]:
-            rel = abs_to_rel.get(os.path.abspath(abspath),
-                                 os.path.relpath(abspath, self.root))
-            out.append(ManifestFilePartition(
-                abspath, rel, rel_to_dv.get(rel, []),
-                rel_fill.get(rel)))
-        if self.pack and len(out) > 1:
-            budget = (self.pack if self.pack > 0 else
-                      _auto_pack_budget(sum(
-                          rel_bytes.get(p.rel) or 0 for p in out)))
-            out = _pack_file_partitions(out, rel_bytes, budget)
-        return out
-
-    def _normalized_where(self) -> dict:
-        """scan_plan wants (lo, hi) tuples for ranges, lists for
-        IN-lists; date/datetime filter values arrive as Python objects
-        — canonicalize to ISO strings, the manifest stats' form."""
-        import datetime
-
-        def canon(v):
-            if isinstance(v, (datetime.date, datetime.datetime)):
-                return v.isoformat()
-            return v
-
-        out = {}
-        for c, s in self.where.items():
-            if isinstance(s, list):
-                out[c] = [canon(v) for v in s]
-            else:
-                out[c] = (canon(s[0]), canon(s[1]))
-        return out
+        # ONE commit-object read: scan_plan resolves the kept files
+        # AND each one's DV sidecars, fill and size from the same
+        # snapshot (ctor ts is irrelevant to reads: scan_plan prunes
+        # on the partition column recorded in the manifest)
+        plan = ManifestTable(self.root, None).scan_plan(
+            _canon_where(self.where), self.manifest_name)
+        return _file_partitions(plan["records"], self.pack)
 
     # -- execution --------------------------------------------------
 
@@ -389,23 +348,21 @@ class ManifestReader(DataSourceReader):
         (rows addressed (rel, row_index) within THIS file drop before
         anything is emitted); the pushed filters prune row groups by
         their footer stats before any data page is read.  A packed
-        partition (opt-in ``packFiles``) chains its members' reads —
+        partition (``packFiles``) chains its members' reads —
         each file keeps its own DV mask and constant fill."""
+        where = _canon_where(self.where)
         if isinstance(partition, ManifestPackedPartition):
             yield from _read_packed_partition(
-                partition, self.pinned, self._normalized_where(),
-                colmap=self.colmap)
+                partition, self.pinned, where, colmap=self.colmap)
             return
-        yield from _read_file_partition(partition, self.pinned,
-                                        self._normalized_where(),
+        yield from _read_file_partition(partition, self.pinned, where,
                                         colmap=self.colmap)
 
 
 def _arrow_type(t: str):
-    """Spark simpleString -> Arrow type, for typing the NULL columns
-    schema evolution adds to files written before it (mirrors
-    ``_read_files``'s read-through-the-pinned-schema reconciliation
-    without a SparkSession, which DSv2 Python workers don't have)."""
+    """Spark simpleString -> Arrow type: the pinned schema's canonical
+    Arrow rendering :func:`_conform` aligns every file to (DSv2 Python
+    workers have no SparkSession to type it for them)."""
     import pyarrow as pa
 
     t = t.strip().lower()
@@ -513,16 +470,57 @@ def _kept_row_groups(md, where: dict) -> list[int]:
     return kept
 
 
+def _conform(t, schema: list[list[str]], colmap: dict | None,
+             fill: dict | None):
+    """THE executor-side reconciliation of one file's Arrow table with
+    the pinned (name, type) signature — the file, packed and CDF reads
+    all end here; the Arrow analog of ``_read_files``'s read through
+    the pinned schema, for Python workers that have no SparkSession:
+
+    - each pinned column is taken under its PHYSICAL name (``colmap``,
+      logical -> physical; files keep stable physical names forever)
+      and surfaces under its logical one, in the pin's order; file
+      columns outside the pin drop;
+    - a pinned column absent from the file is the adopted hive
+      layout's constant when ``fill`` ({logical: directory value})
+      holds it — cast from the directory string through the pinned
+      type, as hive-dir inference would type it — else a typed NULL
+      (Delta's metadata-only ADD COLUMNS);
+    - the result casts to the pin's canonical Arrow schema whenever a
+      type differs: the safe widenings of a pre-widen file (narrow
+      ints, float -> double; the analog of Spark's native parquet
+      upcast — pyarrow's safe cast raises rather than truncate), and
+      nested field names a parquet read renders differently from a
+      NULL-filled column.  Spark's DSv2 worker writes every batch of
+      a task under its FIRST batch's schema, so every file of a
+      packed task must agree in Arrow terms, not just Spark terms."""
+    import pyarrow as pa
+
+    cm, fill = colmap or {}, fill or {}
+    target = pa.schema([pa.field(n, _arrow_type(ty)) for n, ty in schema])
+    have = set(t.column_names)
+    cols = []
+    for f in target:
+        p = cm.get(f.name, f.name)
+        if p in have:
+            cols.append(t.column(p))
+        elif f.name in fill:
+            cols.append(pa.array([str(fill[f.name])] * t.num_rows,
+                                 type=pa.string()).cast(f.type))
+        else:
+            cols.append(pa.nulls(t.num_rows, f.type))
+    out = pa.Table.from_arrays(cols, names=target.names)
+    return out if out.schema == target else out.cast(target)
+
+
 def _read_file_partition(partition: ManifestFilePartition,
                          schema: list[list[str]],
                          where: dict | None = None,
                          colmap: dict | None = None):
     """Executor-side file read shared by the batch and streaming
-    readers: one parquet file -> Arrow batches, the partition's
-    deletion vectors applied as a positional mask first.  ``schema``
-    is the pinned (name, type) signature: columns a pre-evolution
-    file lacks surface as typed NULLs — Delta's metadata-only ADD
-    COLUMNS semantics, same as ``_read_files``.
+    readers: one parquet file -> Arrow batches conformed to the pinned
+    ``schema`` (:func:`_conform`), the partition's deletion vectors
+    applied as a positional mask.
 
     ``where`` (the pushed-filter dict the driver pruned files with)
     additionally prunes ROW GROUPS inside this file by their footer
@@ -539,8 +537,6 @@ def _read_file_partition(partition: ManifestFilePartition,
     if partition is None or partition.path is None:
         return
     cm = colmap or {}
-    names = [n for n, _ in schema]
-    phys = {n: cm.get(n, n) for n in names}
     pf = pq.ParquetFile(partition.path)
     md = pf.metadata
     if where and cm:
@@ -552,40 +548,10 @@ def _read_file_partition(partition: ManifestFilePartition,
     if not kept:
         return
     on_disk = set(pf.schema_arrow.names)
-    t = pf.read_row_groups(kept,
-                           columns=[phys[n] for n in names
-                                    if phys[n] in on_disk])
-    if cm:
-        back = {v: k for k, v in phys.items()}
-        t = t.rename_columns([back.get(c, c) for c in t.column_names])
-    fill = getattr(partition, "fill", None) or {}
-    for n, ty in schema:
-        if phys[n] not in on_disk:
-            if n in fill:
-                # adopted hive layout: the column's value is the
-                # file's owning partition value, constant per task —
-                # cast from its directory string through the pinned
-                # type, exactly as hive-dir inference would type it
-                t = t.append_column(
-                    n, pa.array([str(fill[n])] * t.num_rows,
-                                type=pa.string())
-                    .cast(_arrow_type(ty)))
-            else:
-                t = t.append_column(n, pa.nulls(t.num_rows,
-                                                _arrow_type(ty)))
-    t = t.select(names)
-    # WIDENED columns: a pre-widen file carries the narrow physical
-    # type; upcast the safe numeric widenings per batch (the Arrow
-    # analog of Spark's native parquet upcast under the pinned DDL)
-    for i, (n, ty) in enumerate(schema):
-        want = _arrow_type(ty)
-        have = t.schema.field(i).type
-        if have != want and (
-                (pa.types.is_integer(have) and pa.types.is_integer(want)
-                 and have.bit_width < want.bit_width)
-                or (pa.types.is_float32(have)
-                    and pa.types.is_float64(want))):
-            t = t.set_column(i, n, t.column(i).cast(want))
+    t = _conform(pf.read_row_groups(
+                     kept, columns=[cm.get(n, n) for n, _ in schema
+                                    if cm.get(n, n) in on_disk]),
+                 schema, cm, partition.fill)
     if partition.dv_paths:
         dead: set[int] = set()
         for p in partition.dv_paths:
@@ -625,67 +591,31 @@ def _read_packed_partition(packed: ManifestPackedPartition,
                            schema: list[list[str]],
                            where: dict | None = None,
                            colmap: dict | None = None):
-    """Chain a packed partition's member reads into ONE Arrow stream.
-    Spark's DSv2 worker writes every batch a task yields under the
-    FIRST batch's schema, and two member files can legitimately
-    disagree in Arrow terms while agreeing in Spark terms — a
-    pre-evolution file NULL-fills an added map/struct column whose
-    nested field names differ from the parquet-read form of a
-    post-evolution file.  Align every batch to the pinned schema's
-    canonical Arrow rendering (a no-op cast when schemas already
-    match), so packing stays scheduling-only."""
-    import pyarrow as pa
-
-    target = pa.schema([pa.field(n, _arrow_type(ty))
-                        for n, ty in schema])
+    """Chain a packed partition's member reads into ONE Arrow stream;
+    each member conforms to the pin (:func:`_conform`), so packing
+    stays scheduling-only."""
     for p in packed.files:
-        for b in _read_file_partition(p, schema, where, colmap=colmap):
-            if b.schema != target:
-                b = pa.Table.from_batches([b]).cast(target).combine_chunks()
-                yield from b.to_batches()
-            else:
-                yield b
+        yield from _read_file_partition(p, schema, where, colmap=colmap)
 
 
 def _read_cdf_partition(partition: ManifestCDFPartition,
                         schema: list[list[str]],
                         colmap: dict | None = None):
-    """Executor-side change-set file read: the pinned columns (pre-
-    evolution files NULL-fill) plus ``_change_type`` — the file's own
-    column for classified change sets, the constant for insert_files
-    feeds — and the constant ``_commit_version``."""
+    """Executor-side change-set file read: the pinned columns
+    (:func:`_conform`) plus ``_change_type`` — the file's own column
+    for classified change sets, the constant for insert_files feeds —
+    and the constant ``_commit_version``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if partition is None or partition.path is None:
         return
-    cm = colmap or {}
-    names = [n for n, _ in schema]
     t = pq.read_table(partition.path)
-    if cm:
-        back = {v: k for k, v in cm.items()}
-        t = t.rename_columns([back.get(c, c) for c in t.column_names])
-    on_disk = set(t.column_names)
     if partition.ctype is not None:
         ct = pa.array([partition.ctype] * t.num_rows, pa.string())
     else:
         ct = t.column("_change_type")
-    fill = getattr(partition, "fill", None) or {}
-    for n, ty in schema:
-        if n not in on_disk:
-            if n in fill:
-                # adopted hive layout: the partition column exists
-                # only as the file's directory name — same constant
-                # fill as the batch/file-stream readers, else the
-                # change feed would NULL the column it keys on
-                t = t.append_column(
-                    n, pa.array([str(fill[n])] * t.num_rows,
-                                type=pa.string())
-                    .cast(_arrow_type(ty)))
-            else:
-                t = t.append_column(n, pa.nulls(t.num_rows,
-                                                _arrow_type(ty)))
-    out = (t.select(names)
+    out = (_conform(t, schema, colmap, partition.fill)
            .append_column("_change_type", ct)
            .append_column("_commit_version",
                           pa.array([partition.version] * t.num_rows,
@@ -699,9 +629,12 @@ class ManifestStreamReader(DataSourceStreamReader):
     analog): offsets are table VERSIONS, persisted in Spark's own
     checkpoint, so a restarted query resumes exactly after the last
     committed version — exactly-once across restarts for free.  Each
-    micro-batch plans the files ADDED in (start, end] through
+    micro-batch plans the file records ADDED in (start, end] through
     ``added_files``'s sharded diff (O(changed partitions), not
-    O(table)), one task per file.
+    O(table)); the catch-up batch at version 0 plans the snapshot's
+    ``scan_plan`` records, as a batch read does.  Both go through the
+    batch reader's :func:`_file_partitions` (DV sidecars, adopted
+    fills, byte-budget packing) and read through :func:`_conform`.
 
     APPEND-ONLY by contract, loudly: a version in range that removed
     or rewrote live files, or attached deletion vectors, RAISES —
@@ -822,68 +755,21 @@ class ManifestStreamReader(DataSourceStreamReader):
             return [ManifestFilePartition(None, "", [])]
         if self.read_cdf:
             return self._cdf_partitions(table, s, e)
-        new = table._raw(table._mname(e))
-        old = ({"partitions": {}} if s == 0
-               else table._raw(table._mname(s)))
-        if not self.ignore_changes:
-            self._require_append_only(table, old, new, s, e)
         if s > 0:
-            files = table.added_files(s, manifest_name=table._mname(e))
-            # files absorbed by adopt_files on a dirs-adopted table
-            # need the same constant partition-column fill the
-            # catch-up branch below applies — without it an
-            # incremental micro-batch streams the column as NULL
-            # while a batch read of the same snapshot returns it
-            out = []
-            for p in files:
-                rel = os.path.relpath(p, self.root)
-                out.append(ManifestFilePartition(
-                    p, rel, [], _adopted_fill(new, rel)))
+            if not self.ignore_changes:
+                self._require_append_only(table, s, e)
+            records = table._added_records(s, table._mname(e))
         else:
-            # Initial CATCH-UP batch: a full-snapshot read at e.  The
-            # snapshot's refs may carry deletion vectors from earlier
-            # delete_where/update_where/merge(mode='dv') commits —
-            # _require_append_only is vacuously skipped here (the
-            # version-0 "old" manifest has no partitions), so the DV
-            # sidecars MUST ride along as per-file positional masks
-            # (mirrors ManifestReader.partitions()'s rel_to_dv map);
-            # dropping them would silently re-emit DV-dead rows
+            # Initial CATCH-UP batch: a full-snapshot read at e.  Its
+            # refs may carry deletion vectors from earlier delete_where
+            # /update_where/merge(mode='dv') commits, and there is no
+            # earlier version for _require_append_only to compare, so
+            # the records' DV sidecars MUST ride along as per-file
+            # masks; dropping them would silently re-emit DV-dead rows
             # (r10 ADVICE item 1).
-            rel_to_dv: dict = {}
-            for v, ref in new["partitions"].items():
-                dvs = [os.path.join(self.root, d["path"])
-                       for d in ref.get("dv", [])]
-                if dvs:
-                    for x in table._entries(new, v):
-                        rel_to_dv[x["path"]] = dvs
-            adn = new.get("adopted_dirs")
-            fill_col = None
-            if adn:
-                # adopted hive layout (see ManifestReader.partitions):
-                # the catch-up snapshot's adopted files need their
-                # owning partition value as a constant fill
-                inv = {p: l for l, p in
-                       (new.get("colmap") or {}).items()}
-                fill_col = inv.get(adn, adn)
-            out = [ManifestFilePartition(
-                os.path.join(self.root, x["path"]), x["path"],
-                rel_to_dv.get(x["path"], []),
-                {fill_col: v} if fill_col is not None else None)
-                for v in new["partitions"]
-                for x in table._entries(new, v)]
-        if self.pack and len(out) > 1:
-            # same opt-in byte-budget packing as the batch reader:
-            # a micro-batch over many small files plans fewer Python
-            # tasks; offsets/ordering are untouched (files of a batch
-            # are an unordered set)
-            rel_bytes = {x["path"]: x.get("bytes")
-                         for v in new["partitions"]
-                         for x in table._entries(new, v)}
-            budget = (self.pack if self.pack > 0 else
-                      _auto_pack_budget(sum(
-                          rel_bytes.get(p.rel) or 0 for p in out)))
-            out = _pack_file_partitions(out, rel_bytes, budget)
-        return out or [ManifestFilePartition(None, "", [])]
+            records = table.scan_plan(None, table._mname(e))["records"]
+        return (_file_partitions(records, self.pack)
+                or [ManifestFilePartition(None, "", [])])
 
     def _cdf_partitions(self, table, s: int, e: int) -> list:
         """One task per change-set file of each commit in (s, e]: the
@@ -892,6 +778,8 @@ class ManifestStreamReader(DataSourceStreamReader):
         range without a captured change set raises (the
         :meth:`ManifestTable.changes` contract: a silent gap would
         corrupt downstream incremental state)."""
+        from .manifest import _adopted_fill
+
         out = []
         for v in range(max(s, 0) + 1, e + 1):
             mf = table._raw(table._mname(v))
@@ -908,7 +796,9 @@ class ManifestStreamReader(DataSourceStreamReader):
                 for x in mf["cdf"])
         return out or [ManifestFilePartition(None, "", [])]
 
-    def _require_append_only(self, table, old, new, s, e) -> None:
+    def _require_append_only(self, table, s: int, e: int) -> None:
+        old = table._raw(table._mname(s))
+        new = table._raw(table._mname(e))
         for v, old_ref in old["partitions"].items():
             new_ref = new["partitions"].get(v)
             bad = None
@@ -1435,14 +1325,13 @@ class ManifestDataSource(DataSource):
     was; ``option("tag", name)`` resolves a named tag
     (:meth:`ManifestTable.create_tag`) to its pinned version.
 
-    ``option("packFiles", "auto" | <bytes>)`` (r16, batch AND stream):
-    plan several SMALL surviving files as one byte-budget Python task
-    instead of the default one-task-per-file — same rows, same DV
-    masks, fewer JVM<->Python crossings (guide §4).  Off by default:
-    per-file tasks are the documented contract the pruning-proof
-    entries gate on, and the right plan once files are 128 MB+
-    (``auto`` degrades to it — a file at/over the budget closes its
-    own bin)."""
+    ``option("packFiles", "auto" | <bytes> | "0")`` (batch AND
+    stream): plan several SMALL surviving files as one byte-budget
+    Python task — same rows, same DV masks, fewer JVM<->Python
+    crossings (guide §4).  ``auto`` is the default since r17 and
+    degrades to one task per file once files are 128 MB+ (a file
+    at/over the budget closes its own bin); ``"0"`` plans exactly one
+    task per file, the contract the pruning-proof probes count."""
 
     @classmethod
     def name(cls) -> str:
@@ -1483,34 +1372,29 @@ class ManifestDataSource(DataSource):
             return None
         return f"manifest-{int(v):08d}.json"
 
-    def _manifest_body(self) -> dict:
-        """The read-pinned commit object (time-travel options
-        honored): the source of the schema AND the column mapping —
-        both must come from the SAME version or a post-rename read
-        of a pre-rename snapshot would alias the wrong columns."""
-        name = self._manifest_name()
-        if name is None:
-            mdir = os.path.join(self._root(), "_manifests")
-            name = max(m for m in os.listdir(mdir)
-                       if m.startswith("manifest-")
-                       and m.endswith(".json")
-                       and m[len("manifest-"):-len(".json")].isdigit())
-        with open(os.path.join(self._root(), "_manifests", name)) as f:
-            return json.load(f)
+    def _pinned(self) -> tuple[str, dict]:
+        """The read-pinned commit object's (name, body), time-travel
+        options honored: the source of the schema, the column mapping
+        AND the batch reader's file plan — all from the SAME version,
+        or a post-rename read of a pre-rename snapshot would alias the
+        wrong columns and a commit landing between schema and plan
+        would tear the read.  Raises when it pins no schema."""
+        from .manifest import ManifestTable
 
-    def _pinned_schema(self) -> list[list[str]]:
-        schema = self._manifest_body().get("schema")
-        if not schema:
+        t = ManifestTable(self._root(), None)
+        name = self._manifest_name() or t._current_name()
+        body = t._raw(name)
+        if not body.get("schema"):
             raise ValueError(
                 f"{self._root()}: manifest carries no pinned schema")
-        return schema
+        return name, body
 
     def _read_cdf(self) -> bool:
         return str(_opt(self.options, "readChangeFeed",
                         "false")).lower() == "true"
 
     def schema(self) -> str:
-        cols = list(self._pinned_schema())
+        cols = list(self._pinned()[1]["schema"])
         if self._read_cdf():
             cols += [["_change_type", "string"],
                      ["_commit_version", "bigint"]]
@@ -1522,38 +1406,28 @@ class ManifestDataSource(DataSource):
                 "readChangeFeed is a STREAM reader option "
                 "(spark.readStream); for a single commit's batch "
                 "change set use ManifestTable.changes(spark, version)")
-        body = self._manifest_body()
-        schema = body.get("schema")
-        if not schema:
-            raise ValueError(
-                f"{self._root()}: manifest carries no pinned schema")
-        return ManifestReader(self._root(), schema,
-                              self._manifest_name(),
+        name, body = self._pinned()
+        return ManifestReader(self._root(), body["schema"], name,
                               colmap=body.get("colmap"),
                               pack=_pack_opt(self.options))
 
     def streamReader(self, schema) -> ManifestStreamReader:
-        return ManifestStreamReader(
-            self._root(), self._pinned_schema(), self.options,
-            colmap=self._manifest_body().get("colmap"))
+        body = self._pinned()[1]
+        return ManifestStreamReader(self._root(), body["schema"],
+                                    self.options,
+                                    colmap=body.get("colmap"))
 
     # -- write support ------------------------------------------------
 
     def _live_manifest(self) -> dict | None:
         """The live commit object, or None when the root holds no
         committed table yet (the create-on-first-write path)."""
-        mdir = os.path.join(self._root(), "_manifests")
+        from .manifest import ManifestTable
+
         try:
-            names = [m for m in os.listdir(mdir)
-                     if m.startswith("manifest-")
-                     and m.endswith(".json")
-                     and m[len("manifest-"):-len(".json")].isdigit()]
+            return ManifestTable(self._root(), None)._raw()
         except FileNotFoundError:
             return None
-        if not names:
-            return None
-        with open(os.path.join(mdir, max(names))) as f:
-            return json.load(f)
 
     def _write_ts(self) -> str | None:
         """The partition column a write stages under: the table's

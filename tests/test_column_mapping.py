@@ -209,18 +209,48 @@ def test_widen_int_to_bigint_and_float_to_double(spark, tmp_path):
                 .dtypes)["n"] == "int"
 
 
-def test_widen_dsv2_reader_casts(spark, tmp_path, push):
+@pytest.mark.parametrize("reader", ["batch", "cdf_stream"])
+def test_widen_dsv2_reader_casts(spark, tmp_path, push, reader):
     df = (spark.range(0, 100)
           .select(F.col("id"),
                   (F.col("id") % 4).cast("string").alias("pt"),
                   (F.col("id") * 2).cast("int").alias("n"))
           .repartition(F.col("pt")))
+    if reader == "cdf_stream":
+        _widen_then_stream_change_feed(spark, tmp_path, df)
+        return
     t = ManifestTable.create(df, str(tmp_path / "wd"), ts="pt")
     t.widen_column("n", "bigint")
     got = spark.read.format("manifest").load(t.root)
     assert dict(got.dtypes)["n"] == "bigint"
     assert got.agg(F.sum("n")).collect()[0][0] == \
         sum(i * 2 for i in range(100))
+
+
+def _widen_then_stream_change_feed(spark, tmp_path, df):
+    """The change feed of a widened table: an int append's change
+    set predates the widen, so the CDF reader must upcast it like the
+    batch reader does, or the bigint column reaches Spark as int."""
+    t = ManifestTable.create(df.where("id < 40"), str(tmp_path / "wc"),
+                             ts="pt")
+    t.append(df.where("id >= 40 AND id < 70"), cdf=True)
+    t.widen_column("n", "bigint")
+    t.append(df.where("id >= 70").withColumn("n", F.col("n")
+                                             .cast("bigint")), cdf=True)
+    sink = str(tmp_path / "sink")
+    q = (spark.readStream.format("manifest")
+         .option("readChangeFeed", "true").option("startingVersion", 1)
+         .load(t.root)
+         .writeStream.format("parquet").option("path", sink)
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    assert q.exception() is None, q.exception()
+    got = spark.read.parquet(sink)
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert got.count() == 60
+    assert got.agg(F.sum("n")).collect()[0][0] == \
+        sum(i * 2 for i in range(40, 100))
 
 
 def test_widen_validation(spark, t):

@@ -312,3 +312,144 @@ def test_evolved_nested_columns_type_through_dsv2(spark, pushdown):
     assert row["props"] == {"k": 205}
     assert row["meta"]["a"] == 205 and row["meta"]["b"] == "x"
     assert got.where(F.col("meta").isNotNull()).count() == 10
+
+
+# -- one plan behind every reader ----------------------------------------
+
+
+def _reader(root):
+    """The batch reader exactly as ``reader()`` builds it for a live
+    read, driven in-process: ``partitions()`` plans on the driver and
+    ``read()`` yields the Arrow batches an executor task would."""
+    from stock_market_data_pipeline_spark.manifest_datasource import (
+        ManifestReader)
+
+    body = ManifestTable(root, None)._raw()
+    return ManifestReader(root, body["schema"], None,
+                          colmap=body.get("colmap"), pack=0)
+
+
+def _rows(rdr, parts):
+    return sorted(tuple(r.values()) for p in parts
+                  for b in rdr.read(p) for r in b.to_pylist())
+
+
+def test_batch_plan_reads_one_snapshot(spark, monkeypatch):
+    """A commit landing while the batch reader plans must not tear
+    the plan: files and DV sidecars come from ONE commit object.  The
+    racing commit is a dv-mode merge of 30 of 300 keys — a plan that
+    took its files after it but its DV map before would resurrect
+    the 30 superseded rows (330 rows)."""
+    root = tempfile.mkdtemp(prefix="mds_torn_")
+    df = (spark.range(0, 300)
+          .select(F.col("id"),
+                  (F.col("id") % 3).cast("string").alias("pt"),
+                  (F.col("id") * 2).alias("v")))
+    t = ManifestTable.create(df, root, ts="pt")
+    rdr = _reader(root)
+    real, raced = ManifestTable.scan_plan, []
+
+    def racing(self, *a, **k):
+        if not raced:
+            raced.append(True)
+            t.merge(spark, df.where("id < 30")
+                    .withColumn("v", F.col("v") + 1), keys=["id"],
+                    mode="dv")
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(ManifestTable, "scan_plan", racing)
+    got = _rows(rdr, rdr.partitions())
+    monkeypatch.undo()
+    assert raced and len(got) == 300
+    assert got == sorted(tuple(r) for r in t.read(spark).collect())
+
+
+def test_batch_point_read_opens_its_shard_once(spark, monkeypatch):
+    root, t = _table(spark, n=300, dv=False)
+    rdr = _reader(root)
+    rdr.where = {"pt": ["3"]}
+    opened, real = [], ManifestTable._entries
+
+    def counting(self, mf, value):
+        opened.append(value)
+        return real(self, mf, value)
+
+    monkeypatch.setattr(ManifestTable, "_entries", counting)
+    parts = rdr.partitions()
+    monkeypatch.undo()
+    assert parts and opened == ["3"]
+
+
+def _layout(spark, kind, tmp):
+    """One table per reconciliation layout the DSv2 reader must
+    agree with the JVM read on."""
+    import os
+
+    def frame(lo, hi, v="v", vtype="bigint"):
+        return (spark.range(lo, hi)
+                .select(F.col("id"),
+                        (F.col("id") % 4).cast("string").alias("pt"),
+                        (F.col("id") * 2).cast(vtype).alias(v))
+                .repartition(F.col("pt")))
+
+    root = os.path.join(tmp, kind)
+    if kind == "added_column":
+        t = ManifestTable.create(frame(0, 80), root, ts="pt")
+        t.add_columns([("w", "double")])
+        t.append(frame(80, 100).withColumn("w", F.col("id") / 2))
+    elif kind == "renamed_column":
+        t = ManifestTable.create(frame(0, 80), root, ts="pt")
+        t.rename_column("v", "value")
+        t.append(frame(80, 100, v="value"))
+    elif kind == "widened_column":
+        t = ManifestTable.create(frame(0, 80, vtype="int"), root,
+                                 ts="pt")
+        t.widen_column("v", "bigint")
+        t.append(frame(80, 100))
+    elif kind == "adopted_dirs":
+        frame(0, 80).write.partitionBy("pt").parquet(root)
+        t = ManifestTable.adopt(spark, root, ts="pt")
+        # hive inference types the directory column int
+        t.append(frame(80, 100)
+                 .withColumn("pt", F.col("pt").cast("int"))
+                 .select("id", "v", "pt"))
+    elif kind == "hidden_evolved":
+        days = (spark.range(0, 90)
+                .select(F.col("id"),
+                        F.date_add(F.lit("2024-01-01").cast("date"),
+                                   F.col("id").cast("int")).alias("d")))
+        t = ManifestTable.create(days.where("id < 60"), root, "d",
+                                 partition="month")
+        t.evolve_partition("days")
+        t.append(days.where("id >= 60"))
+    elif kind == "dv_merge":
+        t = ManifestTable.create(frame(0, 100), root, ts="pt")
+        t.delete_where(spark, F.expr("pmod(id, 7) = 0"), mode="dv")
+        t.merge(spark, frame(90, 110).withColumn("v", F.lit(-2)
+                                                 .cast("bigint")),
+                keys=["id"], mode="dv")
+    else:                                      # shallow_clone
+        src = ManifestTable.create(frame(0, 100), root + "_src",
+                                   ts="pt")
+        t = src.clone(root)
+        t.delete_where(spark, F.expr("pmod(id, 5) = 0"), mode="dv")
+        t.append(frame(100, 120))
+    return t
+
+
+@pytest.mark.parametrize("kind", [
+    "added_column", "renamed_column", "widened_column", "adopted_dirs",
+    "hidden_evolved", "dv_merge", "shallow_clone"])
+def test_dsv2_read_matches_jvm_read(spark, pushdown, tmp_path, kind):
+    """JVM-vs-DSv2 parity: ``read()`` (the JVM parquet path) and the
+    ``format("manifest")`` Python reader — packed by default and one
+    task per file — return the same typed rows on every layout."""
+    t = _layout(spark, kind, str(tmp_path))
+    want = t.read(spark)
+    key = sorted(tuple(r) for r in want.collect())
+    assert key
+    for pack in ("auto", "0"):
+        got = (spark.read.format("manifest")
+               .option("packFiles", pack).load(t.root))
+        assert got.dtypes == want.dtypes, pack
+        assert sorted(tuple(r) for r in got.collect()) == key, pack

@@ -191,6 +191,33 @@ def test_sql_merge_equals_dataframe_merge(spark, t, tmp_path):
     assert any(r[-1] == "insert" for r in ca)
 
 
+def test_sql_merge_through_path_string_keeps_partitioning(spark,
+                                                        tmp_path):
+    """A table named by its ROOT PATH opens as a plain
+    ``ManifestTable(root, None)`` handle; its MERGE must still stage
+    under the committed partition column — not commit ``ts: None``
+    and an ``__all`` partition holding duplicates of matched keys."""
+    root = str(tmp_path / "bars")
+    t = ManifestTable.create(_frame(spark, 0, 30), root, ts="pt")
+    manifest_sql(
+        spark,
+        "MERGE INTO bars USING (SELECT id, CAST(id % 4 AS STRING) AS "
+        "pt, id * 5.0 AS v FROM range(0, 30)) AS s ON bars.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+        {"bars": root})
+    mf = t._raw()
+    assert mf["ts"] == "pt"
+    assert sorted(mf["partitions"]) == ["0", "1", "2", "3"]
+    got = t.read(spark)
+    assert got.count() == 30
+    assert got.where(F.col("v") == F.col("id") * 5.0).count() == 30
+    # a handle declaring a different column than the committed one
+    # refuses, the rule the DSv2 writer applies to option("ts")
+    with pytest.raises(ValueError, match="partition column"):
+        ManifestTable(root, "v").ts
+
+
 def test_sql_merge_subquery_source_and_delete_clause(spark, t):
     out = manifest_sql(
         spark,

@@ -313,3 +313,35 @@ def test_plan_backfill_runs_matches_executed_walk(spark):
     assert runs == len(sched)
     # full-snapshot replay (starting_version=0) plans as ONE run
     assert plan_backfill_runs(root, step_files=8) == [t.version()]
+
+
+def test_incremental_batch_opens_only_changed_shards(spark, monkeypatch):
+    """A micro-batch costs O(changed partitions): two files appended
+    to 1 of 40 partitions open that partition's old and new shards
+    (the append-only check and the diff), never the other 39 — not
+    even to size the files for packing."""
+    from stock_market_data_pipeline_spark.manifest_datasource import (
+        ManifestStreamReader)
+
+    root = tempfile.mkdtemp(prefix="ms_shards_")
+    t = ManifestTable.create(
+        spark.range(0, 400).select(
+            F.col("id"), (F.col("id") % 40).cast("string").alias("pt")),
+        root, ts="pt")
+    for lo in (1000, 2000):                         # v2, v3
+        t.append(spark.range(lo, lo + 5)
+                 .select(F.col("id"), F.lit("7").alias("pt")))
+    rdr = ManifestStreamReader(root, t._raw()["schema"], {})
+    opened, real = [], ManifestTable._entries
+
+    def counting(self, mf, value):
+        opened.append(value)
+        return real(self, mf, value)
+
+    monkeypatch.setattr(ManifestTable, "_entries", counting)
+    parts = rdr.partitions({"version": 1}, {"version": 3})
+    monkeypatch.undo()
+    assert len(opened) <= 4 and set(opened) == {"7"}
+    got = sorted(r["id"] for p in parts for b in rdr.read(p)
+                 for r in b.to_pylist())
+    assert got == [*range(1000, 1005), *range(2000, 2005)]
