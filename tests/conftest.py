@@ -21,15 +21,26 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
 
+def _test_parallelism() -> str:
+    """Tasks per shuffle / local frame for the test session: one per
+    core, at most 8.  The fixtures are tiny, so every extra task is
+    pure scheduling overhead; on a 4-core host 8 tasks run as two
+    waves per stage."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    n = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
+    return str(max(1, min(8, n)))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from stock_market_data_pipeline_spark.session import get_spark
 
+    par = _test_parallelism()
     s = get_spark("tests", extra_conf={
-        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.shuffle.partitions": par,
         "spark.driver.memory": "8g",
-        "spark.default.parallelism": "8",
-        "spark.sql.leafNodeDefaultParallelism": "8",
+        "spark.default.parallelism": par,
+        "spark.sql.leafNodeDefaultParallelism": par,
         "spark.local.dir": "/dev/shm/sparktests/spark-local",
     })
     yield s
