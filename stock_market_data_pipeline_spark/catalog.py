@@ -3656,47 +3656,61 @@ from . import catalog_tpch  # noqa: E402,F401  (TPC-H q4/q7/q8/q13/q15/q16/q18/q
 # entries; VERDICT r12 "Next round" #1 mandated encoding the real
 # achievable schedule).
 
-# -- round 16 window (generated by tools/gen_driver_window.py) --
-# group 0: no changed-entry front group at round start;
-# group 1: the round-16 registrations (manifest_adopt_parquet,
-#   manifest_join_plan, manifest_range_broadcast,
-#   manifest_backfill_sized, manifest_compact_plan), never
-#   driver-green, fronted;
-# group 2: the stalest previously-green entries — the full r12
-#   cohort at the ceil(189/50)=4 bound (the relational / TPC-H /
-#   events-streaming / LLM-text families: tpch_q1/q3/q5,
-#   sessionize_events, stream_hourly_rollup, cube_order_stats,
-#   pairwise_correlation, dedup_simhash, mm_decode_png, ...) plus
-#   the next-stalest r13 survivors, FIFO by registration.
+# -- round 18 window (generated by tools/gen_driver_window.py) --
+# Rebuild this list after every round that adds a CORRECTNESS_r*.json:
+# a reused window re-checks the same cohort and ages the one outside
+# it past the ceil(194/50)=4 bound.
+# group 0: the six entries whose DSv2 read path changed since they
+#   were last driver-green (scan_plan's per-file records are now the
+#   one file plan, _file_partitions the one planner, _conform the one
+#   Arrow reconciliation), fronted so the driver re-proves them:
+#   datasource_manifest_scan (batch pushdown plan through scan_plan),
+#   manifest_sql_select (SQL view over the same batch reader),
+#   stream_manifest_source (stream micro-batches planned from
+#   added-file records), stream_backfill_chunked (stepped
+#   endingVersion runs through that stream planner),
+#   manifest_time_travel (versionAsOf/tag plans pin the one snapshot
+#   scan_plan reads) and manifest_adopt_parquet (the adopted-dir fill
+#   moved into manifest.py and is applied by _conform);
+# group 1: none — every entry has a driver-green row;
+# group 2: the stalest previously-green entries — all 44 last green at
+#   r13 (fct_trading_momentum_valid, agg_daily_market_breadth,
+#   dim_securities_current, 18 manifest_*/datasink_*/serving_*
+#   storage entries, 5 text/sketch/embedding entries and 18 TPC-H
+#   queries), FIFO by registration.
+# The six r14 entries this pushes out sit at age 4, within the bound.
 _DRIVER_WINDOW_FIRST = [
-    "manifest_adopt_parquet", "manifest_join_plan",
-    "manifest_range_broadcast", "manifest_backfill_sized",
-    "manifest_compact_plan", "screener_filter", "pairwise_correlation",
-    "tpch_q1_pricing_summary", "tpch_q3_topk_revenue",
-    "tpch_q5_local_supplier", "dedup_ngram_jaccard", "dedup_simhash",
-    "text_lang_id", "dedup_survivors_by_quality", "sample_hash_split",
-    "text_boilerplate_segments", "mm_payload_features",
-    "mm_payload_grid", "dedup_embedding_cosine",
-    "benchmark_contamination", "stratified_balance_lang",
-    "docs_length_band_filter", "docs_unigram_logprob", "mm_decode_png",
-    "stream_hourly_rollup", "stream_upsert_rollup",
-    "stream_stateful_user_totals", "datasource_grouped_daily",
-    "stream_interval_join", "sessionize_events",
-    "events_hopping_counts", "events_json_props",
-    "stream_dedup_events", "asof_prior_view",
-    "cumulative_distinct_users", "session_funnel",
-    "session_window_native", "stream_session_windows",
-    "pivot_priority_year", "cube_order_stats", "histogram_prices",
-    "band_range_join", "quantiles_by_brand", "except_intersect_keys",
-    "bucketed_join_revenue", "bars_ohlcv", "constituents_snapshots",
-    "universe_daily", "fct_trading_momentum", "constituents_diff",
+    "datasource_manifest_scan", "manifest_sql_select",
+    "stream_manifest_source", "stream_backfill_chunked",
+    "manifest_time_travel", "manifest_adopt_parquet",
+    "fct_trading_momentum_valid", "manifest_momentum_merge",
+    "manifest_pruned_scan", "serving_manifest_ticker_range",
+    "manifest_zorder_scan", "manifest_cdf_rows",
+    "manifest_merge_delete", "manifest_zorder_mixed",
+    "agg_daily_market_breadth", "dim_securities_current",
+    "text_boilerplate_scrub", "embedding_kmeans_clusters",
+    "sketch_hll_daily_users", "manifest_constraints",
+    "manifest_clone_scan", "manifest_analyze_stats",
+    "manifest_join_pruning", "text_search_scan",
+    "manifest_hidden_partitioning", "manifest_bucket_transform",
+    "manifest_partition_evolution", "datasink_evolved_write",
+    "manifest_sql_merge", "manifest_sql_dml",
+    "manifest_analyze_incremental", "sketch_cms_key_skew",
+    "tpch_q4_priority_semijoin", "tpch_q7_volume_shipping",
+    "tpch_q8_market_share", "tpch_q13_order_distribution",
+    "tpch_q15_top_supplier", "tpch_q16_supplier_cnt",
+    "tpch_q18_large_orders", "tpch_q19_disjunctive_rev",
+    "tpch_q22_anti_join", "tpch_q17_small_qty_revenue",
+    "tpch_q20_excess_suppliers", "tpch_q21_waiting_suppliers",
+    "tpch_q6_forecast_revenue", "tpch_q14_promo_effect",
+    "tpch_q10_returned_items", "tpch_q9_product_profit",
+    "tpch_q11_important_stock", "tpch_q2_min_cost_supplier",
 ]
 
-#: never-green overflow ledger (FIFO).  EMPTY this round: the 50
-#: slots hold the new registrations plus the full r12-stale
-#: cohort and the next-stalest r13 survivors, and every outside
-#: entry sits within the ceil(194/50)=4 staleness bound at round-16
-#: accounting.
+#: never-green overflow ledger (FIFO).  EMPTY this round: no entry
+#: lacks a driver-green row, the 50 slots hold the six changed
+#: entries plus the full r13 cohort, and every outside entry sits
+#: within the ceil(194/50)=4 staleness bound at round-18 accounting.
 _DRIVER_WINDOW_DEFERRED: list[str] = [
 ]
 

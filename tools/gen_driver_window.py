@@ -70,7 +70,9 @@ def main(changed: list[str]) -> None:
     offenders = {n: a for n, a in worst.items() if a > bound}
     print(f"# entries={len(names)} window={WINDOW} "
           f"bound=ceil(N/50)={bound} round={cur}")
-    print(f"# never-green={len(never) + len(changed and [])} "
+    # a changed entry is fronted, not dropped from the never-green count
+    never_green = len(never) + sum(c not in last for c in changed)
+    print(f"# never-green={never_green} "
           f"in-window={len(window)} deferred={len(deferred_never)}")
     if offenders:
         print(f"# !! STALENESS OFFENDERS (age > {bound}): {offenders}")
