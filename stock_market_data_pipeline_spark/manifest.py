@@ -2111,8 +2111,8 @@ class ManifestTable:
         rows = [(n, c["kind"], c.get("col"),
                  self._constraint_pred(c))
                 for n, c in sorted(self.constraints_spec().items())]
-        return spark.createDataFrame(
-            rows, schema="name string, kind string, column string, "
+        return local_frame(
+            spark, rows, "name string, kind string, column string, "
                          "predicate string")
 
     def set_bloom(self, cols: list[str], m: int = 1 << 16,
@@ -2903,8 +2903,8 @@ class ManifestTable:
                  int(r.get("dv_rows", 0)), int(r["bytes"]),
                  len(r.get("dv", [])))
                 for v, r in sorted(mf["partitions"].items())]
-        return spark.createDataFrame(
-            rows, schema="partition string, files bigint, "
+        return local_frame(
+            spark, rows, "partition string, files bigint, "
                          "live_rows bigint, deleted_rows bigint, "
                          "bytes bigint, dv_files int")
 
@@ -2923,8 +2923,8 @@ class ManifestTable:
                  _json.dumps(e["stats"], sort_keys=True, default=str))
                 for v in sorted(mf["partitions"])
                 for e in self._entries(mf, v)]
-        return spark.createDataFrame(
-            rows, schema="partition string, path string, rows bigint, "
+        return local_frame(
+            spark, rows, "partition string, path string, rows bigint, "
                          "bytes bigint, stats_json string")
 
     def meta_snapshots(self, spark: SparkSession) -> DataFrame:
@@ -2935,8 +2935,8 @@ class ManifestTable:
                  h.get("committed_at"),
                  int(h["partitions"]), int(h["files"]), int(h["rows"]))
                 for h in self.history()]
-        return spark.createDataFrame(
-            rows, schema="version bigint, manifest string, "
+        return local_frame(
+            spark, rows, "version bigint, manifest string, "
                          "committed_at double, "
                          "partitions bigint, files bigint, rows bigint")
 
@@ -2954,8 +2954,8 @@ class ManifestTable:
                          int(b["base"]), int(b["commits"])))
         for name, t in sorted(self.tags().items()):
             rows.append((name, "tag", int(t["version"]), None, None))
-        return spark.createDataFrame(
-            rows, schema="name string, type string, version bigint, "
+        return local_frame(
+            spark, rows, "name string, type string, version bigint, "
                          "base bigint, commits bigint")
 
     def detail(self, spark: SparkSession) -> DataFrame:
@@ -2986,8 +2986,8 @@ class ManifestTable:
             len(mf.get("constraints") or {}),
             len(mf.get("retired") or []),
         )]
-        return spark.createDataFrame(
-            rows, schema="format string, location string, "
+        return local_frame(
+            spark, rows, "format string, location string, "
                          "partition_column string, version bigint, "
                          "committed_at double, created_at double, "
                          "num_partitions bigint, num_files bigint, "
@@ -5237,8 +5237,8 @@ class ManifestTable:
                 None if s is None else bool(s.get("hll")),
                 None if s is None else bool(s.get("cms")),
                 None if s is None else bool(s.get("ddq"))))
-        return spark.createDataFrame(
-            rows, schema="column string, dtype string, ndv bigint, "
+        return local_frame(
+            spark, rows, "column string, dtype string, ndv bigint, "
                          "nulls bigint, vmin string, vmax string, "
                          "analyzed_version bigint, stale boolean, "
                          "has_hll boolean, has_cms boolean, "

@@ -1522,113 +1522,12 @@ class ManifestDataSource(DataSource):
                                     pt=pt, ts_dtype=ts_dtype)
 
 
-_TT_RE = re.compile(
-    r"\b(FROM|JOIN)\s+([A-Za-z_][\w]*)\s+VERSION\s+AS\s+OF\s+(\d+)",
-    re.IGNORECASE)
-_TTS_RE = re.compile(
-    r"\b(FROM|JOIN)\s+([A-Za-z_][\w]*)\s+TIMESTAMP\s+AS\s+OF\s+"
-    r"'([^']+)'",
-    re.IGNORECASE)
-_TABLE_CHANGES_RE = re.compile(
-    r"\btable_changes\s*\(\s*'([A-Za-z_]\w*)'\s*,\s*(\d+)\s*"
-    r"(?:,\s*(\d+)\s*)?\)",
-    re.IGNORECASE)
-_META_TABLE_RE = re.compile(
-    r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)\.(partitions|files|history|"
-    r"refs|column_stats|detail)\b",
-    re.IGNORECASE)
-
-
-def _literal_spans(text: str) -> list:
-    """[start, end) spans of quoted SQL string literals in ``text``
-    — single-quoted ('' escapes) and double-quoted ("" escapes;
-    Spark's default dialect reads ``"..."`` as a string literal too,
-    and under ANSI double-quoted-identifier mode a quoted identifier
-    is never our unquoted grammar, so masking both is safe either
-    way).  Backslash escapes are honored (Spark's default parser,
-    ``escapedStringLiterals=false``, reads ``\\'`` as an escaped
-    quote INSIDE the literal — ending the span there would unmask
-    the literal's tail and let a rewriter rewrite text the parser
-    treats as data).  Under ``escapedStringLiterals=true`` a
-    backslash is a plain character and ``\\'`` genuinely ends the
-    literal — there the longer span merely masks a few extra
-    characters, which can only make the rewriters MORE conservative,
-    never rewrite inside a literal.  An unterminated literal runs to
-    the end of the string — the rewriters must stay out of it either
-    way."""
-    spans = []
-    i, n = 0, len(text)
-    while i < n:
-        q = text[i]
-        if q not in ("'", '"'):
-            i += 1
-            continue
-        j = i + 1
-        while j < n:
-            if text[j] == "\\" and j + 1 < n:
-                j += 2              # escaped char: stays in-literal
-                continue
-            if text[j] == q:
-                if j + 1 < n and text[j + 1] == q:
-                    j += 2
-                    continue
-                break
-            j += 1
-        end = j + 1 if j < n else n
-        spans.append((i, end))
-        i = end
-    return spans
-
-
-def _sub_outside_literals(regex, fn, text: str) -> str:
-    """``regex.sub(fn, text)`` with matches that START inside a
-    single-quoted literal left verbatim — the ONE masking helper for
-    all four read rewriters (ADVICE r15 #4: a literal containing
-    ``FROM bars.files`` must never register a stray temp view or have
-    its content rewritten).  Start-position guarding suffices: every
-    rewriter's match begins at a keyword/function name, and those
-    regexes cannot begin outside a literal yet extend into one (an
-    identifier char run never crosses a quote)."""
-    spans = _literal_spans(text)
-
-    def guarded(m):
-        s = m.start()
-        if any(a <= s < b for a, b in spans):
-            return m.group(0)
-        return fn(m)
-
-    return regex.sub(guarded, text)
-
-# -- SQL DDL over registered manifest tables (VERDICT r13 #4) --------
-_ALTER_ADD_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+ADD\s+COLUMNS?\s*"
-    r"\(\s*(.*?)\s*\)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_ALTER_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+RENAME\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s+TO\s+([A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE)
-_ALTER_DROP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+DROP\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE)
-_ALTER_TYPE_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s+TYPE\s+([A-Za-z_]\w*(?:\s*\(\s*\d+\s*"
-    r"(?:,\s*\d+\s*)?\))?)\s*;?\s*$",
-    re.IGNORECASE)
-_ALTER_ADD_CHECK_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+ADD\s+CONSTRAINT\s+"
-    r"([A-Za-z_]\w*)\s+CHECK\s*\((.*)\)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_ALTER_DROP_CON_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+DROP\s+CONSTRAINT\s+"
-    r"([A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE)
-_ALTER_NOT_NULL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+ALTER\s+COLUMN\s+"
-    r"([A-Za-z_]\w*)\s+SET\s+NOT\s+NULL\s*;?\s*$",
-    re.IGNORECASE)
+# -- SQL over registered manifest tables -----------------------------
+#
+# Spark's own parser reads every statement but six Delta-only verbs,
+# which it rejects (OPTIMIZE, VACUUM, RESTORE, CONVERT) or misparses
+# (``DESCRIBE HISTORY t`` is a column describe of a table HISTORY).
+# Those six keep a keyword dispatch.
 _OPTIMIZE_RE = re.compile(
     r"^\s*OPTIMIZE\s+([A-Za-z_]\w*)"
     r"(?:\s+WHERE\s+([A-Za-z_]\w*)\s*(?:=\s*'([^']*)'"
@@ -1641,171 +1540,87 @@ _VACUUM_RE = re.compile(
     r"(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS)?"
     r"(?:\s+(DRY\s+RUN))?\s*;?\s*$",
     re.IGNORECASE)
-_ANALYZE_RE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+([A-Za-z_]\w*)\s+COMPUTE\s+STATISTICS"
-    r"(?:\s+FOR\s+COLUMNS\s+([A-Za-z_]\w*"
-    r"(?:\s*,\s*[A-Za-z_]\w*)*))?\s*;?\s*$",
-    re.IGNORECASE)
 _HISTORY_RE = re.compile(
     r"^\s*DESCRIBE\s+HISTORY\s+([A-Za-z_]\w*)\s*;?\s*$",
     re.IGNORECASE)
 _DETAIL_RE = re.compile(
     r"^\s*DESCRIBE\s+DETAIL\s+([A-Za-z_]\w*)\s*;?\s*$",
     re.IGNORECASE)
-_DROP_TABLE_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:(IF\s+EXISTS)\s+)?([A-Za-z_]\w*)"
-    r"\s*;?\s*$",
-    re.IGNORECASE)
 _RESTORE_RE = re.compile(
     r"^\s*RESTORE\s+TABLE\s+([A-Za-z_]\w*)\s+TO\s+"
     r"(?:VERSION\s+AS\s+OF\s+(\d+)"
     r"|TIMESTAMP\s+AS\s+OF\s+'([^']+)')\s*;?\s*$",
     re.IGNORECASE)
-_CREATE_EMPTY_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+([A-Za-z_]\w*)\s*"
-    r"\(\s*(.*?)\s*\)\s*"
-    r"(?:PARTITIONED\s+BY\s*\(\s*([A-Za-z_]\w*)\s*\)\s*)?;?\s*$",
-    re.IGNORECASE | re.DOTALL)
 _CONVERT_RE = re.compile(
     r"^\s*CONVERT\s+TO\s+MANIFEST\s+([A-Za-z_]\w*)\s*"
     r"(?:PARTITIONED\s+BY\s*\(\s*([A-Za-z_]\w*)\s*\)\s*)?;?\s*$",
     re.IGNORECASE)
+# the verb a statement leads with, after any comments
+_VERB_RE = re.compile(
+    r"(?:\s+|--[^\n]*|/\*.*?\*/)*"
+    r"(OPTIMIZE|VACUUM|RESTORE\s+TABLE|DESCRIBE\s+(?:HISTORY|DETAIL)"
+    r"|CONVERT\s+TO\s+MANIFEST)\b", re.IGNORECASE | re.DOTALL)
 
 
-def _run_ddl(spark, query: str, mts: dict):
-    """Rewrite one ``ALTER TABLE`` statement onto the manifest
-    table's metadata-only schema-lifecycle API (VERDICT r13 "Next
-    round" #4 — SQL-first users should never have to drop to the
-    Python API for schema changes).  Supported forms, each ONE
-    metadata commit and zero data I/O:
+def _require(mts: dict, name: str, verb: str):
+    if name not in mts:
+        raise KeyError(f"{verb} target {name!r} not in tables — pass "
+                       f"its root path")
+    return mts[name]
 
-    - ``ALTER TABLE t ADD COLUMNS (c1 type1, c2 type2)`` (also the
-      singular ``ADD COLUMN``) -> :meth:`ManifestTable.add_columns`
-      — re-added dropped names map to fresh physicals there;
-    - ``ALTER TABLE t RENAME COLUMN a TO b`` ->
-      :meth:`ManifestTable.rename_column`;
-    - ``ALTER TABLE t DROP COLUMN c`` ->
-      :meth:`ManifestTable.drop_column`;
-    - ``ALTER TABLE t ALTER COLUMN c TYPE w`` ->
-      :meth:`ManifestTable.widen_column` (safe widenings only — a
-      lossy retype raises exactly like the Python API);
-    - ``ALTER TABLE t ADD CONSTRAINT n CHECK (expr)`` ->
-      :meth:`ManifestTable.add_check` (validates existing rows
-      first, one filtered read — the only non-metadata-only form);
-    - ``ALTER TABLE t DROP CONSTRAINT n`` ->
-      :meth:`ManifestTable.drop_constraint`;
-    - ``ALTER TABLE t ALTER COLUMN c SET NOT NULL`` ->
-      :meth:`ManifestTable.set_not_null`.
 
-    Utility statements (the Delta operational surface, same literal
-    spellings):
+def _registered(spark, t, name: str):
+    """Re-register ``t``'s session view (a follow-up SELECT serves the
+    new state) and return the one-row ``(table_name, version)``
+    result frame."""
+    from .session import local_frame
+
+    t.register(spark, name)
+    return local_frame(spark, [(name, t.version())],
+                       "table_name string, version long")
+
+
+def _run_verb(spark, query: str, mts: dict):
+    """The six Delta-only statements Spark's parser cannot read, by
+    keyword:
 
     - ``OPTIMIZE t [WHERE pt = 'v' | WHERE pt IN ('a','b')]
-      [ZORDER BY (c, ...)]`` -> :meth:`compact` — the WHERE form is
-      Delta's partition-bounded maintenance (partition predicates
-      only; anything else raises rather than degrade to a full
-      rewrite); returns (partitions_compacted, files_before,
-      files_after);
-    - ``VACUUM t [RETAIN n HOURS] [DRY RUN]`` -> :meth:`vacuum` —
+      [ZORDER BY (c, ...)]`` -> :meth:`compact`, partition-bounded
+      under WHERE (the partition column only; anything else raises
+      rather than degrade to a full rewrite); returns
+      (partitions_compacted, files_before, files_after);
+    - ``VACUUM t [RETAIN n HOURS] [DRY RUN]`` -> :meth:`vacuum`;
       returns the removed (or would-remove) paths;
-    - ``ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS a, b]`` ->
-      :meth:`analyze` (approx/HLL mode — the 100 TB default) —
-      returns the per-column stats frame;
-    - ``DESCRIBE HISTORY t`` -> :meth:`meta_snapshots`;
-    - ``DESCRIBE DETAIL t`` -> :meth:`detail` (Delta's one-row
-      summary — commit-object reads only);
-    - ``CONVERT TO MANIFEST t [PARTITIONED BY (col)]`` ->
-      :meth:`ManifestTable.adopt` — zero-copy adoption of the
-      existing parquet lake at t's root (Delta's ``CONVERT TO
-      DELTA`` spelling): one metadata commit, no data I/O;
-    - ``DROP TABLE [IF EXISTS] t`` -> :meth:`drop` — removes the
-      table root irreversibly and unbinds the session view;
     - ``RESTORE TABLE t TO VERSION AS OF n`` / ``TO TIMESTAMP AS OF
-      '<iso>'`` -> :meth:`restore` (the timestamp resolves through
-      ``version_at`` exactly like a time-travel read).
+      '<iso>'`` -> :meth:`restore`, the timestamp resolved through
+      ``version_at`` like a time-travel read;
+    - ``DESCRIBE HISTORY t`` -> :meth:`meta_snapshots`;
+    - ``DESCRIBE DETAIL t`` -> :meth:`detail`;
+    - ``CONVERT TO MANIFEST t [PARTITIONED BY (col)]`` ->
+      :meth:`ManifestTable.adopt`, zero-copy adoption of the parquet
+      lake at t's root (Delta's ``CONVERT TO DELTA``).
 
-    The table's session view re-registers after a schema change so a
-    follow-up ``SELECT`` in the same session serves the new schema.
-    Returns a result frame, or None when ``query`` is not DDL."""
-    def done(t, name):
-        t.register(spark, name)
-        return spark.createDataFrame([(name, t.version())],
-                                     "table_name string, version long")
+    Returns the result frame, or None when ``query`` leads with none
+    of the six verbs.  A statement that leads with one but matches no
+    form raises here with its text: Spark would only report a parse
+    error on a verb it does not know."""
+    from .session import local_frame
 
-    def require(name, verb):
-        if name not in mts:
-            raise KeyError(f"{verb} target {name!r} not in tables")
-        return mts[name]
-
-    def parse_cols(collist, what):
-        cols = []
-        for term in re.split(r",(?![^()]*\))", collist):
-            parts = term.strip().split(None, 1)
-            if len(parts) != 2:
-                raise ValueError(
-                    f"{what} {term.strip()!r}: expected 'name type'")
-            cols.append((parts[0], re.sub(r"\s+", "",
-                                          parts[1].lower())))
-        return cols
-
-    m = _ALTER_ADD_RE.match(query)
-    if m:
-        name, collist = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.add_columns(parse_cols(collist, "ADD COLUMNS term"))
-        return done(t, name)
-    m = _ALTER_RENAME_RE.match(query)
-    if m:
-        name, old, new = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.rename_column(old, new)
-        return done(t, name)
-    m = _ALTER_DROP_RE.match(query)
-    if m:
-        name, col = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.drop_column(col)
-        return done(t, name)
-    m = _ALTER_TYPE_RE.match(query)
-    if m:
-        name, col, new_type = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.widen_column(col, re.sub(r"\s+", "", new_type))
-        return done(t, name)
-    m = _ALTER_ADD_CHECK_RE.match(query)
-    if m:
-        name, cname, expr = m.groups()
-        t = require(name, "ALTER TABLE")
-        # Delta's ADD CONSTRAINT: validates existing rows (one
-        # filtered read), then enforces on every later write
-        t.add_check(spark, cname, expr.strip())
-        return done(t, name)
-    m = _ALTER_DROP_CON_RE.match(query)
-    if m:
-        name, cname = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.drop_constraint(cname)
-        return done(t, name)
-    m = _ALTER_NOT_NULL_RE.match(query)
-    if m:
-        name, col = m.groups()
-        t = require(name, "ALTER TABLE")
-        t.set_not_null(spark, col)
-        return done(t, name)
-    m = _OPTIMIZE_RE.match(query)
+    verb = _VERB_RE.match(query)
+    if verb is None:
+        return None
+    head = query[verb.start(1):]
+    m = _OPTIMIZE_RE.match(head)
     if m:
         name, wcol, wval, winlist, zcols = m.groups()
-        t = require(name, "OPTIMIZE")
+        t = _require(mts, name, "OPTIMIZE")
         z = ([c.strip() for c in zcols.split(",")] if zcols
              else None)
         parts = None
         if wcol is not None:
-            # Delta's OPTIMIZE WHERE: partition predicates only —
-            # bounded maintenance is the point (compact yesterday's
-            # partition, never rescan the table); an arbitrary-column
-            # WHERE would silently degrade to a full rewrite.  (The
-            # partition column cannot be renamed — rename_column
-            # refuses it — so its stored name IS its only spelling.)
+            # partition predicates only: bounded maintenance is the
+            # point.  The partition column cannot be renamed, so its
+            # stored name is its only spelling.
             pcol = t._raw().get("ts")
             if pcol is None:
                 raise ValueError(
@@ -1821,514 +1636,623 @@ def _run_ddl(spark, query: str, mts: dict):
                      re.findall(r"'([^']*)'", winlist))
         out = t.compact(spark, zorder_by=z, partitions=parts)
         t.register(spark, name)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(name, int(out.get("partitions", 0)),
               int(out.get("files_before", 0)),
               int(out.get("files_after", 0)))],
             "table_name string, partitions_compacted long, "
             "files_before long, files_after long")
-    m = _VACUUM_RE.match(query)
+    m = _VACUUM_RE.match(head)
     if m:
         name, hours, dry = m.groups()
-        t = require(name, "VACUUM")
+        t = _require(mts, name, "VACUUM")
         retention = (float(hours) * 3600.0 if hours else 86400.0)
         removed = t.vacuum(retention_seconds=retention,
                            dry_run=bool(dry))
-        return spark.createDataFrame([(p,) for p in removed],
-                                     "path string")
-    m = _ANALYZE_RE.match(query)
+        return local_frame(spark, [(p,) for p in removed],
+                           "path string")
+    m = _HISTORY_RE.match(head)
     if m:
-        name, collist = m.groups()
-        t = require(name, "ANALYZE")
-        cols = ([c.strip() for c in collist.split(",")]
-                if collist else None)
-        # SQL has no syntax to name sketches — REBUILD whatever
-        # sketches the analyzed columns already carry (a routine
-        # maintenance statement must never silently strip the
-        # frequency/quantile capability a column had); the per-scale
-        # rebuild loop lives in ONE place, _analyze_rebuild (ADVICE
-        # r14 #1/#2 were the same defect in two copies of it)
-        out = t._analyze_rebuild(spark, cols)
-        rows = [(c, int(s["ndv"]), int(s["nulls"]),
-                 s["min"], s["max"])
-                for c, s in sorted(out["columns"].items())
-                if cols is None or c in cols]
-        return spark.createDataFrame(
-            rows, "column string, ndv long, nulls long, "
-                  "min string, max string")
-    m = _HISTORY_RE.match(query)
+        return _require(mts, m.group(1),
+                        "DESCRIBE HISTORY").meta_snapshots(spark)
+    m = _DETAIL_RE.match(head)
     if m:
-        name = m.group(1)
-        return require(name, "DESCRIBE HISTORY").meta_snapshots(spark)
-    m = _DETAIL_RE.match(query)
+        return _require(mts, m.group(1), "DESCRIBE DETAIL").detail(spark)
+    m = _CONVERT_RE.match(head)
     if m:
-        name = m.group(1)
-        return require(name, "DESCRIBE DETAIL").detail(spark)
-    m = _CONVERT_RE.match(query)
-    if m:
-        # ``CONVERT TO MANIFEST name [PARTITIONED BY (col)]`` —
-        # Delta's ``CONVERT TO DELTA`` spelling for zero-copy
-        # adoption (:meth:`ManifestTable.adopt`): the name maps to an
-        # existing parquet lake's root (the same tables-dict
-        # convention as CTAS), one metadata commit, no data I/O
-        name, part_col = m.groups()
         from .manifest import ManifestTable
 
-        t = require(name, "CONVERT TO MANIFEST")
+        name, part_col = m.groups()
+        t = _require(mts, name, "CONVERT TO MANIFEST")
         adopted = ManifestTable.adopt(spark, t.root, ts=part_col,
                                       backend=t.backend)
         mts[name] = adopted
-        return done(adopted, name)
-    m = _DROP_TABLE_RE.match(query)
+        return _registered(spark, adopted, name)
+    m = _RESTORE_RE.match(head)
     if m:
-        if_exists, name = m.groups()
-        t = require(name, "DROP TABLE")
-        # probe first: IF EXISTS may swallow ONLY "no table lives at
-        # this root" — an rmtree failure on an EXISTING table
-        # (permissions, half-deleted tree) must propagate loudly, or
-        # the statement reports success while data files remain on
-        # disk (ADVICE r15 #3)
-        missing = False
+        name, v, ts = m.groups()
+        t = _require(mts, name, "RESTORE")
+        t.restore(int(v) if v is not None else t.version_at(ts))
+        return _registered(spark, t, name)
+    raise ValueError(
+        f"unparsed maintenance statement (check quoting — "
+        f"string literals take single quotes): {query!r}")
+
+
+# -- reading a parsed plan over py4j ---------------------------------
+
+
+def _parse(spark, query: str):
+    """``query`` as Spark's unresolved logical plan (a py4j handle);
+    a syntax error raises pyspark's ``ParseException``."""
+    return spark._jsparkSession.sessionState().sqlParser() \
+        .parsePlan(query)
+
+
+def _frame(spark, plan):
+    """The DataFrame of a parsed query sub-plan (a DML source).  Built
+    from the plan, not from its text: a query's root node spans only
+    its outermost clause (``GROUP BY pt`` for an aggregate), so the
+    text cannot be sliced back out."""
+    from pyspark.sql import DataFrame
+
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, plan)
+    return DataFrame(jdf, spark)
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _span(node) -> tuple:
+    """``(start, stop)``, inclusive, of ``node``'s text in the parsed
+    statement: its own span widened to its children's, because a
+    predicate node (IN, IS NULL, LIKE, BETWEEN) spans only its own
+    clause, not the operand before it."""
+    o = node.origin()
+    start, stop = o.startIndex().get(), o.stopIndex().get()
+    if _kind(node) == "Exists":
+        # EXISTS carries its enclosing clause's span: its own text runs
+        # from the keyword before its subquery to the paren after it
+        text = o.sqlText().get()
+        first, last = _span(node.plan())
+        return text.lower().rfind("exists", 0, first), text.find(")", last)
+    for child in _seq(node.children()):
+        a, b = _span(child)
+        start, stop = min(start, a), max(stop, b)
+    return start, stop
+
+
+def _text(query: str, node) -> str:
+    start, stop = _span(node)
+    return query[start:stop + 1]
+
+
+def _splice(text: str, hits, base: int = 0) -> str:
+    """``text`` with each ``(start, stop, replacement)`` applied right
+    to left, so earlier offsets stay valid; offsets count from
+    ``base``."""
+    for start, stop, rep in sorted(hits, reverse=True):
+        text = text[:start - base] + rep + text[stop - base + 1:]
+    return text
+
+
+def _unqualified(query: str, expr, quals: set) -> str:
+    """``expr``'s text with each column qualifier in ``quals``
+    (lowercased) dropped: ``s.v > 1`` -> ```v` > 1``.  Only attribute
+    spans are rewritten, so literals come through verbatim."""
+    hits, todo = [], [expr]
+    while todo:
+        e = todo.pop()
+        if _kind(e) != "UnresolvedAttribute":
+            todo += _seq(e.children())
+            continue
+        parts = _seq(e.nameParts())
+        if len(parts) > 1 and parts[-2].lower() in quals:
+            col = parts[-1].replace("`", "``")
+            hits.append((*_span(e), f"`{col}`"))
+    start, stop = _span(expr)
+    return _splice(query[start:stop + 1], hits, base=start)
+
+
+def _name_parts(node) -> list:
+    """The identifier of the table a statement addresses: the first
+    name node down ``node``'s first-child chain."""
+    while True:
+        kind = _kind(node)
+        if kind == "UnresolvedIdentifier":
+            return _seq(node.nameParts())
+        if kind in ("UnresolvedRelation", "UnresolvedTable",
+                    "UnresolvedTableOrView"):
+            return _seq(node.multipartIdentifier())
+        node = node.children().apply(0)
+
+
+def _bound(mts: dict, parts: list):
+    """The ``tables`` key a one-part SQL name binds to, matched
+    case-insensitively as Spark resolves views, or None."""
+    if len(parts) != 1:
+        return None
+    if parts[0] in mts:
+        return parts[0]
+    return next((k for k in mts if k.lower() == parts[0].lower()),
+                None)
+
+
+def _partition_col(plan):
+    """The one identity column of a CREATE's ``PARTITIONED BY``."""
+    tf = _seq(plan.partitioning())
+    if not tf:
+        return None
+    if len(tf) > 1 or tf[0].name() != "identity":
+        raise ValueError("PARTITIONED BY takes exactly one column")
+    return list(tf[0].references()[0].fieldNames())[-1]
+
+
+# -- the read rewrites -----------------------------------------------
+
+_META_TABLES = ("partitions", "files", "history", "refs",
+                "column_stats", "detail")
+
+
+def _read_rewrites(spark, plan, mts: dict) -> list:
+    """One walk of the parsed plan, subqueries and CTE bodies
+    included: each read of a ``tables`` entry in a form Spark cannot
+    resolve registers a temp view over it and yields ``(start, stop,
+    view)``, the statement text the view's name replaces.
+
+    - ``name VERSION AS OF n`` -> the snapshot-pinned view
+      ``<name>__v<n>``; ``name TIMESTAMP AS OF '<iso>'`` -> the
+      version ``version_at`` resolves (``<name>__t<iso>``).
+    - ``table_changes('name', v1[, v2])`` -> the change feed of
+      :meth:`ManifestTable.table_changes` (``<name>__ch<v1>_<v2>``).
+    - ``name.partitions`` / ``.files`` / ``.history`` / ``.refs`` /
+      ``.column_stats`` / ``.detail`` -> the inspection frame
+      (``<name>__meta_<m>``).
+
+    Names not in ``mts`` are left for Spark to resolve."""
+    hits, todo = {}, [plan]
+    while todo:
+        node = todo.pop()
+        kind = _kind(node)
+        hit = None
+        if kind == "RelationTimeTravel":
+            hit = _time_travel(spark, node, mts)
+        elif kind == "UnresolvedTableValuedFunction":
+            hit = _table_changes(spark, node, mts)
+        elif kind == "UnresolvedRelation":
+            hit = _meta_table(spark, node, mts)
+        if hit:
+            hits[hit[0]] = hit
+        todo += _seq(node.children()) + _seq(node.innerChildren())
+    return list(hits.values())
+
+
+def _time_travel(spark, node, mts: dict):
+    rel = node.relation()
+    name = _bound(mts, _name_parts(rel))
+    if name is None:
+        return None
+    if node.version().isDefined():
+        v = int(node.version().get())
+        alias = f"{name}__v{v}"
+        mts[name].register(spark, alias, version=v)
+    else:
+        ts = node.timestamp().get()
+        if _kind(ts) != "Literal" or \
+                ts.dataType().simpleString() != "string":
+            raise ValueError(f"TIMESTAMP AS OF on {name!r} takes a "
+                             f"string literal")
+        ts = str(ts.value())
+        alias = f"{name}__t{re.sub(r'[^0-9A-Za-z]', '_', ts)}"
+        mts[name].register(spark, alias, timestamp=ts)
+    # the node spans only its AS OF clause: the replaced text runs
+    # from the name (comments between the two included)
+    return _span(rel)[0], _span(node)[1], alias
+
+
+def _table_changes(spark, node, mts: dict):
+    if [p.lower() for p in _seq(node.name())] != ["table_changes"]:
+        return None
+    args = _seq(node.functionArgs())
+    if not 2 <= len(args) <= 3 or \
+            any(_kind(a) != "Literal" for a in args):
+        return None
+    name = _bound(mts, [str(args[0].value())])
+    if name is None:
+        return None
+    v1 = int(str(args[1].value()))
+    end = int(str(args[2].value())) if len(args) == 3 else None
+    alias = f"{name}__ch{v1}_{end if end is not None else 'live'}"
+    mts[name].table_changes(spark, v1, end) \
+        .createOrReplaceTempView(alias)
+    return (*_span(node), alias)
+
+
+def _meta_table(spark, node, mts: dict):
+    parts = _seq(node.multipartIdentifier())
+    if len(parts) != 2 or parts[1].lower() not in _META_TABLES:
+        return None
+    name = _bound(mts, parts[:1])
+    if name is None:
+        return None
+    meta = parts[1].lower()
+    t = mts[name]
+    frame = {"partitions": t.meta_partitions,
+             "files": t.meta_files,
+             "history": t.meta_snapshots,
+             "refs": t.meta_refs,
+             "column_stats": t.meta_column_stats,
+             "detail": t.detail}[meta](spark)
+    alias = f"{name}__meta_{meta}"
+    frame.createOrReplaceTempView(alias)
+    return (*_span(node), alias)
+
+
+# -- statements dispatched on the parsed node ------------------------
+
+# parsed statement node -> the verb its errors name
+_STATEMENTS = {
+    "AddColumns": "ALTER TABLE", "RenameColumn": "ALTER TABLE",
+    "DropColumns": "ALTER TABLE", "AlterColumns": "ALTER TABLE",
+    "AddCheckConstraint": "ALTER TABLE",
+    "DropConstraint": "ALTER TABLE", "AnalyzeTable": "ANALYZE",
+    "AnalyzeColumn": "ANALYZE", "DropTable": "DROP TABLE",
+    "CreateTable": "CREATE TABLE", "CreateTableAsSelect": "CTAS",
+    "ReplaceTableAsSelect": "CTAS", "InsertIntoStatement": "INSERT",
+    "DeleteFromTable": "DELETE", "UpdateTable": "UPDATE",
+    "MergeIntoTable": "MERGE"}
+_DML = ("CreateTableAsSelect", "ReplaceTableAsSelect",
+        "InsertIntoStatement", "DeleteFromTable", "UpdateTable",
+        "MergeIntoTable")
+
+
+def _run_ddl(spark, plan, kind: str, name: str, mts: dict):
+    """Run one parsed DDL statement on table ``name``:
+
+    - ``ALTER TABLE t ADD COLUMN[S] (c type, ...)`` ->
+      :meth:`add_columns`, types as Spark's ``simpleString``;
+      ``RENAME COLUMN a TO b`` -> :meth:`rename_column`; ``DROP
+      COLUMN[S] c[, ...]`` -> :meth:`drop_column`; ``ALTER COLUMN c
+      TYPE w`` -> :meth:`widen_column` (safe widenings only);
+      ``ALTER COLUMN c SET NOT NULL`` -> :meth:`set_not_null`;
+      ``ADD CONSTRAINT n CHECK (expr)`` -> :meth:`add_check`
+      (validates existing rows first); ``DROP CONSTRAINT n`` ->
+      :meth:`drop_constraint`.  Each is one metadata commit and
+      returns ``(table_name, version)``;
+    - ``CREATE TABLE t (c type, ...) [PARTITIONED BY (col)]`` ->
+      :meth:`ManifestTable.create` of an empty typed frame at t's
+      root;
+    - ``ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS a, b]`` ->
+      approximate :meth:`analyze`, rebuilding the sketches the
+      columns already carry; returns the per-column stats;
+    - ``DROP TABLE [IF EXISTS] t`` -> :meth:`drop` and the view
+      unbound."""
+    from .session import local_frame
+
+    t = mts[name]
+    if kind == "CreateTable":
+        from .manifest import ManifestTable
+
         try:
             t._raw()
         except (FileNotFoundError, OSError):
-            missing = True
-            if not if_exists:
+            pass
+        else:
+            raise ValueError(f"table {name!r} already exists at "
+                             f"{t.root}")
+        ddl = ", ".join(
+            f"`{c.name()}` {c.dataType().simpleString()}"
+            for c in _seq(plan.columns()))
+        made = ManifestTable.create(local_frame(spark, [], ddl), t.root,
+                                    ts=_partition_col(plan))
+        mts[name] = made
+        return _registered(spark, made, name)
+    if kind == "DropTable":
+        # IF EXISTS may swallow ONLY "no table lives at this root": a
+        # failed rmtree of an existing table must propagate, or the
+        # statement reports success while data files remain
+        try:
+            t._raw()
+        except (FileNotFoundError, OSError):
+            if not plan.ifExists():
                 raise
-        if not missing:
+        else:
             t.drop()
         del mts[name]
         spark.catalog.dropTempView(name)
-        return spark.createDataFrame([(name,)], "table_name string")
-    m = _RESTORE_RE.match(query)
-    if m:
-        name, v, ts = m.groups()
-        t = require(name, "RESTORE")
-        # the TIMESTAMP form resolves through version_at exactly like
-        # a time-travel read, then restores that snapshot
-        t.restore(int(v) if v is not None else t.version_at(ts))
-        return done(t, name)
-    m = _CREATE_EMPTY_RE.match(query)
-    if m:
-        from .manifest import ManifestTable
-        from .session import local_frame
-        name, collist, part_col = m.groups()
-        if name not in mts:
-            raise KeyError(f"CREATE TABLE target {name!r} not in "
-                           f"tables — pass its root path")
-        try:
-            mts[name]._raw()
-            raise ValueError(f"table {name!r} already exists at "
-                             f"{mts[name].root}")
-        except (FileNotFoundError, OSError):
-            pass
-        cols = parse_cols(collist, "CREATE TABLE column")
-        ddl = ", ".join(f"`{n}` {tp}" for n, tp in cols)
-        empty = local_frame(spark, [], ddl)
-        t = ManifestTable.create(empty, mts[name].root, ts=part_col)
-        mts[name] = t
-        return done(t, name)
-    # a statement that LEADS with a maintenance keyword but matched
-    # no grammar above (unquoted literal, typo'd clause) must fail
-    # HERE with the offending text — falling through to spark.sql
-    # would surface an opaque ParseException on a verb Spark does not
-    # know, contradicting the raises-rather-than-degrades discipline
-    if re.match(r"^\s*(OPTIMIZE|VACUUM|RESTORE\s+TABLE"
-                r"|DESCRIBE\s+(HISTORY|DETAIL)|DROP\s+TABLE"
-                r"|ANALYZE\s+TABLE)\b", query, re.IGNORECASE):
-        raise ValueError(
-            f"unparsed maintenance statement (check quoting — "
-            f"string literals take single quotes): {query!r}")
-    return None
-
-# -- SQL DML over registered manifest tables (VERDICT r12 #4) --------
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(INTO|OVERWRITE(?:\s+TABLE)?)\s+([A-Za-z_]\w*)\s*"
-    r"(\(\s*[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*\s*\))?\s*"
-    r"((?:SELECT|VALUES|TABLE|FROM|WITH)\b.*)$",
-    re.IGNORECASE | re.DOTALL)
-_CTAS_RE = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+([A-Za-z_]\w*)\s*"
-    r"(?:PARTITIONED\s+BY\s*\(\s*([A-Za-z_]\w*)\s*\)\s*)?"
-    r"AS\s+((?:SELECT|WITH|VALUES|TABLE|FROM)\b.*)$",
-    re.IGNORECASE | re.DOTALL)
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+([A-Za-z_]\w*)"
-    r"(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+([A-Za-z_]\w*)\s+SET\s+(.*?)"
-    r"(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[A-Za-z_]\w*)"
-    r"(?:\s+(?:AS\s+)?(?P<talias>[A-Za-z_]\w*))?\s+"
-    r"USING\s+(?P<source>\((?:[^()]|\([^()]*\))*\)|[A-Za-z_]\w*)"
-    r"(?:\s+(?:AS\s+)?(?P<salias>[A-Za-z_]\w*))?\s+"
-    r"ON\s+(?P<on>.+?)\s+(?P<clauses>WHEN\s+.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-_MERGE_CLAUSE_RE = re.compile(
-    r"WHEN\s+(?P<not>NOT\s+)?MATCHED(?P<bysrc>\s+BY\s+SOURCE)?"
-    r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<act>UPDATE\s+SET\s+\*|INSERT\s+\*|DELETE)",
-    re.IGNORECASE | re.DOTALL)
-_ON_EQ_RE = re.compile(
-    r"^\s*(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)\s*=\s*"
-    r"(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)\s*$")
+        return local_frame(spark, [(name,)], "table_name string")
+    if kind in ("AnalyzeTable", "AnalyzeColumn"):
+        cols = None
+        if kind == "AnalyzeColumn" and plan.columnNames().isDefined():
+            cols = _seq(plan.columnNames().get())
+        elif kind == "AnalyzeTable" and (plan.noScan()
+                                         or plan.partitionSpec().size()):
+            raise ValueError("ANALYZE TABLE supports COMPUTE STATISTICS "
+                             "[FOR COLUMNS ...] only")
+        # SQL cannot name sketches: rebuild the ones the columns
+        # already carry, never strip a capability they had
+        out = t._analyze_rebuild(spark, cols)
+        rows = [(c, int(s["ndv"]), int(s["nulls"]), s["min"], s["max"])
+                for c, s in sorted(out["columns"].items())
+                if cols is None or c in cols]
+        return local_frame(spark, rows,
+                           "column string, ndv long, nulls long, "
+                           "min string, max string")
+    if kind == "AddColumns":
+        t.add_columns([(".".join(_seq(c.name())),
+                        c.dataType().simpleString())
+                       for c in _seq(plan.columnsToAdd())])
+    elif kind == "RenameColumn":
+        t.rename_column(".".join(_seq(plan.column().name())),
+                        plan.newName())
+    elif kind == "DropColumns":
+        for c in _seq(plan.columnsToDrop()):
+            t.drop_column(".".join(_seq(c.name())))
+    elif kind == "AlterColumns":
+        for spec in _seq(plan.specs()):
+            col = ".".join(_seq(spec.column().name()))
+            if spec.newDataType().isDefined():
+                t.widen_column(col,
+                               spec.newDataType().get().simpleString())
+            elif spec.newNullability().isDefined() \
+                    and not spec.newNullability().get():
+                t.set_not_null(spark, col)
+            else:
+                raise ValueError(f"ALTER COLUMN {col!r}: only TYPE and "
+                                 f"SET NOT NULL are supported")
+    elif kind == "AddCheckConstraint":
+        c = plan.checkConstraint()
+        t.add_check(spark, c.name(), c.condition())
+    else:
+        t.drop_constraint(plan.name())
+    return _registered(spark, t, name)
 
 
-def _merge_keys(on: str, target: str, talias, source_name,
-                salias) -> list[str]:
+def _store_cast(df, t):
+    """SQL store assignment: align ``df`` to ``t``'s pinned columns by
+    NAME, never position, and cast to their types (a SELECT's ``id *
+    2.0`` is DECIMAL under ANSI; the table pins double).  A frame
+    with other columns is left for the schema gate to refuse."""
+    from pyspark.sql import functions as F
+
+    sig = t._raw().get("schema") or []
+    if sig and sorted(c.lower() for c in df.columns) \
+            == sorted(n.lower() for n, _ in sig):
+        df = df.select(*[F.col(n).cast(tp).alias(n) for n, tp in sig])
+    return df
+
+
+def _merge_keys(query: str, on, quals: set) -> list[str]:
     """SQL MERGE ``ON`` -> merge() key list: the clause must be a
     conjunction of column equalities between target and source, each
     on the SAME column name (the schema-aligned merge shape —
     arbitrary join expressions have no keyed-merge equivalent)."""
-    t_names = {n.lower() for n in (target, talias) if n}
-    s_names = {n.lower() for n in (source_name, salias) if n}
-    keys = []
-    for part in re.split(r"\s+AND\s+", on, flags=re.IGNORECASE):
-        m = _ON_EQ_RE.match(part)
-        if not m:
+    keys, todo = [], [on]
+    while todo:
+        e = todo.pop(0)
+        if _kind(e) == "And":
+            todo[:0] = [e.left(), e.right()]
+            continue
+        term = _text(query, e)
+        sides = [e.left(), e.right()] if _kind(e) == "EqualTo" else []
+        if not sides or any(_kind(s) != "UnresolvedAttribute"
+                            for s in sides):
             raise ValueError(
-                f"MERGE ON clause term {part!r}: only conjunctions "
+                f"MERGE ON clause term {term!r}: only conjunctions "
                 f"of target.col = source.col equalities are "
                 f"supported")
-        q1, c1, q2, c2 = m.groups()
+        (*q1, c1), (*q2, c2) = (_seq(s.nameParts()) for s in sides)
         if c1.lower() != c2.lower():
             raise ValueError(
-                f"MERGE ON {part!r}: target and source columns must "
+                f"MERGE ON {term!r}: target and source columns must "
                 f"share a name (keyed merge aligns schemas by name)")
-        for qual in (q1, q2):
-            if qual and qual.lower() not in t_names | s_names:
+        for q in (q1, q2):
+            if q and q[-1].lower() not in quals:
                 raise ValueError(
-                    f"MERGE ON {part!r}: qualifier {qual!r} names "
+                    f"MERGE ON {term!r}: qualifier {q[-1]!r} names "
                     f"neither the target nor the source")
         keys.append(c1)
     return keys
 
 
-def _strip_alias_quals(expr: str, aliases: set[str]) -> str:
-    """``t.close > s.close`` -> ``close > close`` is WRONG, so the
-    matched-delete condition only strips qualifiers when they name
-    the UPDATE row (merge evaluates it over the update row alone)."""
-    out = expr
-    for a in aliases:
-        out = re.sub(rf"\b{re.escape(a)}\s*\.\s*", "", out,
-                     flags=re.IGNORECASE)
-    return out
+def _disjunction(conds: list) -> str:
+    return conds[0] if len(conds) == 1 else \
+        " OR ".join(f"({c})" for c in conds)
 
 
-def _run_dml(spark, query: str, mts: dict, cdf: bool):
-    """Rewrite one INSERT / DELETE / UPDATE / MERGE statement onto the
-    manifest table API.  Returns a 1-row metrics DataFrame (Delta's
-    DML-result shape), or None when ``query`` is not DML."""
-    from .manifest import ManifestTable  # noqa: F401 (type context)
+def _alias(node):
+    return node.alias() if _kind(node) == "SubqueryAlias" else None
+
+
+def _run_dml(spark, query: str, plan, kind: str, name: str, mts: dict,
+             cdf: bool):
+    """Run one parsed CTAS / INSERT / DELETE / UPDATE / MERGE on table
+    ``name``, one atomic commit each, and return Delta's 1-row
+    metrics frame.  Expression texts (WHERE, SET values, clause
+    conditions) are sliced from ``query`` by their parsed spans, with
+    the target's and source's qualifiers dropped."""
+    from .manifest import ManifestTable
+    from .session import local_frame
 
     def metrics(**kw):
-        return spark.createDataFrame(
-            [tuple(kw.values())],
-            ", ".join(f"{k} long" for k in kw))
+        return local_frame(spark, [tuple(kw.values())],
+                           ", ".join(f"{k} long" for k in kw))
 
-    m = _CTAS_RE.match(query)
-    if m:
-        replace, name, part_col, select = m.groups()
-        if name not in mts:
-            raise KeyError(f"CTAS target {name!r} not in tables — "
-                           f"pass its root path")
-        from .manifest import ManifestTable
-        root = mts[name].root
-        # the CTAS source is arbitrary SELECT text: it gets the same
-        # grammar rewrites (time travel, table_changes, meta tables)
-        # as a standalone query (ADVICE r15 #2)
-        df = spark.sql(_rewrite_reads(spark, select, mts))
+    t = mts[name]
+    if kind in ("CreateTableAsSelect", "ReplaceTableAsSelect"):
+        df = _frame(spark, plan.query())
         n = df.count()
         try:
-            mts[name]._raw()
-            exists = True
+            t._raw()
         except (FileNotFoundError, OSError):
-            exists = False
-        if exists:
-            if not replace:
-                raise ValueError(
-                    f"table {name!r} already exists at {root}; use "
-                    f"CREATE OR REPLACE TABLE")
-            mts[name].overwrite(df)
-            t = mts[name]
+            t = mts[name] = ManifestTable.create(
+                df, t.root, ts=_partition_col(plan))
         else:
-            t = ManifestTable.create(df, root, ts=part_col)
-            mts[name] = t
+            if kind == "CreateTableAsSelect":
+                raise ValueError(
+                    f"table {name!r} already exists at {t.root}; use "
+                    f"CREATE OR REPLACE TABLE")
+            t.overwrite(df)
         t.register(spark, name)
         return metrics(num_inserted_rows=n)
-
-    m = _MERGE_RE.match(query)
-    if m:
-        name = m.group("target")
-        if name not in mts:
-            raise KeyError(f"MERGE target {name!r} not in tables")
-        t = mts[name]
-        src = m.group("source")
-        # a parenthesized MERGE source is arbitrary SELECT text — run
-        # the read rewriters over it so `USING (SELECT * FROM
-        # table_changes('s', 2, 5))`, the natural CDF-apply spelling,
-        # parses exactly like the standalone form (ADVICE r15 #2)
-        updates = (spark.sql(_rewrite_reads(spark, src[1:-1], mts))
-                   if src.startswith("(") else spark.table(src))
-        sig = t._raw().get("schema") or []
-        if sig and sorted(c.lower() for c in updates.columns) \
-                == sorted(n.lower() for n, _ in sig):
-            # store-assignment coercion, same as the INSERT branch
-            # (ANSI literals type SELECT outputs as DECIMAL)
-            from pyspark.sql import functions as F
-            updates = updates.select(
-                *[F.col(n).cast(tp).alias(n) for n, tp in sig])
-        keys = _merge_keys(m.group("on"), name, m.group("talias"),
-                           None if src.startswith("(") else src,
-                           m.group("salias"))
-        upd = ins = False
-        when_matched_delete = None
-        by_source_delete = None
-        for c in _MERGE_CLAUSE_RE.finditer(m.group("clauses")):
-            act = re.sub(r"\s+", " ", c.group("act")).upper()
-            cond = c.group("cond")
-            if c.group("bysrc"):
-                if act != "DELETE":
-                    raise ValueError(
-                        "WHEN NOT MATCHED BY SOURCE supports THEN "
-                        "DELETE only")
-                by_source_delete = cond or True
-            elif c.group("not"):
-                if act != "INSERT *":
-                    raise ValueError(
-                        "WHEN NOT MATCHED supports THEN INSERT * "
-                        "only (schema-aligned merge)")
-                ins = True
-            elif act == "DELETE":
-                aliases = {a for a in (m.group("salias"),
-                                       m.group("talias"), name)
-                           if a}
-                when_matched_delete = _strip_alias_quals(
-                    cond, aliases) if cond else "true"
-            elif act == "UPDATE SET *":
-                upd = True
-        if not (upd and ins) and when_matched_delete is None \
-                and by_source_delete is None:
-            raise ValueError(
-                "MERGE needs WHEN MATCHED THEN UPDATE SET * plus "
-                "WHEN NOT MATCHED THEN INSERT * (the keyed upsert), "
-                "or a DELETE clause")
-        out = t.merge(spark, updates, keys, cdf=cdf,
-                      when_matched_delete=when_matched_delete,
-                      not_matched_by_source_delete=by_source_delete)
-        return metrics(num_affected_rows=(
-            (out or {}).get("rows_dead", 0)
-            + (out or {}).get("rows_appended", 0)) or updates.count())
-    m = _INSERT_RE.match(query)
-    if m:
-        verb, name, cols, select = m.groups()
-        if name not in mts:
-            raise KeyError(f"INSERT target {name!r} not in tables")
-        t = mts[name]
-        sel = select.strip()
-        if sel.upper().startswith("VALUES"):
-            # typed VALUES need the target schema: SELECT through it
-            want = [n for n, _ in t._raw().get("schema") or []]
-            names = ([c.strip() for c in
-                      cols.strip("() ").split(",")] if cols
-                     else want)
-            df = spark.sql(
-                f"SELECT * FROM ({sel}) AS "
-                f"v({', '.join(names)})")
-        else:
-            df = spark.sql(_rewrite_reads(spark, sel, mts))
-            if cols:
-                df = df.toDF(*[c.strip()
-                               for c in cols.strip("() ").split(",")])
-        sig = t._raw().get("schema") or []
-        if sig and sorted(c.lower() for c in df.columns) \
-                == sorted(n.lower() for n, _ in sig):
-            # align by NAME, never position, and apply SQL INSERT's
-            # store-assignment coercion to the pinned column types
-            # (a SELECT's `id * 2.0` is DECIMAL under ANSI; the
-            # table pins double)
-            from pyspark.sql import functions as F
-            df = df.select(*[F.col(n).cast(tp).alias(n)
-                             for n, tp in sig])
+    if kind == "InsertIntoStatement":
+        if plan.partitionSpec().size():
+            raise ValueError("INSERT ... PARTITION (...) is not "
+                             "supported: the partition column is a "
+                             "data column")
+        src = plan.query()
+        df = _frame(spark, src)
+        cols = _seq(plan.userSpecifiedCols())
+        if not cols and _kind(src) in ("LocalRelation",
+                                       "UnresolvedInlineTable"):
+            # VALUES rows are positional: name them by the table
+            cols = [n for n, _ in t._raw().get("schema") or []]
+        if cols:
+            df = df.toDF(*cols)
+        df = _store_cast(df, t)
         n = df.count()
-        if verb.upper().startswith("OVERWRITE"):
-            # INSERT OVERWRITE = full-refresh replace (Spark's own
-            # semantics for unpartitioned-spec inserts): one atomic
-            # commit swaps the whole table content, readers keep the
-            # old snapshot until the link
+        if plan.overwrite():
+            # full-refresh replace: one commit swaps the whole content
             t.overwrite(df)
         else:
             t.append(df, cdf=cdf)
         return metrics(num_inserted_rows=n)
-    m = _DELETE_RE.match(query)
-    if m and m.group(1) in mts:
-        out = mts[m.group(1)].delete_where(
-            spark, m.group(2) or "true", cdf=cdf, mode="dv")
-        return metrics(num_deleted_rows=out["rows_deleted"])
-    m = _UPDATE_RE.match(query)
-    if m and m.group(1) in mts:
-        sets = {}
-        for kv in re.split(r",(?![^()]*\))", m.group(2)):
-            k, _, v = kv.partition("=")
-            if not _:
-                raise ValueError(f"UPDATE SET term {kv!r}")
-            sets[k.strip()] = v.strip()
-        out = mts[m.group(1)].update_where(
-            spark, sets, m.group(3) or "true", cdf=cdf)
+    if kind in ("DeleteFromTable", "UpdateTable"):
+        quals = {q.lower() for q in (name, _alias(plan.table())) if q}
+        if kind == "DeleteFromTable":
+            cond = plan.condition()
+            # no WHERE parses as a shared TRUE literal, whose span is
+            # not this statement's
+            where = (cond.sql() if _kind(cond) == "Literal"
+                     else _unqualified(query, cond, quals))
+            out = t.delete_where(spark, where, cdf=cdf, mode="dv")
+            return metrics(num_deleted_rows=out["rows_deleted"])
+        sets = {_seq(a.key().nameParts())[-1]:
+                _unqualified(query, a.value(), quals)
+                for a in _seq(plan.assignments())}
+        cond = plan.condition()
+        where = (_unqualified(query, cond.get(), quals)
+                 if cond.isDefined() else "true")
+        out = t.update_where(spark, sets, where, cdf=cdf)
         return metrics(num_updated_rows=out["rows_updated"])
-    return None
-
-
-def _rewrite_reads(spark, query: str, mts: dict) -> str:
-    """Apply the four read-side grammar rewriters — ``VERSION AS OF``,
-    ``TIMESTAMP AS OF``, ``table_changes('t', v1[, v2])`` and the
-    Iceberg metadata-table spelling ``name.partitions/.files/...`` —
-    to one SQL text, literal-masked (:func:`_sub_outside_literals`),
-    registering the per-snapshot / feed / meta temp views the
-    rewritten text references.  Shared by :func:`manifest_sql`'s
-    final SELECT path AND every DML source subquery (ADVICE r15 #2:
-    ``MERGE INTO t USING (SELECT * FROM table_changes('s', 2, 5))`` —
-    the natural CDF-apply spelling — must parse like the standalone
-    form).  Names not in ``mts`` are left verbatim for Spark to
-    resolve."""
-    def _sub(m):
-        kw, name, v = m.group(1), m.group(2), int(m.group(3))
-        if name not in mts:
-            return m.group(0)
-        alias = f"{name}__v{v}"
-        mts[name].register(spark, alias, version=v)
-        return f"{kw} {alias}"
-
-    def _sub_ts(m):
-        # the literal ``TIMESTAMP AS OF 'ts'`` form (Delta's second
-        # time-travel spelling): the DSv2 reader resolves the version
-        # whose commit stamp is the latest <= ts (version_at), then
-        # pins that snapshot exactly like VERSION AS OF
-        kw, name, ts = m.group(1), m.group(2), m.group(3)
-        if name not in mts:
-            return m.group(0)
-        alias = f"{name}__t{re.sub(r'[^0-9A-Za-z]', '_', ts)}"
-        mts[name].register(spark, alias, timestamp=ts)
-        return f"{kw} {alias}"
-
-    def _sub_changes(m):
-        # Delta's ``table_changes('t', v1[, v2])`` table function
-        # (VERDICT r14 #2): the range change feed as a SQL relation —
-        # rewritten onto ManifestTable.table_changes, which unions
-        # the per-commit classified change sets with _change_type /
-        # _commit_version intact, so the raw-SQL serving tier can
-        # consume CDF without touching the DataFrame API
-        name, v1, v2 = m.group(1), int(m.group(2)), m.group(3)
-        if name not in mts:
-            return m.group(0)      # not ours: Spark resolves (or
-            # errors) like every other unknown name in the rewriters
-        end = int(v2) if v2 is not None else None
-        alias = f"{name}__ch{v1}_{end if end is not None else 'live'}"
-        mts[name].table_changes(spark, v1, end) \
-            .createOrReplaceTempView(alias)
-        return alias
-
-    def _sub_meta(m):
-        # Iceberg's metadata-table spelling (``db.t.files`` etc.) for
-        # the inspection frames (VERDICT r14 #3): ``FROM <name>.<meta>``
-        # registers the meta frame under an alias — driver-side
-        # commit-object reads, no data I/O, composable with ordinary
-        # SQL on top
-        kw, name, meta = m.group(1), m.group(2), m.group(3).lower()
-        if name not in mts:
-            return m.group(0)      # someone else's qualified name
-        t = mts[name]
-        frame = {"partitions": t.meta_partitions,
-                 "files": t.meta_files,
-                 "history": t.meta_snapshots,
-                 "refs": t.meta_refs,
-                 "column_stats": t.meta_column_stats,
-                 "detail": t.detail}[meta](spark)
-        alias = f"{name}__meta_{meta}"
-        frame.createOrReplaceTempView(alias)
-        return f"{kw} {alias}"
-
-    out = _sub_outside_literals(_TT_RE, _sub, query)
-    out = _sub_outside_literals(_TTS_RE, _sub_ts, out)
-    out = _sub_outside_literals(_TABLE_CHANGES_RE, _sub_changes, out)
-    out = _sub_outside_literals(_META_TABLE_RE, _sub_meta, out)
-    return out
+    tgt, src = plan.targetTable(), plan.sourceTable()
+    tq = {q.lower() for q in (name, _alias(tgt)) if q}
+    salias = _alias(src)
+    if salias is not None:
+        # the alias node spans the whole statement; its child is the
+        # source relation or subquery
+        src = src.child()
+    sname = (_name_parts(src)[-1] if _kind(src) == "UnresolvedRelation"
+             else None)
+    sq = {q.lower() for q in (sname, salias) if q}
+    updates = _store_cast(_frame(spark, src), t)
+    keys = _merge_keys(query, plan.mergeCondition(), tq | sq)
+    upd = ins = False
+    deletes, by_source = [], []
+    for a in _seq(plan.matchedActions()):
+        cond = a.condition()
+        if _kind(a) == "DeleteAction":
+            # evaluated over the source row: qualifiers drop
+            deletes.append(_unqualified(query, cond.get(), tq | sq)
+                           if cond.isDefined() else "true")
+        elif _kind(a) == "UpdateStarAction" and not cond.isDefined():
+            upd = True
+        else:
+            raise ValueError(
+                "WHEN MATCHED supports THEN DELETE and an "
+                "unconditional THEN UPDATE SET * only (schema-aligned "
+                "merge)")
+    for a in _seq(plan.notMatchedActions()):
+        if _kind(a) != "InsertStarAction" or a.condition().isDefined():
+            raise ValueError("WHEN NOT MATCHED supports THEN INSERT * "
+                             "only (schema-aligned merge)")
+        ins = True
+    for a in _seq(plan.notMatchedBySourceActions()):
+        if _kind(a) != "DeleteAction":
+            raise ValueError("WHEN NOT MATCHED BY SOURCE supports THEN "
+                             "DELETE only")
+        cond = a.condition()
+        by_source.append(_unqualified(query, cond.get(), tq)
+                         if cond.isDefined() else "true")
+    # merge() upserts every source row no DELETE clause marks, so the
+    # SQL must say so: the upsert pair, or an unconditional delete
+    if not ((upd and ins) or (not upd and not ins and "true" in deletes)):
+        raise ValueError(
+            "MERGE needs WHEN MATCHED THEN UPDATE SET * plus "
+            "WHEN NOT MATCHED THEN INSERT * (the keyed upsert), "
+            "or an unconditional WHEN MATCHED THEN DELETE")
+    out = t.merge(
+        spark, updates, keys, cdf=cdf,
+        when_matched_delete=_disjunction(deletes) if deletes else None,
+        not_matched_by_source_delete=(
+            None if not by_source else True if "true" in by_source
+            else _disjunction(by_source)))
+    return metrics(num_affected_rows=(
+        (out or {}).get("rows_dead", 0)
+        + (out or {}).get("rows_appended", 0)) or updates.count())
 
 
 def manifest_sql(spark, query: str, tables: dict,
                  cdf: bool = False):
-    """Raw-SQL serving, DML AND DDL over manifest tables WITH
-    Delta's literal ``VERSION AS OF <n>`` / ``TIMESTAMP AS OF 'ts'``
-    syntax (VERDICT r10 #2's time-travel
-    form —
-    the reference's dashboards assemble exactly such SQL strings,
-    2_Universe_Screener.py:58-77): every ``tables`` entry
-    ({view_name: table root or ManifestTable}) is registered at
-    its current snapshot via :meth:`ManifestTable.register`, and each ``FROM/JOIN <name>
-    VERSION AS OF <n>`` clause in ``query`` is rewritten to an
-    option-bound per-version view (``<name>__v<n>``) whose reads pin
-    snapshot n — schema, pruning metadata and deletion vectors all
-    from THAT version's commit object.  Everything still plans
-    through the DSv2 pushdown path: a WHERE clause on a time-traveled
-    table prunes the historical snapshot's files exactly like a live
-    read.  Names not in ``tables`` are left untouched (they may be
-    ordinary views).  Returns the result DataFrame.
+    """One SQL statement over manifest tables: reads with Delta's
+    time-travel and change-feed spellings, DML, DDL and maintenance,
+    each write one atomic manifest commit through the same
+    :class:`ManifestTable` primitives the DataFrame API uses.  Every
+    ``tables`` entry (``{view_name: root path or ManifestTable}``)
+    is first registered at its current snapshot
+    (:meth:`ManifestTable.register`), so its reads plan through the
+    DSv2 pushdown path; a name may also map to a not-yet-created
+    root, which only CTAS, CREATE TABLE and CONVERT accept.
 
-    DML (VERDICT r12 "Next round" #4 — the first wall a warehouse-SQL
-    user hits once reads are covered): ``CREATE [OR REPLACE] TABLE
-    name [PARTITIONED BY (col)] AS SELECT ...`` (the name maps to a
-    root path in ``tables``; the created table registers for the
-    session), ``INSERT INTO name SELECT/
-    VALUES ...``, ``INSERT OVERWRITE name SELECT ...`` (atomic
-    full-refresh replace), ``DELETE FROM name WHERE ...``, ``UPDATE
-    name SET
-    ... WHERE ...`` and the schema-aligned ``MERGE INTO name [t]
-    USING (<query>)|<view> [s] ON t.k = s.k [AND ...] WHEN MATCHED
-    [AND c] THEN UPDATE SET * | DELETE / WHEN NOT MATCHED THEN INSERT
-    * / WHEN NOT MATCHED BY SOURCE THEN DELETE`` rewrite onto the
-    SAME transactional primitives the DataFrame API uses —
-    ``append`` / ``delete_where(mode='dv')`` / ``update_where`` /
-    ``merge`` — one atomic manifest commit each, exactly-once, with
-    ``cdf=True`` threading the row-level change feed through so
-    ``changes()`` classifies a SQL MERGE identically to a DataFrame
-    one.  DML returns Delta's 1-row metrics frame
-    (num_affected/inserted/deleted/updated_rows).  The MERGE grammar
-    is deliberately the schema-aligned core (UPDATE SET * / INSERT
-    *): arbitrary per-column SET lists have no keyed-merge
-    equivalent and belong in the source query itself.
+    Spark's own parser reads the statement, and the dispatch is on
+    the parsed node, so comments, backticks, quoting and case follow
+    Spark's lexer.  Statements, by kind:
 
-    DDL (VERDICT r13 "Next round" #4): ``ALTER TABLE name ADD
-    COLUMN[S] (...)`` / ``RENAME COLUMN a TO b`` / ``DROP COLUMN c``
-    / ``ALTER COLUMN c TYPE w`` rewrite onto the metadata-only
-    schema-lifecycle API (:func:`_run_ddl`) — one JSON commit each,
-    zero data I/O, the session view re-registered so the next SELECT
-    serves the new schema.  ``TIMESTAMP AS OF '<iso>'`` resolves
-    through ``version_at`` (latest commit stamped at or before the
-    timestamp; naive strings read as UTC) and pins that snapshot
-    exactly like ``VERSION AS OF``.
+    - **Queries** — any statement Spark runs, after one walk of the
+      parsed plan rewrites these reads to registered views
+      (:func:`_read_rewrites`):
+      ``name VERSION AS OF n``, ``name TIMESTAMP AS OF '<iso>'``
+      (resolved through ``version_at``: the latest commit at or
+      before it; naive strings read as UTC),
+      ``table_changes('name', v1[, v2])`` (the classified change
+      feed, ``v2`` defaulting to the live head) and the metadata
+      tables ``name.partitions`` / ``.files`` / ``.history`` /
+      ``.refs`` / ``.column_stats`` / ``.detail``.  Spark's grammar
+      puts an alias after the clause: ``name VERSION AS OF n
+      alias``.  The same rewrites apply inside DML sources.  Names
+      not in ``tables`` are left for Spark to resolve.
+    - **DML** (:func:`_run_dml`, Delta's 1-row metrics frame):
+      ``CREATE [OR REPLACE] TABLE name [PARTITIONED BY (col)] AS
+      <query>``, ``INSERT INTO|OVERWRITE name [(cols)] <query> |
+      VALUES ...``, ``DELETE FROM name [WHERE ...]``, ``UPDATE name
+      SET c = expr, ... [WHERE ...]`` and the schema-aligned ``MERGE
+      INTO name [t] USING <view> | (<query>) [s] ON t.k = s.k [AND
+      ...]`` with ``WHEN MATCHED [AND c] THEN DELETE``, ``WHEN
+      MATCHED THEN UPDATE SET *``, ``WHEN NOT MATCHED THEN INSERT *``
+      and ``WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE``.  MERGE
+      follows :meth:`ManifestTable.merge`: a source row a DELETE
+      clause's condition marks never inserts, matched or not.
+      ``cdf=True`` captures the row-level change feed in the same
+      commit.
+    - **DDL** (:func:`_run_ddl`): ``ALTER TABLE`` ADD COLUMNS,
+      RENAME COLUMN, DROP COLUMN(S), ALTER COLUMN TYPE / SET NOT
+      NULL, ADD CONSTRAINT CHECK, DROP CONSTRAINT; ``CREATE TABLE
+      name (cols) [PARTITIONED BY (col)]``; ``ANALYZE TABLE``; ``DROP
+      TABLE [IF EXISTS]``.
+    - **Delta-only verbs** Spark's parser rejects or misparses, by
+      keyword (:func:`_run_verb`): OPTIMIZE, VACUUM, RESTORE TABLE,
+      DESCRIBE HISTORY, DESCRIBE DETAIL and CONVERT TO MANIFEST.
 
-    CDF (VERDICT r14 "Next round" #2): ``SELECT ... FROM
-    table_changes('name', v1[, v2])`` — Delta's SQL spelling for the
-    row-level change feed — rewrites onto
-    :meth:`ManifestTable.table_changes`, serving the range's
-    classified change rows (``_change_type`` + ``_commit_version``)
-    as an ordinary relation; ``v2`` defaults to the live head.
-    Version numbers only (the timestamp-argument form would resolve
-    via ``version_at`` but is deliberately not parsed — one
-    time-travel spelling per axis keeps the grammar unambiguous).
-
-    Catalog inspection (VERDICT r14 "Next round" #3): ``DESCRIBE
-    DETAIL name`` (Delta's one-row summary ->
-    :meth:`ManifestTable.detail`), ``DROP TABLE [IF EXISTS] name``
-    (-> :meth:`ManifestTable.drop` + view unbind), and Iceberg's
-    metadata-table spelling ``FROM name.partitions`` / ``.files`` /
-    ``.history`` / ``.refs`` / ``.column_stats`` / ``.detail`` —
-    each rewritten onto the corresponding ``meta_*`` inspection
-    frame (commit-object reads, no data I/O) and composable with
-    ordinary SQL on top."""
+    The parser is reached through the classic session's py4j handle,
+    so this needs classic PySpark, not Spark Connect.  Returns the
+    result DataFrame."""
     from .manifest import ManifestTable
 
     mts = {name: (t if isinstance(t, ManifestTable)
@@ -2343,13 +2267,27 @@ def manifest_sql(spark, query: str, tables: dict,
             continue
         t.register(spark, name)
 
-    ddl = _run_ddl(spark, query, mts)
-    if ddl is not None:
-        return ddl
-    dml = _run_dml(spark, query, mts, cdf)
-    if dml is not None:
-        return dml
-    return spark.sql(_rewrite_reads(spark, query, mts))
+    out = _run_verb(spark, query, mts)
+    if out is not None:
+        return out
+    plan = _parse(spark, query)
+    hits = _read_rewrites(spark, plan, mts)
+    if hits:
+        query = _splice(query, hits)
+        plan = _parse(spark, query)
+    kind = _kind(plan)
+    if kind not in _STATEMENTS:
+        return spark.sql(query)
+    parts = _name_parts(plan.table() if kind == "InsertIntoStatement"
+                        else plan)
+    name = _bound(mts, parts)
+    if len(parts) != 1 or (name is None and kind in ("DeleteFromTable",
+                                                     "UpdateTable")):
+        return spark.sql(query)        # a catalog table: Spark's
+    _require(mts, name or parts[0], _STATEMENTS[kind])
+    if kind in _DML:
+        return _run_dml(spark, query, plan, kind, name, mts, cdf)
+    return _run_ddl(spark, plan, kind, name, mts)
 
 
 def write_manifest(df, root: str, ts: str | None = None,

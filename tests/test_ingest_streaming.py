@@ -239,9 +239,10 @@ def _optimized_plan(df) -> str:
 
 def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
     """The ingest's driver-side frames (the fetched rows, the trading
-    calendar), an empty ledger and an empty change-feed range scan as
-    JVM LocalRelations: a Python RDD frame (LogicalRDD) would start
-    Python workers on every action over it."""
+    calendar), an empty ledger, an empty change-feed range and the
+    SQL surface's result frames scan as JVM LocalRelations: a Python
+    RDD frame (LogicalRDD) would start Python workers on every action
+    over it."""
     from stock_market_data_pipeline_spark.ingest.calendar import (
         trading_days,
     )
@@ -250,6 +251,9 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
         normalize_rows,
     )
     from stock_market_data_pipeline_spark.manifest import ManifestTable
+    from stock_market_data_pipeline_spark.manifest_datasource import (
+        manifest_sql,
+    )
 
     frames = {
         "normalize_rows": normalize_rows(
@@ -265,6 +269,10 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
         str(tmp_path / "tc"), "pt")
     t.add_columns([("z", "bigint")])
     frames["empty table_changes"] = t.table_changes(spark, 2)
+    # a DML metrics row and an inspection table
+    frames["DML metrics"] = manifest_sql(
+        spark, "DELETE FROM tc WHERE id < 0", {"tc": t})
+    frames["meta_files"] = t.meta_files(spark)
     for name, df in frames.items():
         plan = _optimized_plan(df)
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, (
@@ -273,6 +281,8 @@ def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
     assert frames["trading_days"].count() == 10
     assert frames["empty ledger"].count() == 0
     assert frames["empty table_changes"].count() == 0
+    assert frames["DML metrics"].collect()[0]["num_deleted_rows"] == 0
+    assert frames["meta_files"].count() >= 2
 
 
 def test_local_frame_matches_create_dataframe(spark):

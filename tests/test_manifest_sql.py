@@ -849,3 +849,58 @@ def test_sql_rewriters_honor_backslash_escaped_quotes(spark, t):
     assert got[0]["msg"] == "it's listed FROM qbs.files now"
     assert got[0]["n"] == 4              # the real rewrite still ran
     assert not spark.catalog.tableExists("qbs__meta_files")
+
+
+# -- text the statement's own lexer reads, not a regex ----------------
+
+
+@pytest.mark.parametrize("query", [
+    "-- don't\nSELECT COUNT(*) AS n FROM tt VERSION AS OF 1",
+    "SELECT COUNT(*) AS n FROM `tt` VERSION AS OF 1",
+    "SELECT COUNT(*) AS n FROM tt /* x */ VERSION AS OF 1",
+], ids=["line-comment-quote", "backticks", "block-comment"])
+def test_sql_time_travel_through_comments_and_backticks(spark, t, query):
+    t.append(_frame(spark, 100, 150))            # v2
+    assert manifest_sql(spark, query, {"tt": t}).collect()[0]["n"] == 100
+
+
+@pytest.mark.parametrize("query,changed", [
+    ("UPDATE st SET s = 'x,y' WHERE id = 1", {1: "x,y"}),
+    ("UPDATE st SET s = 'a WHERE b' WHERE id = 2", {2: "a WHERE b"}),
+], ids=["comma", "where"])
+def test_sql_update_literal_holding_grammar(spark, tmp_path, query,
+                                            changed):
+    """A SET value's literal may hold a comma or a WHERE: neither
+    splits the statement."""
+    st = ManifestTable.create(
+        spark.range(4).selectExpr("id", "CAST(id % 2 AS STRING) AS pt",
+                                  "'orig' AS s"),
+        str(tmp_path / "st"), ts="pt")
+    out = manifest_sql(spark, query, {"st": st}).collect()[0]
+    assert out["num_updated_rows"] == 1
+    got = {r["id"]: r["s"] for r in st.read(spark).collect()}
+    assert got == {i: changed.get(i, "orig") for i in range(4)}
+
+
+@pytest.mark.parametrize("query,check", [
+    ("-- purge\nDELETE FROM t WHERE id = 3",
+     lambda spark, t: t.read(spark).where("id = 3").count() == 0),
+    ("-- widen\nALTER TABLE t ADD COLUMNS (z int)",
+     lambda spark, t: ["z", "int"] in t._raw()["schema"]),
+], ids=["delete", "alter"])
+def test_sql_statement_after_a_comment(spark, t, query, check):
+    manifest_sql(spark, query, {"t": t})
+    assert t.version() == 2
+    assert check(spark, t)
+
+
+def test_sql_delete_where_exists(spark, t):
+    """An EXISTS predicate is sliced to its own text, alone or inside
+    a conjunction."""
+    spark.range(3).createOrReplaceTempView("exists_probe")
+    out = manifest_sql(spark, "DELETE FROM tt WHERE id < 5 AND EXISTS "
+                              "(SELECT 1 FROM exists_probe)", {"tt": t})
+    assert out.collect()[0]["num_deleted_rows"] == 5
+    manifest_sql(spark, "DELETE FROM tt WHERE EXISTS (SELECT count(*) "
+                        "FROM exists_probe GROUP BY id % 2)", {"tt": t})
+    assert t.read(spark).count() == 0
