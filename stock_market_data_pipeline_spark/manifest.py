@@ -138,6 +138,8 @@ import json
 import os
 import re
 import uuid
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -635,6 +637,17 @@ def _check_unchanged(staged_from: dict, snap: dict, values,
         if v in old and (v not in new
                          or _ref_fp(old[v]) != _ref_fp(new[v])):
             raise CommitConflict(msg)
+
+
+class _RowChange(NamedTuple):
+    """One row-level DML change staged by
+    :meth:`ManifestTable._stage_rows`, committed by
+    :meth:`ManifestTable._change_commit`."""
+    rewritten: list          # live values whose refs a rewrite replaces
+    adds: dict               # value -> staged data file entries
+    dvs: dict                # value -> staged deletion-vector sidecars
+    removed: dict            # value -> rows removed, where counted
+    cdf: list | None         # staged change-feed entries (cdf=True)
 
 
 def _fold_stats(entries: list[dict]) -> dict:
@@ -3580,32 +3593,141 @@ class ManifestTable:
         return (flagged.where(hit).drop("__m"),
                 flagged.where(~hit).drop("__m"))
 
-    def _by_source_assign(self, mf: dict, affected: DataFrame,
-                          by_source) -> DataFrame:
-        """Apply the update-form assignments to the affected rows,
-        each cast to the column's PINNED type (the update_where
-        stance: a literal like "0.0" parses DECIMAL and would
-        silently re-type a double column)."""
-        _, _, assigns = by_source
+    @staticmethod
+    def _assign(mf: dict, rows: DataFrame, assigns: dict) -> DataFrame:
+        """``rows`` with each ``assigns`` column (Column or SQL string)
+        set and cast to the column's PINNED type — SQL UPDATE
+        assignment semantics: a literal like "0.0" parses DECIMAL and
+        would silently re-type a double column."""
         dtypes = {n: t for n, t in (mf.get("schema") or [])}
-        out = affected
         for c, expr in assigns.items():
             col = F.expr(expr) if isinstance(expr, str) else expr
-            out = out.withColumn(c, col.cast(dtypes[c]))
-        return out
+            rows = rows.withColumn(c, col.cast(dtypes[c]))
+        return rows
 
-    def _merge_scope(self, spark: SparkSession, mf: dict,
-                     updates: DataFrame, keys: list[str],
-                     validate_key_stability: bool,
-                     when_matched_delete, by_source) -> tuple:
-        """The front half both MERGE stagings share: split the source
-        into WHEN MATCHED DELETE rows and upserts, and find the touched
-        partition values — expanded to older-era partitions under
-        partition evolution and to by-source-affected partitions for
-        WHEN NOT MATCHED BY SOURCE.  With ``validate_key_stability``
-        it enforces the key-stability precondition (see
-        :meth:`_stage_merge`).  Returns ``(del_rows, upserts,
-        touched, src_keys)``; an empty ``touched`` touches nothing."""
+    def _stage_rows(self, spark: SparkSession, mf: dict, mode: str,
+                    values: list, change, cdf: bool,
+                    files: list[str] | None = None,
+                    matched_only: bool = False) -> _RowChange:
+        """THE staging of every row-level DML (:meth:`merge`,
+        :meth:`merge_batch`, :meth:`delete_where`,
+        :meth:`update_where`) against the snapshot ``mf``.  The op
+        names the partition ``values`` it reads (``files`` narrows the
+        read to a pruned file list) and ``change(rows)``, which maps
+        the read rows to ``(kept, gone, adds, feed)``: the rows that
+        survive, the rows removed, the new row images (None: none) and
+        the change feed as ``(rows, _change_type)`` pairs.  The frames
+        are lazy; each mode runs only what it needs.
+
+        ``mode="rewrite"`` (copy-on-write) restages every read
+        partition as ``kept`` plus ``adds``.  ``mode="dv"`` (merge-on-
+        read) dead-marks ``gone`` with deletion-vector sidecars on the
+        partition that OWNS each row's file (:func:`_owning_pt` —
+        era-exact under partition evolution) and appends ``adds`` as
+        new files.  ``matched_only`` marks a predicate-driven op whose
+        change is void when no row matches: a rewrite then first counts
+        the matches per owning partition over the candidate files and
+        reads back only the partitions holding one.  Nothing is visible
+        until :meth:`_change_commit`'s commit."""
+        if mode not in ("rewrite", "dv"):
+            raise ValueError(f"mode {mode!r}: expected 'rewrite' or 'dv'")
+        none = _RowChange([], {}, {}, {}, [] if cdf else None)
+        if not values or (matched_only and not files):
+            return none
+        def paths(vals: list) -> list[str]:
+            return [os.path.join(self.root, e["path"])
+                    for v in vals for e in self._entries(mf, v)]
+
+        dv = mode == "dv"
+        live = [v for v in values if v in mf["partitions"]]
+        if files is None:
+            files = paths(live)
+        kept, gone, adds, feed = change(self._read_files(
+            spark, files, mf, keep_pos=dv or matched_only,
+            partitions=live))
+        dvs, removed = {}, {}
+        if dv and files:
+            dvs = self._stage_dv(gone.select(_owning_pt(mf).alias("__pt"),
+                                             "__rel", "__ri"))
+            removed = {v: sum(e["rows"] for e in es)
+                       for v, es in dvs.items() if es}
+        elif matched_only:
+            removed = {r["__v"]: r["n"] for r in
+                       (gone.groupBy(_owning_pt(mf).alias("__v"))
+                        .agg(F.count(F.lit(1)).alias("n")).collect())}
+        if matched_only and not removed:
+            return none
+        if dv:
+            staged = {} if adds is None else self._stage(adds)
+        else:
+            if matched_only:
+                live = list(removed)
+                kept, gone, adds, feed = change(self._read_files(
+                    spark, paths(live), mf, partitions=live))
+            staged = self._stage(
+                kept if adds is None else kept.unionByName(adds),
+                enforce=adds is not None)
+        cdf_entries = None
+        if cdf:
+            rows = [f.drop("__rel", "__ri")
+                    .withColumn("_change_type", F.lit(t)) for f, t in feed]
+            cdf_entries = [e for es in
+                           self._stage(reduce(DataFrame.unionByName, rows),
+                                       bloom=None, enforce=False).values()
+                           for e in es]
+        return _RowChange([] if dv else live, staged, dvs, removed,
+                          cdf_entries)
+
+    def _change_commit(self, mf: dict, snap: dict, ch: _RowChange,
+                       op: str) -> dict:
+        """THE commit build of a :meth:`_stage_rows` change staged from
+        ``mf``, onto ``snap``: the rewritten refs drop, and every
+        partition with staged files or sidecars is rebuilt through
+        :meth:`_rebuilt_parts` (a fully dead one drops).  A competitor
+        that changed a partition the change read, addressed or adds to
+        makes the staging stale (:class:`CommitConflict`); a disjoint
+        one rebases."""
+        _check_unchanged(mf, snap, {*ch.rewritten, *ch.adds, *ch.removed},
+                         f"a concurrent writer changed a partition this "
+                         f"{op} read or addressed by row position; re-run "
+                         f"{op}() against the new snapshot")
+        base = {**snap, "partitions": {
+            v: r for v, r in snap["partitions"].items()
+            if v not in ch.rewritten}}
+        return {"partitions": self._rebuilt_parts(base, ch.adds, ch.dvs,
+                                                  ch.removed),
+                "cdf": ch.cdf}
+
+    def _stage_merge(self, spark: SparkSession, mf: dict,
+                     updates: DataFrame, keys: list[str], mode: str,
+                     cdf: bool, when_matched_delete, nmbs_delete,
+                     nmbs_update, nmbs_condition,
+                     validate_key_stability: bool = False,
+                     insert_marked: bool = False) -> _RowChange:
+        """:meth:`merge`'s row change against the snapshot ``mf``,
+        staged through :meth:`_stage_rows`; the clause semantics are
+        stated on :meth:`merge`.  The touched partitions come from the
+        source rows, expanded to older-era partitions under partition
+        evolution and to every partition holding a NOT-MATCHED-BY-
+        SOURCE row (one column-pruned anti-join probe).
+
+        PRECONDITION (the partition-pruning contract): a key never
+        moves between partition values — every source row's partition
+        value equals that of the live row for its key, if one exists;
+        a re-dated key would leave its stale row alive in the old
+        partition.  Holds by construction when keys contain (or
+        determine) the partition column, as every caller here does.
+        ``validate_key_stability=True`` (debug/test builds) enforces
+        it with one anti-scan over the NON-touched live files and
+        raises on violation — leave it off in production, the check
+        reads the data the pruning exists to skip.
+
+        ``insert_marked``: a delete-marked source row that matches no
+        live row is inserted (SQL MERGE's WHEN NOT MATCHED THEN
+        INSERT) instead of dropped."""
+        self._check_schema(updates, mf)
+        by_source = self._parse_by_source(mf, keys, nmbs_delete,
+                                          nmbs_update, nmbs_condition)
         if when_matched_delete is not None:
             if isinstance(when_matched_delete, str):
                 when_matched_delete = F.expr(when_matched_delete)
@@ -3626,9 +3748,8 @@ class ManifestTable:
         # anything derives reads or stability checks from the set
         touched = self._era_touched(updates, mf, touched)
         orig_touched = list(touched)
-        src_keys = None
+        src_keys = updates.select(*keys).distinct()
         if by_source is not None:
-            src_keys = updates.select(*keys).distinct()
             touched = sorted(set(touched) | set(
                 self._by_source_affected_values(
                     spark, mf, src_keys, keys, by_source,
@@ -3658,150 +3779,54 @@ class ManifestTable:
                         f"the update's {self.ts} set "
                         f"{sorted(orig_touched)} — a key moved "
                         f"partitions")
-        return del_rows, upserts, touched, src_keys
 
-    def _stage_merge(self, spark: SparkSession, mf: dict,
-                     updates: DataFrame, keys: list[str],
-                     validate_key_stability: bool = False,
-                     capture_cdf: bool = False,
-                     when_matched_delete=None,
-                     by_source=None
-                     ) -> tuple[dict[str, list], list | None, set]:
-        """Shared MERGE staging against the snapshot ``mf``: read back
-        only the partitions the update touches, upsert within that
-        slice, stage the rewritten partitions.  Returns the staged
-        {value -> entries} map (empty when the update is empty);
-        nothing becomes visible until the caller commits.
-
-        PRECONDITION (the partition-pruning contract): a key never
-        moves between partition values — every update row's partition
-        value equals that of the existing row for its key, if one
-        exists.  Touched partitions come from ``updates`` alone, so a
-        re-dated key would leave its stale row alive in the old
-        partition.  Holds by construction when keys contain (or
-        determine) the partition column, as every caller here does.
-        ``validate_key_stability=True`` (debug/test builds) enforces it
-        with one anti-scan over the NON-touched live files and raises
-        on violation — leave it off in production, the check reads the
-        data the pruning exists to skip.
-
-        ``capture_cdf=True`` (VERDICT r8 #6) additionally classifies
-        and stages the ROW-LEVEL change set this merge produces —
-        Delta CDF shape: every update row whose key already existed
-        lands as ``update_postimage`` with its displaced live row as
-        ``update_preimage``; unmatched update rows land as ``insert``.
-        The classification reuses the same pruned touched-partition
-        slice the merge itself reads; returns ``(staged, cdf_entries)``
-        where ``cdf_entries`` is the staged change-set file list the
-        caller commits ATOMICALLY with the data (the commit object's
-        ``cdf`` key), or None when not captured.
-
-        ``when_matched_delete`` (a Column/SQL string evaluated against
-        the UPDATE row) adds SQL MERGE's third clause — WHEN MATCHED
-        AND <cond> THEN DELETE: update rows where the condition is
-        TRUE remove their matched live row instead of replacing it
-        (an UNMATCHED delete-marked row is a no-op, per Delta/SQL
-        MERGE; a NULL condition routes to the upsert clauses — SQL
-        three-valued logic).  When one source batch carries BOTH a
-        delete-marked and an upsert row for the same key, clauses
-        apply per source row: the delete removes the live row, the
-        upsert re-inserts — the final state is the upsert row, and
-        the CDF classifies the pair as 'delete' + 'insert' (not
-        update pre/post, which would claim the old row was
-        displaced-by rather than removed-then-replaced).
-
-        ``by_source`` (parsed by :meth:`_parse_by_source`) adds SQL
-        MERGE's WHEN NOT MATCHED BY SOURCE clause: target rows whose
-        key tuple appears in NO source row (and whose condition
-        holds) are deleted or close-out-updated in the SAME atomic
-        commit — the full-snapshot dimension-sync shape (the
-        reference's ``invalidate_hard_deletes`` SCD-2 stance,
-        snapshots/russell3000_constituents_snapshot.sql:4-12).  The
-        clause inherently addresses the WHOLE target, so the touched
-        set expands to every partition holding an affected row —
-        found by one column-pruned anti-join probe, so the cost at
-        scale is a key-column scan plus a rewrite of only the
-        affected partitions.  Returns ``(staged, cdf_entries,
-        touched)`` where ``touched`` is the final (possibly expanded)
-        partition-value set the caller derives drops from."""
-        from .incremental import merge_upsert
-
-        del_rows, upserts, touched, src_keys = self._merge_scope(
-            spark, mf, updates, keys, validate_key_stability,
-            when_matched_delete, by_source)
-        if not touched:
-            return {}, ([] if capture_cdf else None), set()
-        live = mf["partitions"]
-        prior_files = [os.path.join(self.root, e["path"])
-                       for v in touched if v in live
-                       for e in self._entries(mf, v)]
-        cdf_entries = None
-        bs_removed = bs_pre = bs_post = None
-        if prior_files:
-            current = self._read_files(
-                spark, prior_files, mf,
-                partitions=[v for v in touched if v in live])
+        def change(cur: DataFrame) -> tuple:
+            # frames only the other mode or the change feed reads are
+            # not built: each costs driver-side analysis
+            feed, closed, gone = [], None, None
             if by_source is not None:
                 # by-source rows (key in NO source row) are disjoint
-                # from every matched clause's rows, so clause order
-                # is immaterial: split them out first, then let the
-                # matched/insert machinery run on the survivors
-                affected, current = self._by_source_split(
-                    current, src_keys, keys, by_source)
+                # from every matched clause's rows, so clause order is
+                # immaterial: split them out first
+                affected, cur = self._by_source_split(
+                    cur, src_keys, keys, by_source)
                 if by_source[0] == "delete":
-                    bs_removed = affected
+                    feed.append((affected, "delete"))
                 else:
-                    closed = self._by_source_assign(mf, affected,
-                                                    by_source)
-                    if capture_cdf:
-                        bs_pre, bs_post = affected, closed
-                    current = current.unionByName(closed)
-            deleted = None
+                    closed = self._assign(
+                        mf, affected.drop("__rel", "__ri"), by_source[2])
+                    feed += [(affected, "update_preimage"),
+                             (closed, "update_postimage")]
+            if mode == "dv":
+                # EVERY matched live row goes: an upsert replaces it, a
+                # delete-clause row removes it
+                gone = cur.join(src_keys, keys, "left_semi")
+                if by_source is not None:
+                    gone = gone.unionByName(affected)
+            ups = upserts
             if del_rows is not None:
                 del_keys = del_rows.select(*keys).distinct()
-                # MATCHED deletes only: the semi join is exactly the
-                # removed live rows; unmatched delete rows no-op
-                deleted = current.join(del_keys, keys, "left_semi")
-                current = current.join(del_keys, keys, "left_anti")
-            merged = merge_upsert(current, upserts, keys)
-            if capture_cdf:
-                # classification runs against the POST-delete slice:
-                # a key removed by the delete clause and re-inserted
-                # by an upsert row classifies 'delete' + 'insert'
-                cur_keys = current.select(*keys).distinct()
-                pre = (current
-                       .join(upserts.select(*keys).distinct(), keys,
-                             "left_semi")
-                       .withColumn("_change_type",
-                                   F.lit("update_preimage")))
-                post = (upserts.join(cur_keys, keys, "left_semi")
-                        .withColumn("_change_type",
-                                    F.lit("update_postimage")))
-                ins = (upserts.join(cur_keys, keys, "left_anti")
-                       .withColumn("_change_type", F.lit("insert")))
-                cdf = pre.unionByName(post).unionByName(ins)
-                if deleted is not None:
-                    cdf = cdf.unionByName(deleted.withColumn(
-                        "_change_type", F.lit("delete")))
-                if bs_removed is not None:
-                    cdf = cdf.unionByName(bs_removed.withColumn(
-                        "_change_type", F.lit("delete")))
-                if bs_pre is not None:
-                    cdf = (cdf.unionByName(bs_pre.withColumn(
-                               "_change_type",
-                               F.lit("update_preimage")))
-                           .unionByName(bs_post.withColumn(
-                               "_change_type",
-                               F.lit("update_postimage"))))
-        else:
-            merged = upserts
-            cdf = upserts.withColumn("_change_type", F.lit("insert"))
-        if capture_cdf:
-            cdf_entries = [e for es in
-                           self._stage(cdf, bloom=None,
-                                       enforce=False).values()
-                           for e in es]
-        return self._stage(merged), cdf_entries, set(touched)
+                if insert_marked:
+                    ups = ups.unionByName(del_rows.join(
+                        cur.select(*keys).distinct(), keys, "left_anti"))
+                feed.append((cur.join(del_keys, keys, "left_semi"),
+                             "delete"))
+                cur = cur.join(del_keys, keys, "left_anti")
+            up_keys = ups.select(*keys).distinct()
+            if cdf:
+                # classified against the POST-delete rows: a key the
+                # delete clause removes and an upsert row re-inserts is
+                # 'delete' + 'insert', not an update
+                cur_keys = cur.select(*keys).distinct()
+                feed += [(cur.join(up_keys, keys, "left_semi"),
+                          "update_preimage"),
+                         (ups.join(cur_keys, keys, "left_semi"),
+                          "update_postimage"),
+                         (ups.join(cur_keys, keys, "left_anti"), "insert")]
+            adds = ups if closed is None else ups.unionByName(closed)
+            return cur.join(up_keys, keys, "left_anti"), gone, adds, feed
+
+        return self._stage_rows(spark, mf, mode, touched, change, cdf)
 
     def overwrite(self, df: DataFrame) -> None:
         """Atomic FULL REFRESH (the dbt ``table`` materialization):
@@ -3844,246 +3869,91 @@ class ManifestTable:
               not_matched_by_source_condition=None,
               mode: str = "rewrite",
               _crash_before_commit: bool = False,
-              _pre_commit_hook=None):
-        """Keyed MERGE (WHEN MATCHED UPDATE / NOT MATCHED INSERT),
-        partition-pruned, committed atomically across ALL touched
-        partitions: stage every rewritten partition, then one atomic
-        manifest link.  A reader never observes a mix of old and new
-        partitions, and a crash anywhere before the swap leaves the
-        old snapshot fully live.
+              _pre_commit_hook=None,
+              _insert_unmatched_marked: bool = False):
+        """Keyed MERGE of ``updates`` on ``keys``, partition-pruned and
+        committed atomically across ALL touched partitions: a reader
+        never observes a mix of old and new partitions, and a crash
+        anywhere before the commit leaves the old snapshot fully live.
 
-        ``mode="dv"`` is the LOW-SHUFFLE variant (Databricks
-        low-shuffle merge / merge-on-read): instead of rewriting every
-        touched partition, the MATCHED live rows are dead-marked with
-        deletion-vector sidecars and the update rows appended as new
-        files — identical visible semantics (every copy of a matched
-        key is replaced; delete-clause rows remove without appending;
-        unmatched delete rows no-op; CDF classifies the same), but the
-        write cost is O(matched + update rows), not O(touched
-        partitions).  At 100 TB a 10-row upsert into a 10 GB partition
-        stops costing 10 GB of rewrite.  Trade-off: reads pay the DV
-        anti-join until a :meth:`compact` materializes, and repeated
-        merges accumulate small files (same antidote).  Returns
-        {"rows_dead", "rows_appended"} in dv mode, None in rewrite
-        mode.
+        The clauses (SQL/Delta MERGE; :meth:`merge_batch` follows them):
 
-        ``when_matched_delete`` (Column or SQL string over the UPDATE
-        row) adds the third SQL MERGE clause — WHEN MATCHED AND <cond>
-        THEN DELETE: delete-marked update rows remove their matched
-        live row in the same atomic commit (see :meth:`_stage_merge`
-        for the unmatched/NULL/same-key-both-clauses semantics).  A
-        partition emptied entirely by deletes drops from the table
-        instead of lingering as an empty ref.
+        - WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT:
+          every source row lands, and one whose key matches live rows
+          replaces EVERY live copy of that key.
+        - ``when_matched_delete`` (a Column or SQL string over the
+          SOURCE row) adds WHEN MATCHED AND <cond> THEN DELETE: a
+          source row where it is TRUE removes its matched live rows
+          instead of replacing them; a NULL condition routes the row
+          to the upsert (SQL three-valued logic).  A marked row that
+          matches no live row is a no-op here — SQL MERGE inserts it
+          when a WHEN NOT MATCHED THEN INSERT clause applies, which is
+          how :func:`~.manifest_datasource.manifest_sql` runs it.  When
+          one source batch carries a marked and an unmarked row for
+          the same key, clauses apply per source row: the delete
+          removes the live row and the upsert re-inserts.  A partition
+          emptied by deletes drops from the table.
+        - WHEN NOT MATCHED BY SOURCE: live rows whose key tuple appears
+          in NO source row are deleted (``not_matched_by_source_delete``
+          =True, or a Column/SQL condition over the target row) or
+          close-out updated (``not_matched_by_source_update={"col":
+          expr}``, optionally gated by
+          ``not_matched_by_source_condition``) in the same commit —
+          the full-snapshot dimension sync (the reference's SCD-2
+          hard-delete invalidation,
+          snapshots/russell3000_constituents_snapshot.sql:4-12).  The
+          clause addresses the whole target: a column-pruned anti-join
+          probe finds the partitions holding affected rows.  An EMPTY
+          source with an unconditional delete clause empties the table
+          — exactly SQL MERGE's contract; guard the source upstream.
 
-        ``cdf=True`` also captures this merge's ROW-LEVEL change feed
-        (insert / update_preimage / update_postimage — plus 'delete'
-        rows for the delete clause — Delta CDF shape, VERDICT r8 #6)
-        in the SAME commit: the classified change rows stage beside
-        the data and publish atomically with it, readable via
-        :meth:`changes` for as long as the commit's manifest survives
-        vacuum retention.
+        ``cdf=True`` captures the row-level change feed in the same
+        commit (Delta CDF shape, read via :meth:`changes`): a replaced
+        live row is ``update_preimage`` and its replacement
+        ``update_postimage``, a source row with no live match is
+        ``insert``, a delete-clause or by-source removal is ``delete``
+        and a close-out is a pre/post pair; a key deleted and
+        re-inserted by one batch is 'delete' + 'insert'.
 
-        WHEN NOT MATCHED BY SOURCE (Delta's third clause family,
-        VERDICT r10 #3 — the reference's full-snapshot SCD-2
-        hard-delete invalidation,
-        snapshots/russell3000_constituents_snapshot.sql:4-12, done
-        table-natively): target rows whose key tuple appears in NO
-        source row are handled in the SAME atomic commit —
-        ``not_matched_by_source_delete=True`` (or a Column/SQL
-        condition over the target row) deletes them;
-        ``not_matched_by_source_update={"col": expr}`` close-out
-        updates them (``not_matched_by_source_condition`` optionally
-        gates it).  The clause inherently addresses the whole target:
-        a column-pruned anti-join probe finds the partitions holding
-        affected rows, and only THOSE are rewritten (rewrite mode) or
-        dead-marked + re-appended (``mode='dv'`` — O(affected rows)
-        write cost, the 100 TB path).  CDF classifies by-source
-        deletes as 'delete' and close-outs as update pre/post images.
-        NOTE an EMPTY source with an unconditional delete clause
-        empties the table — exactly SQL MERGE's contract; guard the
-        source upstream (the runner's WAP audits are the right
-        place)."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"merge mode {mode!r}: expected "
-                             f"'rewrite' or 'dv'")
+        ``mode="rewrite"`` (copy-on-write) rewrites every touched
+        partition and makes a single commit attempt against the
+        snapshot it staged from.  ``mode="dv"`` is the low-shuffle
+        variant (merge-on-read): the matched live rows are dead-marked
+        with deletion-vector sidecars and the new row images appended
+        as new files — the same visible rows and change feed at
+        O(matched + source rows) write cost instead of O(touched
+        partitions); reads pay the DV anti-join until :meth:`compact`
+        materializes it, and a competitor disjoint from the addressed
+        partitions is rebased over.  Returns ``{"rows_dead",
+        "rows_appended"}`` in dv mode, None in rewrite mode.
+        ``validate_key_stability``: see :meth:`_stage_merge`."""
         mf = self._raw()
-        self._check_schema(updates, mf)
-        by_source = self._parse_by_source(
-            mf, keys, not_matched_by_source_delete,
-            not_matched_by_source_update,
-            not_matched_by_source_condition)
-        # NOTE (r16, measured): persisting ``updates`` here for its
-        # 3+ consumers was TRIED and reverted — materializing the
-        # cache forces all columns while each consumer is
+        # ``updates`` is not persisted here: each consumer reads it
         # column-pruned (the touched-partition distinct reads one
-        # column), so the A/B ran ~0.5 s SLOWER at sf0.1.  Recompute
-        # with pruning beats cache without it (guide §5).  A caller
-        # whose source is EXPENSIVE materializes it before calling —
-        # incremental_momentum_run persists its trailing recompute,
-        # whose lineage is the whole history — so keep this generic.
-        if mode == "dv":
-            st = self._stage_merge_dv(spark, mf, updates, keys,
-                                      validate_key_stability, cdf,
-                                      when_matched_delete, by_source)
-            if st is None:
-                return {"rows_dead": 0, "rows_appended": 0}
-            adds, dvs, counts, cdf_entries = st
-            if _crash_before_commit:
-                raise CrashInjected(
-                    "writer died after staging, before commit")
-
-            def build(snap: dict) -> dict:
-                _check_unchanged(
-                    mf, snap, set(counts) | set(adds),
-                    "a concurrent writer changed a partition this "
-                    "merge addressed by row position; re-run "
-                    "merge() against the new snapshot")
-                return {"partitions": self._rebuilt_parts(
-                            snap, adds, dvs, counts),
-                        "cdf": cdf_entries}
-
-            self._transact(build, snap=mf)
-            return {"rows_dead": sum(counts.values()),
-                    "rows_appended": sum(e["rows"] for es in adds.values()
-                                         for e in es)}
-        staged, cdf_entries, touched = self._stage_merge(
-            spark, mf, updates, keys, validate_key_stability,
-            capture_cdf=cdf, when_matched_delete=when_matched_delete,
-            by_source=by_source)
-        # a touched live partition absent from the staged map was
-        # consumed by the rewrite without producing rows under its old
-        # key: emptied by a delete clause (delete_where's
-        # partitions_dropped analog), or MIGRATED to the active spec
-        # by partition evolution (its rows re-staged under new value
-        # strings).  Either way carrying the stale ref would duplicate
-        # or resurrect rows — drop it.  Single-era, delete-free merges
-        # always re-stage every touched live partition under its own
-        # key, so this set is empty there (the pre-evolution behavior).
-        dropped = {v for v in touched - set(staged)
-                   if v in mf["partitions"]}
-        if not staged and not dropped:
-            return          # empty update, or deletes that matched nothing
+        # column), and a cache would force every column — measured
+        # slower at sf0.1.  A caller whose source is EXPENSIVE
+        # materializes it first (incremental_momentum_run persists its
+        # trailing recompute, whose lineage is the whole history).
+        ch = self._stage_merge(
+            spark, mf, updates, keys, mode, cdf, when_matched_delete,
+            not_matched_by_source_delete, not_matched_by_source_update,
+            not_matched_by_source_condition, validate_key_stability,
+            _insert_unmatched_marked)
+        out = None if mode == "rewrite" else {
+            "rows_dead": sum(ch.removed.values()),
+            "rows_appended": sum(e["rows"] for es in ch.adds.values()
+                                 for e in es)}
+        if not (ch.rewritten or ch.adds or ch.dvs):
+            return out      # empty update, or deletes that matched nothing
         if _crash_before_commit:
             raise CrashInjected("writer died after staging, before commit")
         if _pre_commit_hook is not None:
             _pre_commit_hook()
-        parts = {**mf["partitions"], **staged}
-        for v in dropped:
-            parts.pop(v, None)
-        self._transact(lambda snap: {"partitions": parts,
-                                     "cdf": cdf_entries},
-                       snap=mf, attempts=1)
-
-    def _stage_merge_dv(self, spark: SparkSession, mf: dict,
-                        updates: DataFrame, keys: list[str],
-                        validate_key_stability: bool, cdf: bool,
-                        when_matched_delete,
-                        by_source=None) -> tuple | None:
-        """:meth:`merge`'s low-shuffle staging against ``mf``: dead-mark
-        every matched live row (DV sidecars) and stage the upsert rows
-        as new files.  Returns ``(adds, dvs, dv_rows, cdf_entries)`` —
-        staged file entries, DV sidecars and dead-row counts per
-        partition value — for the caller to commit through
-        :meth:`_rebuilt_parts`, or None when the update touches no
-        partition.  Visible semantics must equal rewrite-mode merge
-        exactly — the model test drives both through random op
-        sequences.
-
-        ``by_source``: NOT-MATCHED-BY-SOURCE rows dead-mark like any
-        other removal (delete form) or dead-mark + re-append their
-        close-out image (update form) — write cost O(affected rows),
-        zero data files rewritten: the scale path for a full-snapshot
-        sync whose drift is small against a huge target."""
-        del_rows, upserts, touched, src_keys = self._merge_scope(
-            spark, mf, updates, keys, validate_key_stability,
-            when_matched_delete, by_source)
-        if not touched:
-            return None
-        live = mf["partitions"]
-        live_touched = [v for v in touched if v in live]
-        prior_files = [os.path.join(self.root, e["path"])
-                       for v in live_touched
-                       for e in self._entries(mf, v)]
-        dv_staged: dict[str, list] = {}
-        counts: dict[str, int] = {}
-        cdf_frame = None
-        append_df = upserts
-        if prior_files:
-            current = self._read_files(spark, prior_files, mf,
-                                       keep_pos=True,
-                                       partitions=live_touched)
-            bs_affected = bs_closed = None
-            if by_source is not None:
-                bs_affected, current = self._by_source_split(
-                    current, src_keys, keys, by_source)
-                if by_source[0] == "update":
-                    bs_closed = self._by_source_assign(
-                        mf, bs_affected.drop("__rel", "__ri"),
-                        by_source)
-                    append_df = upserts.unionByName(bs_closed)
-            # EVERY matched live row dies: an upsert replaces it, a
-            # delete-clause row removes it (unmatched deletes no-op
-            # via the semi join); a by-source row dies so its delete
-            # lands (or its close-out image replaces it)
-            match_keys = updates.select(*keys).distinct()
-            hits = current.join(match_keys, keys, "left_semi")
-            if bs_affected is not None:
-                hits = hits.unionByName(bs_affected)
-            # DV addresses target the ref that OWNS the file (parsed
-            # from __rel) — recomputing the transform from row data
-            # would mis-address rows living in older-era partitions
-            addr = hits.select(_owning_pt(mf).alias("__pt"),
-                               "__rel", "__ri")
-            dv_staged = self._stage_dv(addr)
-            counts = {v: sum(e["rows"] for e in es)
-                      for v, es in dv_staged.items() if es}
-            if cdf:
-                cur = current.drop("__rel", "__ri")
-                deleted = None
-                if del_rows is not None:
-                    del_keys = del_rows.select(*keys).distinct()
-                    deleted = cur.join(del_keys, keys, "left_semi")
-                    cur = cur.join(del_keys, keys, "left_anti")
-                cur_keys = cur.select(*keys).distinct()
-                pre = (cur.join(upserts.select(*keys).distinct(),
-                                keys, "left_semi")
-                       .withColumn("_change_type",
-                                   F.lit("update_preimage")))
-                post = (upserts.join(cur_keys, keys, "left_semi")
-                        .withColumn("_change_type",
-                                    F.lit("update_postimage")))
-                ins = (upserts.join(cur_keys, keys, "left_anti")
-                       .withColumn("_change_type", F.lit("insert")))
-                cdf_frame = pre.unionByName(post).unionByName(ins)
-                if deleted is not None:
-                    cdf_frame = cdf_frame.unionByName(
-                        deleted.withColumn("_change_type",
-                                           F.lit("delete")))
-                if bs_affected is not None:
-                    bs_rows = bs_affected.drop("__rel", "__ri")
-                    if by_source[0] == "delete":
-                        cdf_frame = cdf_frame.unionByName(
-                            bs_rows.withColumn("_change_type",
-                                               F.lit("delete")))
-                    else:
-                        cdf_frame = (cdf_frame.unionByName(
-                            bs_rows.withColumn(
-                                "_change_type",
-                                F.lit("update_preimage")))
-                            .unionByName(bs_closed.withColumn(
-                                "_change_type",
-                                F.lit("update_postimage"))))
-        elif cdf:
-            cdf_frame = upserts.withColumn("_change_type",
-                                           F.lit("insert"))
-        data_staged = self._stage(append_df)
-        cdf_entries = None
-        if cdf:
-            cdf_entries = [e for es in
-                           self._stage(cdf_frame, bloom=None,
-                                       enforce=False).values()
-                           for e in es]
-        return data_staged, dv_staged, counts, cdf_entries
+        self._transact(lambda snap: self._change_commit(mf, snap, ch,
+                                                        "merge"),
+                       snap=mf, attempts=(1 if mode == "rewrite"
+                                          else _COMMIT_ATTEMPTS))
+        return out
 
     def changes(self, spark: SparkSession, version: int) -> DataFrame:
         """ROW-LEVEL change feed for one commit (Delta's ``table_changes``
@@ -4209,81 +4079,40 @@ class ManifestTable:
                     mode: str = "rewrite",
                     _crash_before_commit: bool = False) -> bool:
         """Exactly-once streaming MERGE (the ``foreachBatch`` upsert
-        sink shape): the keyed merge's rewritten partitions and the
-        stream's high-water batch id commit in ONE atomic manifest
-        link — the table-level-transactional upgrade of the external
-        ledger + dynamic-partition-overwrite pattern this engine used
-        before (there is no crash window between "data merged" and
-        "batch remembered", and a crash mid-merge leaves the old
-        snapshot fully live).  A replayed batch id (checkpoint
-        recovery re-delivers the last uncommitted micro-batch) is
-        refused from the manifest ledger without staging a byte.
-        Returns True if the batch committed, False on replay.
+        sink): :meth:`merge`'s clauses, modes and change feed, with the
+        stream's high-water batch id committed in the SAME manifest
+        link as the data — no crash window between "data merged" and
+        "batch remembered".  A replayed batch id (checkpoint recovery
+        re-delivers the last uncommitted micro-batch) is refused from
+        the ledger without staging a byte.  Returns True if the batch
+        committed, False on replay.  With ``when_matched_delete`` this
+        is the CDC-ingest tombstone shape: Debezium-style op='d' rows
+        delete, the rest upsert.
 
-        Unlike :meth:`append_batch`, a :class:`CommitConflict` retry
-        must RE-STAGE: the merge read the pre-conflict snapshot, so
-        its staged output may miss the competing writer's rows.  The
-        abandoned attempt's files are invisible orphans for
-        ``vacuum()``.
-
-        ``cdf=True``: the batch's ROW-LEVEL change set commits with it
-        (see :meth:`merge` / :meth:`changes`) — a conflict retry
-        re-classifies against the NEW snapshot, so the published feed
-        always describes the commit that actually landed.
-
-        ``when_matched_delete``: the third MERGE clause (see
-        :meth:`merge`), here the CDC-ingest tombstone shape — a
-        Debezium-style stream carries op='d' rows, and the condition
-        routes them to DELETE while the rest upsert, exactly-once,
-        in the same atomic ledger commit.
-
-        ``mode="dv"``: the batch lands LOW-SHUFFLE (see :meth:`merge`
-        — matched rows dead-marked, update rows appended) with the
-        same exactly-once ledger: stream high-water, DV refs and new
-        files are ONE commit; a conflict retry re-checks the ledger
-        before re-staging, so a competitor landing the same batch id
-        turns our retry into a replay-refusal."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"merge_batch mode {mode!r}: expected "
-                             f"'rewrite' or 'dv'")
-
+        Unlike :meth:`merge` and :meth:`append_batch`, a
+        :class:`CommitConflict` retry RE-STAGES against the new
+        snapshot: the staged output read the pre-conflict partitions
+        and could miss the competitor's rows.  The retry re-checks the
+        ledger first, so a competitor landing the same batch id turns
+        it into a replay refusal, and the committed change feed always
+        describes the commit that landed.  The abandoned attempt's
+        files are invisible orphans for ``vacuum()``."""
         def build(mf: dict) -> dict | None:
             streams = dict(mf.get("streams", {}))
             if streams.get(stream_id, -1) >= batch_id:
                 return None                       # replay: already in
             streams[stream_id] = batch_id
-            self._check_schema(updates, mf)
-            by_source = self._parse_by_source(
-                mf, keys, not_matched_by_source_delete,
-                not_matched_by_source_update,
+            # an empty batch still commits its ledger entry
+            ch = self._stage_merge(
+                spark, mf, updates, keys, mode, cdf, when_matched_delete,
+                not_matched_by_source_delete, not_matched_by_source_update,
                 not_matched_by_source_condition)
-            if mode == "dv":
-                # an empty batch still commits its ledger entry
-                st = self._stage_merge_dv(spark, mf, updates, keys,
-                                          False, cdf,
-                                          when_matched_delete, by_source)
-                adds, dvs, counts, cdf_entries = (
-                    st or ({}, {}, {}, [] if cdf else None))
-                parts = self._rebuilt_parts(mf, adds, dvs, counts)
-            else:
-                staged, cdf_entries, touched = self._stage_merge(
-                    spark, mf, updates, keys, capture_cdf=cdf,
-                    when_matched_delete=when_matched_delete,
-                    by_source=by_source)
-                parts = {**mf["partitions"], **staged}
-                if when_matched_delete is not None or (
-                        by_source is not None
-                        and by_source[0] == "delete"):
-                    for v in touched - set(staged):
-                        parts.pop(v, None)
             if _crash_before_commit:
                 raise CrashInjected(
                     "writer died after staging, before commit")
-            return {"partitions": parts, "streams": streams,
-                    "cdf": cdf_entries}
+            return {**self._change_commit(mf, mf, ch, "merge_batch"),
+                    "streams": streams}
 
-        # every attempt re-stages against the snapshot it commits onto:
-        # a competitor may have rewritten the partitions this merge read
         return self._transact(build) is not None
 
     def append(self, df: DataFrame, cdf: bool = False) -> None:
@@ -5649,168 +5478,62 @@ class ManifestTable:
         ``condition`` is a Column (or SQL string) evaluated per row
         under SQL DELETE three-valued logic: a row is deleted only
         where the condition is TRUE — a NULL-valued condition KEEPS
-        the row (``kept = NOT coalesce(cond, false)``), matching
-        SQL/Delta DELETE.  A bare ``where(~cond)`` would silently drop
-        NULL-condition rows in rewritten partitions while identical
-        rows in match-free partitions survived — inconsistent across
-        partitions and undercounted (r8 ADVICE item 1).
-        ``where`` optionally carries {col: (lo, hi)} bounds implied by
-        the condition, used EXACTLY like :meth:`scan_plan`'s pruning:
+        the row, matching SQL/Delta DELETE (a bare ``where(~cond)``
+        would drop NULL-condition rows in rewritten partitions while
+        identical rows in match-free partitions survived).  ``where``
+        optionally carries {col: (lo, hi)} bounds implied by the
+        condition, used EXACTLY like :meth:`scan_plan`'s pruning:
         partitions/files the bounds exclude are never read.  Bounds
         must be implied by (i.e. a superset of) the condition — rows
-        outside them are assumed non-matching.
+        outside them are assumed non-matching.  ``cdf=True`` commits
+        the deleted rows as the change feed's 'delete' rows.
 
-        Write granularity, scale-shaped: one counting aggregation over
-        the candidate files finds the partitions that actually contain
-        matches; only THOSE are rewritten (filtered read-back, one
-        staging job).  A partition whose rows all match is dropped
-        from the table without writing a byte; untouched and
-        match-free partitions are carried by shard ref.  Returns
-        {"rows_deleted", "partitions_rewritten", "partitions_dropped"}.
-
+        ``mode="rewrite"``: one counting aggregation over the
+        candidate files finds the partitions that actually contain
+        matches; only THOSE are rewritten.  A partition whose rows all
+        match is dropped without writing a byte; untouched and
+        match-free partitions are carried by shard ref.
         ``mode="dv"`` is the MERGE-ON-READ variant (Delta deletion
         vectors / Iceberg positional deletes): no data file is
-        rewritten at all — tiny (rel, row_index) sidecar parquets
-        addressing exactly the matching rows are staged and attached
-        to the touched partitions' refs in one atomic commit.  Every
-        internal read funnels through :meth:`_read_files`, which
-        anti-joins live refs' DV rows away, so snapshot reads, merge
-        read-backs and compactions never resurrect them; a later
-        :meth:`compact` MATERIALIZES the delete (rewritten partitions
-        drop their DVs, whose sidecars then age out via vacuum).  The
-        mode is for low-fraction deletes — read cost grows by one
-        broadcast anti-join bounded by the DELETED-row count; a
-        high-fraction delete belongs in rewrite mode.  At 100 TB this
-        is the difference between a GDPR-style point delete costing
-        O(matching rows) metadata and costing a rewrite of every
-        touched gigabyte."""
-        if mode not in ("rewrite", "dv"):
-            raise ValueError(f"delete_where mode {mode!r}: "
-                             f"expected 'rewrite' or 'dv'")
+        rewritten — (rel, row_index) sidecars address exactly the
+        matching rows, and every internal read anti-joins them away
+        (:meth:`_read_files`) until a :meth:`compact` materializes the
+        delete.  The mode is for low-fraction deletes: read cost grows
+        by one broadcast anti-join bounded by the deleted-row count.
+        Returns {"rows_deleted", "partitions_rewritten",
+        "partitions_dropped"}; a competitor disjoint from the touched
+        partitions is rebased over."""
         if isinstance(condition, str):
             condition = F.expr(condition)
         mf = self._raw()
-        plan = self.scan_plan(where)
-        if not plan["files"]:
+        return self._delete(spark, condition, self.scan_plan(where), mf,
+                            cdf, _crash_before_commit, mode)
+
+    def _delete(self, spark: SparkSession, condition, plan: dict,
+                mf: dict, cdf: bool, _crash_before_commit: bool,
+                mode: str = "dv") -> dict:
+        """:meth:`delete_where` over a resolved ``plan`` of the snapshot
+        ``mf`` (``_delete_dv`` is its merge-on-read form, which the
+        conflict tests drive against a stale ``mf``)."""
+        hit = F.coalesce(condition, F.lit(False))
+        ch = self._stage_rows(
+            spark, mf, mode, plan["partitions"],
+            lambda cur: (cur.where(~hit), cur.where(hit), None,
+                         [(cur.where(hit), "delete")]),
+            cdf, files=plan["files"], matched_only=True)
+        if not ch.removed:
             return {"rows_deleted": 0, "partitions_rewritten": 0,
                     "partitions_dropped": 0}
-        if mode == "dv":
-            return self._delete_dv(spark, condition, plan, mf,
-                                   cdf, _crash_before_commit)
-        # group matches by the OWNING partition (file address), not
-        # the recomputed transform: under partition evolution a
-        # matching row's active-era value can name a different live
-        # partition than the one holding its file
-        cand = self._read_files(spark, plan["files"], mf,
-                                keep_pos=True,
-                                partitions=plan["partitions"])
-        counts = {r["__v"]: r["n"] for r in
-                  (cand.where(condition)
-                   .groupBy(_owning_pt(mf).alias("__v"))
-                   .agg(F.count(F.lit(1)).alias("n")).collect())}
-        if not counts:
-            return {"rows_deleted": 0, "partitions_rewritten": 0,
-                    "partitions_dropped": 0}
-        rewrite_files = [os.path.join(self.root, e["path"])
-                         for v in counts for e in self._entries(mf, v)]
-        kept = self._read_files(spark, rewrite_files, mf,
-                                partitions=list(counts)).where(
-            ~F.coalesce(condition, F.lit(False)))
-        staged = self._stage(kept, enforce=False)
-        cdf_entries = None
-        if cdf:
-            # the deleted rows, classified — Delta CDF's delete rows
-            # (one extra write of exactly the removed subset, opt-in)
-            deleted = (self._read_files(spark, rewrite_files, mf,
-                                        partitions=list(counts))
-                       .where(F.coalesce(condition, F.lit(False)))
-                       .withColumn("_change_type", F.lit("delete")))
-            cdf_entries = [e for es in
-                           self._stage(deleted, bloom=None,
-                                       enforce=False).values()
-                           for e in es]
         if _crash_before_commit:
             raise CrashInjected("writer died after staging, before commit")
-        # same conflict matrix as compact(): a competitor that touched
-        # none of the partitions this delete read/rewrote is DISJOINT
-        # — rebase over its commit; one that did makes the staged
-        # rewrite stale (it could resurrect deleted rows or drop the
-        # competitor's) — surface CommitConflict for a re-run.
-        def build(snap: dict) -> dict:
-            _check_unchanged(mf, snap, counts,
-                             "a concurrent writer rewrote a partition "
-                             "this delete read; re-run delete_where() "
-                             "against the new snapshot")
-            parts = {v: r for v, r in snap["partitions"].items()
-                     if v not in counts}
-            return {"partitions": {**parts, **staged},
-                    "cdf": cdf_entries}
+        parts = self._transact(
+            lambda snap: self._change_commit(mf, snap, ch, "delete_where"),
+            snap=mf)["partitions"]
+        return {"rows_deleted": sum(ch.removed.values()),
+                "partitions_rewritten": len(ch.adds),
+                "partitions_dropped": len(set(ch.removed) - set(parts))}
 
-        self._transact(build, snap=mf)
-        return {"rows_deleted": sum(counts.values()),
-                "partitions_rewritten": len(staged),
-                "partitions_dropped": len(set(counts) - set(staged))}
-
-    def _delete_dv(self, spark: SparkSession, condition, plan: dict,
-                   mf: dict, cdf: bool,
-                   _crash_before_commit: bool) -> dict:
-        """:meth:`delete_where`'s merge-on-read body.  Row addresses
-        come from the SAME ``__rel`` derivation every reader uses
-        (:meth:`_read_files` with ``keep_pos``), and the read applies
-        any EXISTING DVs first — so an already-dead row can never be
-        re-addressed and per-ref ``dv_rows`` counts stay exact.  A
-        partition whose dead count reaches its row count is dropped
-        from the table outright (its sidecars become vacuum-ageable
-        orphans once history expires)."""
-        hits = (self._read_files(spark, plan["files"], mf,
-                                 keep_pos=True,
-                                 partitions=plan["partitions"])
-                .where(F.coalesce(condition, F.lit(False))))
-        # owning-partition addressing (see _owning_pt): era-exact
-        # under partition evolution, identical to the transform on
-        # single-era tables
-        addr = hits.select(_owning_pt(mf).alias("__pt"),
-                           "__rel", "__ri")
-        dv_staged = self._stage_dv(addr)
-        counts = {v: sum(e["rows"] for e in es)
-                  for v, es in dv_staged.items() if es}
-        if not counts:
-            return {"rows_deleted": 0, "partitions_rewritten": 0,
-                    "partitions_dropped": 0}
-        cdf_entries = None
-        if cdf:
-            deleted = (self._read_files(
-                           spark, plan["files"], mf,
-                           partitions=plan["partitions"])
-                       .where(F.coalesce(condition, F.lit(False)))
-                       .withColumn("_change_type", F.lit("delete")))
-            cdf_entries = [e for es in
-                           self._stage(deleted, bloom=None,
-                                       enforce=False).values()
-                           for e in es]
-        if _crash_before_commit:
-            raise CrashInjected(
-                "writer died after staging, before commit")
-
-        # positional addresses are only valid against the exact file
-        # set they were computed over: any change to a touched
-        # partition (rewrite OR append — both replace its shard)
-        # invalidates them; untouched-partition commits rebase cleanly
-        def build(snap: dict) -> dict:
-            _check_unchanged(mf, snap, counts,
-                             "a concurrent writer changed a partition "
-                             "this delete addressed by row position; "
-                             "re-run delete_where() against the new "
-                             "snapshot")
-            return {"partitions": self._rebuilt_parts(
-                        snap, {}, dv_staged, counts),
-                    "cdf": cdf_entries}
-
-        parts = self._transact(build, snap=mf)["partitions"]
-        return {"rows_deleted": sum(counts.values()),
-                "partitions_rewritten": 0,
-                # every row dead: the partition dropped
-                "partitions_dropped": len(set(counts) - set(parts))}
+    _delete_dv = _delete
 
     def update_where(self, spark: SparkSession,
                      set_exprs: dict, condition,
@@ -5829,91 +5552,53 @@ class ManifestTable:
         rows), not a full-table rewrite.
 
         ``set_exprs`` maps column -> Column or SQL string evaluated
-        over the MATCHED row (``{"close": "close * split_ratio"}``).
-        Assigning the partition column is supported: the new image
-        simply lands in its new partition while the DV kills the old
-        position (how Delta handles partition-value updates).
-        ``condition`` follows DELETE three-valued logic (NULL keeps
-        the row untouched).  ``where`` optionally carries pruning
-        bounds exactly like :meth:`scan_plan`.  ``cdf=True`` commits
-        the classified update_preimage/update_postimage rows with the
-        data (:meth:`changes` serves them; ivm folds them).
+        over the MATCHED row (``{"close": "close * split_ratio"}``),
+        cast to the column's pinned type.  Assigning the partition
+        column is supported: the new image simply lands in its new
+        partition while the DV kills the old position (how Delta
+        handles partition-value updates).  ``condition`` follows
+        DELETE three-valued logic (NULL keeps the row untouched).
+        ``where`` optionally carries pruning bounds exactly like
+        :meth:`scan_plan`.  ``cdf=True`` commits the classified
+        update_preimage/update_postimage rows with the data
+        (:meth:`changes` serves them; ivm folds them).
 
         Returns {"rows_updated", "partitions_rewritten": 0,
         "partitions_touched"}.  Conflict matrix: positional addresses
         invalidate on ANY change to a touched partition — raise; a
         disjoint competitor rebases."""
+        mf = self._raw()
         for c in set_exprs:
-            if c not in {n for n, _ in
-                         (self._raw().get("schema") or [])}:
+            if c not in {n for n, _ in (mf.get("schema") or [])}:
                 raise SchemaMismatch(
                     f"update_where assigns unknown column {c!r}")
         if isinstance(condition, str):
             condition = F.expr(condition)
-        mf = self._raw()
         plan = self.scan_plan(where)
-        if not plan["files"]:
+        hit = F.coalesce(condition, F.lit(False))
+
+        def change(cur: DataFrame) -> tuple:
+            old = cur.where(hit)
+            new = self._assign(mf, old.drop("__rel", "__ri"), set_exprs)
+            return None, old, new, [(old, "update_preimage"),
+                                    (new, "update_postimage")]
+
+        ch = self._stage_rows(spark, mf, "dv", plan["partitions"], change,
+                              cdf, files=plan["files"], matched_only=True)
+        if not ch.removed:
             return {"rows_updated": 0, "partitions_rewritten": 0,
                     "partitions_touched": 0}
-        hits = (self._read_files(spark, plan["files"], mf,
-                                 keep_pos=True,
-                                 partitions=plan["partitions"])
-                .where(F.coalesce(condition, F.lit(False))))
-        # addresses FIRST (the pre-update partition/position, from the
-        # OWNING file address — era-exact under partition evolution),
-        # then the updated images (which may move partitions)
-        addr = hits.select(_owning_pt(mf).alias("__pt"),
-                           "__rel", "__ri")
-        dv_staged = self._stage_dv(addr)
-        counts = {v: sum(e["rows"] for e in es)
-                  for v, es in dv_staged.items() if es}
-        if not counts:
-            return {"rows_updated": 0, "partitions_rewritten": 0,
-                    "partitions_touched": 0}
-        updated = hits.drop("__rel", "__ri")
-        pre = post = None
-        if cdf:
-            pre = updated.withColumn("_change_type",
-                                     F.lit("update_preimage"))
-        # SQL UPDATE assignment semantics: every assigned value casts
-        # to the column's PINNED type (a literal like "0.0" parses as
-        # DECIMAL — without the cast the staged files would change the
-        # column type under the table)
-        dtypes = {n: t for n, t in (mf.get("schema") or [])}
-        for c, expr in set_exprs.items():
-            col = F.expr(expr) if isinstance(expr, str) else expr
-            updated = updated.withColumn(c, col.cast(dtypes[c]))
-        data_staged = self._stage(updated)
-        cdf_entries = None
-        if cdf:
-            post = updated.withColumn("_change_type",
-                                      F.lit("update_postimage"))
-            cdf_entries = [e for es in
-                           self._stage(pre.unionByName(post),
-                                       bloom=None,
-                                       enforce=False).values()
-                           for e in es]
         if _crash_before_commit:
             raise CrashInjected(
                 "writer died after staging, before commit")
-        touched = sorted(set(counts) | set(data_staged))
-
-        def build(snap: dict) -> dict:
-            _check_unchanged(mf, snap, touched,
-                             "a concurrent writer changed a partition "
-                             "this update addressed by row position; "
-                             "re-run update_where() against the new "
-                             "snapshot")
-            # updated images may MOVE rows into new partitions, and a
-            # partition whose rows all moved away drops
-            return {"partitions": self._rebuilt_parts(
-                        snap, data_staged, dv_staged, counts),
-                    "cdf": cdf_entries}
-
-        self._transact(build, snap=mf)
-        return {"rows_updated": sum(counts.values()),
+        # updated images may MOVE rows into new partitions, and a
+        # partition whose rows all moved away drops
+        self._transact(lambda snap: self._change_commit(mf, snap, ch,
+                                                        "update_where"),
+                       snap=mf)
+        return {"rows_updated": sum(ch.removed.values()),
                 "partitions_rewritten": 0,
-                "partitions_touched": len(touched)}
+                "partitions_touched": len(set(ch.removed) | set(ch.adds))}
 
     def compact_dvs(self, spark: SparkSession,
                     min_sidecars: int = 2) -> dict:

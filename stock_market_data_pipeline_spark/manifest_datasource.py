@@ -2193,7 +2193,10 @@ def _run_dml(spark, query: str, plan, kind: str, name: str, mts: dict,
         when_matched_delete=_disjunction(deletes) if deletes else None,
         not_matched_by_source_delete=(
             None if not by_source else True if "true" in by_source
-            else _disjunction(by_source)))
+            else _disjunction(by_source)),
+        # a marked source row that matches no target row is NOT
+        # MATCHED, so the statement's INSERT * takes it
+        _insert_unmatched_marked=ins)
     return metrics(num_affected_rows=(
         (out or {}).get("rows_dead", 0)
         + (out or {}).get("rows_appended", 0)) or updates.count())
@@ -2237,8 +2240,9 @@ def manifest_sql(spark, query: str, tables: dict,
       ...]`` with ``WHEN MATCHED [AND c] THEN DELETE``, ``WHEN
       MATCHED THEN UPDATE SET *``, ``WHEN NOT MATCHED THEN INSERT *``
       and ``WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE``.  MERGE
-      follows :meth:`ManifestTable.merge`: a source row a DELETE
-      clause's condition marks never inserts, matched or not.
+      follows :meth:`ManifestTable.merge`, except that a source row
+      a DELETE clause's condition marks but that matches no target
+      row is inserted when the statement has ``INSERT *``.
       ``cdf=True`` captures the row-level change feed in the same
       commit.
     - **DDL** (:func:`_run_ddl`): ``ALTER TABLE`` ADD COLUMNS,

@@ -1,8 +1,8 @@
 """Model-based test of the manifest table: a random SEQUENCE of
-merge / append / delete (rewrite AND merge-on-read dv) / update_where
-/ overwrite / restore / compact / evolve / vacuum operations must
-leave the table's visible rows equal to an in-memory dict model
-applying the same semantics — the cross-operation interactions
+merge / merge_batch / append / delete (rewrite AND merge-on-read dv)
+/ update_where / overwrite / restore / compact / evolve / vacuum
+operations must leave the table's visible rows equal to an in-memory
+dict model applying the same semantics — the cross-operation interactions
 (delete after evolve, compact after delete, merge over appended
 duplicates…) that single-operation tests can't cover.
 
@@ -33,6 +33,10 @@ _ops = st.lists(
                                              max_size=3)),
         st.tuples(st.just("merge_dv"), st.lists(_row, min_size=1,
                                                 max_size=3)),
+        st.tuples(st.just("merge_batch"), st.lists(_row, min_size=1,
+                                                   max_size=3)),
+        st.tuples(st.just("merge_batch_dv"),
+                  st.lists(_row, min_size=1, max_size=3)),
         st.tuples(st.just("append"), st.lists(_row, min_size=1,
                                               max_size=2)),
         st.tuples(st.just("dsv2_append"), st.lists(_row, min_size=1,
@@ -106,11 +110,16 @@ def test_random_op_sequences_match_dict_model(spark, tmp_path_factory,
             table.add_columns([("venue", "string")])
             evolved = True
         venue_val = "X" if evolved else None
-        if kind in ("merge", "merge_dv"):
-            table.merge(spark, _mk(spark, payload, venue=evolved),
-                        ["ticker", "trade_date"],
-                        mode=("dv" if kind == "merge_dv"
-                              else "rewrite"))
+        if kind in ("merge", "merge_dv", "merge_batch", "merge_batch_dv"):
+            df = _mk(spark, payload, venue=evolved)
+            mode = "dv" if kind.endswith("_dv") else "rewrite"
+            if kind.startswith("merge_batch"):
+                # the streaming sink applies merge's semantics; batch
+                # ids only grow, so none is refused as a replay
+                assert table.merge_batch(
+                    spark, df, ["ticker", "trade_date"], "s", i, mode=mode)
+            else:
+                table.merge(spark, df, ["ticker", "trade_date"], mode=mode)
             for (t, d, c) in payload:
                 model[(t, d)] = []
             for (t, d, c) in payload:

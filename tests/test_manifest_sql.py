@@ -253,6 +253,26 @@ def test_sql_merge_not_matched_by_source_delete(spark, t):
     assert t.read(spark).agg(F.max("id")).collect()[0][0] == 49
 
 
+def test_sql_merge_inserts_unmatched_delete_marked_row(spark, tmp_path):
+    """A source row the DELETE condition marks but that matches no
+    target row is NOT MATCHED, so the statement's INSERT * takes it
+    (SQL MERGE); the Python API's rule drops it."""
+    t = ManifestTable.create(_frame(spark, 0, 3), str(tmp_path / "m"),
+                             ts="pt")
+    manifest_sql(
+        spark,
+        "MERGE INTO t USING (SELECT * FROM VALUES (1, '1', 5.0), "
+        "(7, '1', 5.0) AS x(id, pt, v)) s ON t.id = s.id "
+        "WHEN MATCHED AND s.v > 1 THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+        {"t": t}, cdf=True)
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 2, 7]
+    assert sorted((r["id"], r["_change_type"]) for r in
+                  t.changes(spark, t.version()).collect()) == [
+        (1, "delete"), (7, "insert")]
+
+
 def test_sql_merge_rejects_unsupported_grammar(spark, t):
     spark.range(3).createOrReplaceTempView("srcv")
     with pytest.raises(ValueError, match="conjunctions"):

@@ -16,9 +16,10 @@ statements, mixed-case keywords and table names, backticked names.
 DuckDB gets plain SQL with the same values.
 
 DuckDB 1.0 has no MERGE, so a MERGE is modelled as DELETE, UPDATE and
-INSERT in one DuckDB transaction, following ``ManifestTable.merge``:
-a source row a WHEN MATCHED ... DELETE condition marks removes its
-matched target row and never inserts."""
+INSERT in one DuckDB transaction, under SQL MERGE's rule: a source
+row a WHEN MATCHED ... DELETE condition marks removes its matched
+target row, and a source row that matches no target row is inserted
+when the statement has WHEN NOT MATCHED THEN INSERT, marked or not."""
 
 from __future__ import annotations
 
@@ -303,11 +304,12 @@ def test_manifest_sql_matches_duckdb(spark, tmp_path_factory, plan,
         m.feed("SELECT * FROM ms WHERE NOT __m AND __hit",
                "update_postimage", ver)
         c.execute(f"DELETE FROM fz WHERE id IN ({upd})")
-        m.feed("SELECT * FROM ms WHERE NOT __m AND NOT __hit", "insert",
-               ver)
+        # every unmatched source row is NOT MATCHED: INSERT * takes it
+        ins = "NOT __hit" if upsert else "false"
+        m.feed(f"SELECT * FROM ms WHERE {ins}", "insert", ver)
         # the updated rows' new images and the inserted rows
         c.execute(f"INSERT INTO fz SELECT {', '.join(m.cols)} FROM ms "
-                  f"WHERE NOT __m")
+                  f"WHERE (NOT __m AND __hit) OR {ins}")
         c.execute("COMMIT")
         record(ver)
 

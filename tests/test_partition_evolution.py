@@ -69,13 +69,19 @@ def test_read_totals_across_eras(spark, tmp_path):
     assert t.read(spark).count() == df.count() + 2
 
 
-def test_merge_migrates_old_partitions(spark, tmp_path):
+@pytest.mark.parametrize("write", ["merge", "merge_batch"])
+def test_merge_migrates_old_partitions(spark, tmp_path, write):
     t, df = _mk_evolved(spark, tmp_path)
     up = spark.createDataFrame(
         [("2024-02-05", "T2", 777.0),      # matches a row in an OLD-era ref
          ("2024-05-05", "T0", 5.0)],       # brand new month
         df.schema)
-    t.merge(spark, up, keys=["ticker", "trade_date"])
+    if write == "merge":
+        t.merge(spark, up, keys=["ticker", "trade_date"])
+    else:
+        # the streaming sink must land the same table as the batch merge
+        t.merge_batch(spark, up, ["ticker", "trade_date"],
+                      stream_id="s", batch_id=0)
     r = t.read(spark)
     # 6 base + 2 appended + 1 new-month insert; the Feb row UPDATED
     assert r.count() == df.count() + 3
@@ -130,6 +136,22 @@ def test_delete_where_across_eras(spark, tmp_path):
     mf = t._raw()
     assert "2024-03-05" not in mf["partitions"]
     assert "2024-04" not in mf["partitions"]
+
+
+def test_delete_restages_into_live_active_era_ref(spark, tmp_path):
+    """A rewrite delete restages an old-era ref's surviving rows under
+    the ACTIVE spec; when that value is already live they must join
+    its ref, not replace it (which dropped the active-era rows)."""
+    schema = "trade_date string, ticker string, px double"
+    t = ManifestTable.create(spark.createDataFrame(
+        [("2024-03-05", "A", 1.0), ("2024-03-05", "B", 2.0)], schema),
+        str(tmp_path / "t"), "trade_date")
+    t.evolve_partition("month")
+    t.append(spark.createDataFrame([("2024-03-10", "C", 3.0)], schema))
+    assert t.delete_where(spark, "ticker = 'A'")["rows_deleted"] == 1
+    assert sorted(r["ticker"] for r in t.read(spark).collect()) == [
+        "B", "C"]
+    assert sorted(t._raw()["partitions"]) == ["2024-03"]
 
 
 def test_delete_dv_targets_owning_ref(spark, tmp_path):
