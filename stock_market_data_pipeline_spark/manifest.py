@@ -1137,6 +1137,58 @@ def _bloom_positions(canon: str, m: int, k: int) -> list[int]:
     return [(h1 + i * step) % m for i in range(k)]
 
 
+def _canon_path(uri: str) -> str:
+    """An ``input_file_name()`` URI as the driver's absolute path."""
+    import urllib.parse
+
+    return os.path.abspath(
+        urllib.parse.unquote(urllib.parse.urlparse(uri).path))
+
+
+def _bloom_words(df: DataFrame, vals: dict, m: int, k: int) -> tuple:
+    """THE JVM-side Bloom build, the hashing contract
+    :func:`_bloom_positions` replays on the driver: for each ``vals``
+    key, its string Column over ``df`` (a generator such as
+    ``explode`` is allowed; NULLs set no bits) goes md5 → two 60-bit
+    halves → Kirsch-Mitzenmacher positions → ``bit_or`` of 64-bit word
+    masks grouped by (file, key, word).  Returns ``(seen, words)``.
+
+    ``seen`` is the absolute path of every file the job read — the
+    COVERAGE GATE: a filter may only be attached to a file the build
+    provably read under the path the driver resolves, or a
+    normalization miss (scheme, symlink, case) would leave a populated
+    file with an empty filter that probes then wrong-skip.  This
+    distinct-file pass also names files whose values are all NULL.
+    ``words`` is one ``(path, key, word, bits)`` per SET word: at most
+    files · keys · m/64 rows, never O(rows)."""
+    seen = {_canon_path(r["_f"]) for r in
+            df.select(F.input_file_name().alias("_f"))
+            .distinct().collect()}
+    hexc = F.md5(F.col("_v"))
+    probes = reduce(DataFrame.unionByName, [
+        df.select(F.input_file_name().alias("_f"), F.lit(key).alias("_c"),
+                  v.alias("_v"))
+        for key, v in vals.items()])
+    rows = (probes.select(
+                "_f", "_c",
+                F.conv(F.substring(hexc, 1, 15), 16, 10)
+                 .cast("long").alias("_h1"),
+                F.conv(F.substring(hexc, 17, 15), 16, 10)
+                 .cast("long").alias("_h2"))
+            .where(F.col("_h1").isNotNull())
+            .withColumn("_step", F.expr(f"pmod(_h2, {m}) | 1L"))
+            .withColumn("_pos", F.explode(F.expr(
+                f"transform(sequence(0, {k - 1}), "
+                f"i -> pmod(_h1 + i * _step, {m}))")))
+            .groupBy("_f", "_c",
+                     F.expr("cast(_pos div 64 as int)").alias("_w"))
+            .agg(F.expr("bit_or(shiftleft(1L, cast(pmod(_pos, 64) "
+                        "as int)))").alias("_b"))
+            .collect())
+    return seen, [(_canon_path(r["_f"]), r["_c"], str(r["_w"]), r["_b"])
+                  for r in rows]
+
+
 #: sentinel: the probe value provably matches NO row of the column's
 #: domain (e.g. 'abc' or 7.5 probing a bigint column) — distinct from
 #: None = "cannot render faithfully, keep the file".
@@ -1930,7 +1982,7 @@ class ManifestTable:
 
     def _enforce_constraints(self, spark: SparkSession, cons: dict,
                              staged: dict[str, list],
-                             cm: dict) -> None:
+                             schema: list, cm: dict) -> None:
         """Validate freshly-staged files against the table's CHECK /
         NOT NULL constraints, METADATA-FIRST: a range check is PROVEN
         per file by its footer zone map (min >= lo and max <= hi) and
@@ -1946,8 +1998,9 @@ class ManifestTable:
         semantics: a NULL check expression PASSES (declare NOT NULL
         to reject nulls).  Raises :class:`ConstraintViolation` before
         anything commits; the staged txn ages out as a vacuum
-        orphan."""
-        scan_files: list[str] = []
+        orphan.  ``schema`` and ``cm`` are the staged files' logical
+        (name, type) signature and column mapping."""
+        scan: list[dict] = []
         scan_names: set[str] = set()
         for value, entries in staged.items():
             for e in entries:
@@ -1986,30 +2039,26 @@ class ManifestTable:
                         unproven.append(name)   # incomparable: scan
                         continue
                 if unproven:
-                    scan_files.append(os.path.join(self.root,
-                                                   e["path"]))
+                    scan.append(self._file_record({}, e))
                     scan_names.update(unproven)
-        if not scan_files:
+        if not scan:
             return
-        df = spark.read.parquet(*scan_files)
-        for logical, physical in cm.items():
-            if physical in df.columns and physical != logical:
-                df = df.withColumnRenamed(physical, logical)
+        df = self._read_files(spark, scan, {"schema": schema, "colmap": cm},
+                              keep_pos=True)
         viol = [(n, self._constraint_pred(cons[n]))
                 for n in sorted(scan_names)]
         flagged = df.select(
-            F.input_file_name().alias("__file"),
+            "__rel",
             *[F.expr(f"coalesce(NOT ({p}), false)").alias(f"__v{i}")
               for i, (_, p) in enumerate(viol)])
-        import functools as _ft
-        rows = (flagged.filter(_ft.reduce(
+        rows = (flagged.filter(reduce(
                     lambda a, b: a | b,
                     [F.col(f"__v{i}") for i in range(len(viol))]))
                 .limit(5).collect())
         if rows:
             broke = sorted({viol[i][0] for r in rows
                             for i in range(len(viol)) if r[f"__v{i}"]})
-            files = sorted({r["__file"] for r in rows})[:3]
+            files = sorted({r["__rel"] for r in rows})[:3]
             raise ConstraintViolation(
                 f"{self.root}: write violates constraint(s) {broke} "
                 f"(example file(s): {files}); nothing was committed")
@@ -2454,7 +2503,8 @@ class ManifestTable:
             # change files, the kept side of a rewrite delete) pass
             # enforce=False — they were validated when first written,
             # and CDF pre-images are change RECORDS, not table rows.
-            self._enforce_constraints(df.sparkSession, cons, out, cm)
+            self._enforce_constraints(df.sparkSession, cons, out,
+                                      _schema_sig(df), cm)
         spec = None
         if bloom == "auto":
             spec = (live_mf or {}).get("bloom")
@@ -2466,43 +2516,20 @@ class ManifestTable:
 
     def _attach_blooms(self, spark: SparkSession, txn_dir: str,
                        staged: dict[str, list], spec: dict) -> None:
-        """Build each staged file's per-column Bloom words with ONE
-        Spark job over the txn directory (the module-level hashing
-        contract), entirely JVM-side: md5 → two 60-bit halves →
-        Kirsch-Mitzenmacher positions → ``bit_or`` aggregation of
-        64-bit word masks, grouped by (file, column, word).  The
-        driver collects only the SET words — at most m/64 rows per
-        file per column (sparse far below that for small files), i.e.
-        O(files_staged · m/64) metadata, never O(rows).  The cost is
+        """Build each staged file's per-column Bloom words over the
+        txn directory with :func:`_bloom_words`; only files its
+        coverage pass read get a filter.  The cost is
         one extra columnar read of the staged key columns per commit —
         the standard price of building a write-time index (Delta's
         bloom index and Parquet's bloom pages pay the same); tables
         without a spec skip this entirely."""
-        import urllib.parse
-
         m, k = spec["m"], spec["k"]
         df = spark.read.parquet(txn_dir)
         present = [c for c in spec["cols"] if c in df.columns]
         if not present:
             return
-
-        def _canon_path(uri: str) -> str:
-            return os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(uri).path))
-
-        # COVERAGE GATE (r9 ADVICE item 3): a filter may only be
-        # attached to a file the build job provably read UNDER THE
-        # SAME PATH the driver resolves — otherwise a normalization
-        # miss (scheme, symlink, case) would leave a populated file
-        # with an empty filter, which probes then wrong-skip (silent
-        # data loss).  Files the job didn't account for get NO filter
-        # at all: they are read on every probe — more I/O, never a
-        # wrong answer.  The distinct-file pass is O(files) driver
-        # metadata and, unlike the probe rows below, also names files
-        # whose bloom columns are entirely NULL.
-        seen = {_canon_path(r["_f"]) for r in
-                df.select(F.input_file_name().alias("_f"))
-                .distinct().collect()}
+        seen, words = _bloom_words(
+            df, {c: F.col(c).cast("string") for c in present}, m, k)
         by_path: dict[str, dict] = {}
         unmatched = 0
         for entries in staged.values():
@@ -2527,56 +2554,46 @@ class ManifestTable:
                 f"job's file paths do not resolve to the staged "
                 f"paths (scheme/normalization mismatch) — refusing "
                 f"to commit an index that would never skip")
-        parts = []
-        for c in present:
-            hexc = F.md5(F.col(c).cast("string"))
-            sel = (df.select(
-                       F.input_file_name().alias("_f"),
-                       F.conv(F.substring(hexc, 1, 15), 16, 10)
-                        .cast("long").alias("_h1"),
-                       F.conv(F.substring(hexc, 17, 15), 16, 10)
-                        .cast("long").alias("_h2"))
-                   .where(F.col("_h1").isNotNull())     # NULLs: no bits
-                   .withColumn("_step",
-                               F.expr(f"pmod(_h2, {m}) | 1L"))
-                   .withColumn("_pos", F.explode(F.expr(
-                       f"transform(sequence(0, {k - 1}), "
-                       f"i -> pmod(_h1 + i * _step, {m}))")))
-                   .select(
-                       "_f", F.lit(c).alias("_c"),
-                       F.expr("cast(_pos div 64 as int)").alias("_w"),
-                       F.expr("shiftleft(1L, cast(pmod(_pos, 64) "
-                              "as int))").alias("_m")))
-            parts.append(sel)
-        import functools
-        probes = functools.reduce(
-            lambda a, b: a.unionByName(b), parts)
-        rows = (probes.groupBy("_f", "_c", "_w")
-                .agg(F.expr("bit_or(_m)").alias("_b")).collect())
-        for r in rows:
-            e = by_path.get(_canon_path(r["_f"]))
+        for path, c, w, b in words:
+            e = by_path.get(path)
             if e is not None:
-                e["bloom"][r["_c"]][str(r["_w"])] = r["_b"]
+                e["bloom"][c][w] = b
 
     # -- read path ---------------------------------------------------
 
-    def _dv_paths(self, ref: dict) -> list[str]:
-        """Absolute paths of a partition ref's DV sidecars."""
-        return [os.path.join(self.root, d["path"])
+    def _dvs(self, ref: dict) -> list[dict]:
+        """A partition ref's DV sidecar entries, ``path`` absolute."""
+        return [{**d, "path": os.path.join(self.root, d["path"])}
                 for d in ref.get("dv", [])]
 
-    def _file_record(self, mf: dict, entry: dict, dvs: list[str]) -> dict:
-        """One kept file as a reader consumes it: absolute ``path``;
-        ``rel``, the entry's OWN path — the DV row-address namespace
-        (absolute for a shallow clone's borrowed files, which
-        ``os.path.relpath`` would turn into a "../.." string no
-        sidecar address matches); ``bytes`` from the commit object;
-        ``dv``, the owning ref's sidecar paths; and ``fill``, the
+    def _file_record(self, mf: dict, entry: dict,
+                     dvs: list | None = None) -> dict:
+        """One planned file as every reader consumes it — the DSv2
+        batch, stream and change-feed readers and the JVM reader
+        :meth:`_read_files` alike: absolute ``path``; ``rel``, the
+        entry's OWN path — the DV row-address namespace (absolute for
+        a shallow clone's borrowed files, which ``os.path.relpath``
+        would turn into a "../.." string no sidecar address matches);
+        ``bytes`` from the commit object; ``dv``, the sidecar entries
+        (:meth:`_dvs`, with their commit-object ``bytes``) of the ref
+        that owns the file — none for a file no sidecar can address,
+        such as a staged or change-set file; and ``fill``, the
         adopted-dir constant columns (:func:`_adopted_fill`)."""
         rel = entry["path"]
         return {"path": os.path.join(self.root, rel), "rel": rel,
-                "bytes": entry.get("bytes"), "dv": dvs,
+                "bytes": entry.get("bytes"), "dv": dvs or [],
                 "fill": _adopted_fill(mf, rel)}
+
+    def _part_records(self, mf: dict, values) -> list[dict]:
+        """The :meth:`_file_record` of every file of the live partitions
+        ``values`` — what :meth:`scan_plan` emits for them with nothing
+        pruned."""
+        out: list[dict] = []
+        for v in values:
+            dvs = self._dvs(mf["partitions"][v])
+            out.extend(self._file_record(mf, e, dvs)
+                       for e in self._entries(mf, v))
+        return out
 
     def scan_plan(self, where: dict | None = None,
                   manifest_name: str | None = None) -> dict:
@@ -2618,8 +2635,8 @@ class ManifestTable:
 
         ``records`` is the same kept set resolved for a reader, one
         :meth:`_file_record` per file, all from the ONE commit object
-        read here — the only place a reader resolves a file's DV
-        sidecars, adopted fill and size."""
+        read here: the plan of the DSv2 readers and of the JVM reader
+        :meth:`_read_files` alike."""
         where = where or {}
         mf = self._raw(manifest_name)
         cm = mf.get("colmap") or {}
@@ -2738,7 +2755,7 @@ class ManifestTable:
                     continue
             entries = self._entries(mf, value)
             shards_opened += 1
-            dvs = self._dv_paths(ref)
+            dvs = self._dvs(ref)
             for e in entries:
                 drop = any(
                     col in e["stats"]
@@ -2814,8 +2831,7 @@ class ManifestTable:
             era_specs = [_pt_where_spec(e, (lo, hi), dt)
                          for e in _pt_eras(mf)]
         meta_rows = 0
-        boundary: list[str] = []
-        boundary_parts: list[str] = []
+        boundary: list[dict] = []
         files_total = files_skipped = shards_opened = 0
         for value, ref in mf["partitions"].items():
             files_total += ref["files"]
@@ -2840,6 +2856,7 @@ class ManifestTable:
                 meta_rows += ref["rows"] - ref.get("dv_rows", 0)
                 continue
             shards_opened += 1
+            dvs = self._dvs(ref)
             for e in self._entries(mf, value):
                 st = e["stats"].get(col)
                 if st is not None and _ranges_disjoint(st, lo, hi):
@@ -2852,10 +2869,7 @@ class ManifestTable:
                     # sound DV-free; DV'd boundary files read exactly
                     meta_rows += e["rows"]     # whole file inside
                 else:
-                    boundary.append(os.path.join(self.root, e["path"]))
-                    if (not boundary_parts
-                            or boundary_parts[-1] != value):
-                        boundary_parts.append(value)
+                    boundary.append(self._file_record(mf, e, dvs))
         exact = 0
         if boundary:
             cond = F.lit(True)
@@ -2863,9 +2877,7 @@ class ManifestTable:
                 cond = cond & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
-            exact = (self._read_files(spark, boundary, mf,
-                                      partitions=boundary_parts)
-                     .where(cond).count())
+            exact = self._read_files(spark, boundary, mf).where(cond).count()
         return {"count": meta_rows + exact,
                 "rows_from_metadata": meta_rows,
                 "files_read": len(boundary),
@@ -3046,37 +3058,34 @@ class ManifestTable:
         return (min(r["stats"][col][0] for r in refs),
                 max(r["stats"][col][1] for r in refs))
 
-    def _read_files(self, spark: SparkSession, files: list[str],
-                    mf: dict, keep_pos: bool = False,
-                    partitions: list[str] | None = None) -> DataFrame:
-        """Read a resolved file list through the PINNED schema: the
-        parquet reader reconciles by name, so files written before a
-        schema evolution simply yield NULL for the added columns —
-        Delta's metadata-only ADD COLUMNS semantics.  Every internal
-        read (merge read-back, compaction, delete, snapshot read)
-        funnels through here so old and new files always surface the
-        same frame shape — which is ALSO what makes deletion vectors
-        sound: rows position-marked dead by any live ref's ``dv``
-        sidecars are anti-joined away HERE, so a merge read-back or a
-        compaction can never resurrect them.  The DV relation is
-        broadcast (it is bounded by deleted-row count — the mode is
-        for low-fraction deletes; high-fraction deletes belong in
-        rewrite mode).  ``keep_pos=True`` keeps the (``__rel``,
-        ``__ri``) file-position columns for callers that need row
-        addresses (the DV writer itself).
+    def _read_files(self, spark: SparkSession, records: list[dict],
+                    mf: dict, keep_pos: bool = False) -> DataFrame:
+        """THE JVM read of table files: the planned file ``records``
+        (:meth:`_file_record` — :meth:`scan_plan`'s, or
+        :meth:`_part_records` for whole partitions) read through
+        ``mf``'s PINNED schema under the files' PHYSICAL column names,
+        renamed back to logical names through the colmap.  The parquet
+        reader reconciles by name, so files written before a schema
+        evolution simply yield NULL for the added columns — Delta's
+        metadata-only ADD COLUMNS semantics.  Every internal read
+        (merge read-back, compaction, delete, snapshot read, change
+        sets, the constraint scan) funnels through here so old and new
+        files always surface the same frame shape — which is ALSO what
+        makes deletion vectors sound: rows position-marked dead by the
+        union of the records' ``dv`` sidecars are anti-joined away
+        HERE, so a merge read-back or a compaction can never resurrect
+        them; records that carry no sidecar plan no join.  The DV
+        relation is broadcast (it is bounded by deleted-row count —
+        the mode is for low-fraction deletes; high-fraction deletes
+        belong in rewrite mode).  ``keep_pos=True`` keeps the
+        (``__rel``, ``__ri``) file-position columns for callers that
+        need row addresses (the DV writer itself).
 
-        ``partitions`` (the values whose files ``files`` came from)
-        bounds the DV SIDECAR read to the touched refs — a DV row can
-        only address a file inside its own partition directory, so a
-        partition-pruned read need not open the other 10^4 partitions'
-        sidecars.  None = load all refs' sidecars (correct, more I/O:
-        callers passing ad-hoc file lists).
-
-        An empty ``files`` (a fully-pruned or still-empty snapshot, an
-        empty change set) reads as an EMPTY frame with the pinned
+        Empty ``records`` (a fully-pruned or still-empty snapshot, an
+        empty change set) read as an EMPTY frame with the pinned
         schema — never a zero-path reader error."""
         schema = mf.get("schema")
-        if not files:
+        if not records:
             if not schema:
                 raise FileNotFoundError(
                     f"{self.root}: nothing to read and no pinned schema "
@@ -3095,7 +3104,7 @@ class ManifestTable:
             # logical aliases apply after
             reader = reader.schema(
                 ", ".join(f"`{cm.get(n, n)}` {t}" for n, t in schema))
-        df = reader.parquet(*files)
+        df = reader.parquet(*[r["path"] for r in records])
         for n, _ in (schema or []):
             p = cm.get(n, n)
             if p != n:
@@ -3121,12 +3130,8 @@ class ManifestTable:
                         F.col("_metadata.file_path"),
                         "/" + re.escape(adn) + "=([^/]+)/", 1)
                     .cast(dt)))
-        dv_refs = (mf["partitions"].values() if partitions is None
-                   else [mf["partitions"][v] for v in partitions
-                         if v in mf["partitions"]])
-        dv_entries = [e for ref in dv_refs
-                      if isinstance(ref, dict)
-                      for e in ref.get("dv", [])]
+        dv_entries = list({d["path"]: d for r in records
+                           for d in r["dv"]}.values())
         if dv_entries or keep_pos:
             # ``_metadata.file_path`` is a URI whose slash count varies
             # ("file:///abs" vs "file:/abs" — r9 ADVICE item 2): parse
@@ -3155,8 +3160,7 @@ class ManifestTable:
                   .drop("__p")
                   .withColumn("__ri", F.col("_metadata.row_index")))
         if dv_entries:
-            dv_paths = [os.path.join(self.root, e["path"])
-                        for e in dv_entries]
+            dv_paths = [e["path"] for e in dv_entries]
             # DV sidecars are tiny by the mode's contract (bounded by
             # deleted-row count, the low-fraction-delete path), and
             # their exact sizes are IN the commit object — when the
@@ -3184,7 +3188,7 @@ class ManifestTable:
                     F.col("row_index").alias("__ri"))
             df = df.join(F.broadcast(dv), ["__rel", "__ri"],
                          "left_anti")
-        if (dv_entries or keep_pos) and not keep_pos:
+        if dv_entries and not keep_pos:
             df = df.drop("__rel", "__ri")
         return df
 
@@ -3200,9 +3204,8 @@ class ManifestTable:
         reads as an EMPTY frame with the pinned schema — never a
         zero-path reader error."""
         name = manifest_name or self._current_name()   # one snapshot
-        plan = self.scan_plan(where, name)
-        return self._read_files(spark, plan["files"], self._raw(name),
-                                partitions=plan["partitions"])
+        return self._read_files(
+            spark, self.scan_plan(where, name)["records"], self._raw(name))
 
     def register(self, spark: SparkSession, name: str,
                  version: int | None = None,
@@ -3560,11 +3563,9 @@ class ManifestTable:
         outside = [v for v in live if v not in exclude]
         if not outside:
             return []
-        files = [os.path.join(self.root, e["path"])
-                 for v in outside for e in self._entries(mf, v)]
         _, bscond, _ = by_source
-        probe = (self._read_files(spark, files, mf, keep_pos=True,
-                                  partitions=outside)
+        probe = (self._read_files(spark, self._part_records(mf, outside),
+                                  mf, keep_pos=True)
                  .join(src_keys, keys, "left_anti"))
         if bscond is not None:
             probe = probe.where(F.coalesce(bscond, F.lit(False)))
@@ -3607,46 +3608,44 @@ class ManifestTable:
 
     def _stage_rows(self, spark: SparkSession, mf: dict, mode: str,
                     values: list, change, cdf: bool,
-                    files: list[str] | None = None,
+                    records: list[dict] | None = None,
                     matched_only: bool = False) -> _RowChange:
         """THE staging of every row-level DML (:meth:`merge`,
         :meth:`merge_batch`, :meth:`delete_where`,
         :meth:`update_where`) against the snapshot ``mf``.  The op
-        names the partition ``values`` it reads (``files`` narrows the
-        read to a pruned file list) and ``change(rows)``, which maps
-        the read rows to ``(kept, gone, adds, feed)``: the rows that
-        survive, the rows removed, the new row images (None: none) and
-        the change feed as ``(rows, _change_type)`` pairs.  The frames
-        are lazy; each mode runs only what it needs.
+        names the partition ``values`` it reads (``records``, a pruned
+        :meth:`scan_plan`'s, narrows the read) and ``change(rows)``,
+        which maps the read rows to ``(kept, gone, adds, feed)``: the
+        rows that survive, the rows removed, the new row images (None:
+        none) and the change feed as ``(rows, _change_type)`` pairs.
+        The frames are lazy; each mode runs only what it needs.
 
         ``mode="rewrite"`` (copy-on-write) restages every read
         partition as ``kept`` plus ``adds``.  ``mode="dv"`` (merge-on-
         read) dead-marks ``gone`` with deletion-vector sidecars on the
         partition that OWNS each row's file (:func:`_owning_pt` —
         era-exact under partition evolution) and appends ``adds`` as
-        new files.  ``matched_only`` marks a predicate-driven op whose
-        change is void when no row matches: a rewrite then first counts
-        the matches per owning partition over the candidate files and
-        reads back only the partitions holding one.  Nothing is visible
-        until :meth:`_change_commit`'s commit."""
+        new files.  ``matched_only`` marks an op that rewrites only
+        where ``gone`` matched: a rewrite first counts ``gone`` per
+        owning partition over the candidate files and reads back only
+        the partitions holding a match, and ``adds`` outside them join
+        their partitions as new files.  A delete or an update (whose
+        ``adds`` derive from its matches) is void when nothing matched;
+        a merge's upserts still land.  Nothing is visible until
+        :meth:`_change_commit`'s commit."""
         if mode not in ("rewrite", "dv"):
             raise ValueError(f"mode {mode!r}: expected 'rewrite' or 'dv'")
         none = _RowChange([], {}, {}, {}, [] if cdf else None)
-        if not values or (matched_only and not files):
+        if not values or records == []:
             return none
-        def paths(vals: list) -> list[str]:
-            return [os.path.join(self.root, e["path"])
-                    for v in vals for e in self._entries(mf, v)]
-
         dv = mode == "dv"
         live = [v for v in values if v in mf["partitions"]]
-        if files is None:
-            files = paths(live)
+        if records is None:
+            records = self._part_records(mf, live)
         kept, gone, adds, feed = change(self._read_files(
-            spark, files, mf, keep_pos=dv or matched_only,
-            partitions=live))
+            spark, records, mf, keep_pos=dv or matched_only))
         dvs, removed = {}, {}
-        if dv and files:
+        if dv and records:
             dvs = self._stage_dv(gone.select(_owning_pt(mf).alias("__pt"),
                                              "__rel", "__ri"))
             removed = {v: sum(e["rows"] for e in es)
@@ -3655,7 +3654,7 @@ class ManifestTable:
             removed = {r["__v"]: r["n"] for r in
                        (gone.groupBy(_owning_pt(mf).alias("__v"))
                         .agg(F.count(F.lit(1)).alias("n")).collect())}
-        if matched_only and not removed:
+        if matched_only and not removed and (dv or adds is None):
             return none
         if dv:
             staged = {} if adds is None else self._stage(adds)
@@ -3663,7 +3662,7 @@ class ManifestTable:
             if matched_only:
                 live = list(removed)
                 kept, gone, adds, feed = change(self._read_files(
-                    spark, paths(live), mf, partitions=live))
+                    spark, self._part_records(mf, live), mf))
             staged = self._stage(
                 kept if adds is None else kept.unionByName(adds),
                 enforce=adds is not None)
@@ -3737,6 +3736,9 @@ class ManifestTable:
         else:
             del_rows = None
             upserts = updates
+        # a rewrite restages only the partitions a delete-clause merge
+        # matched in, so marked rows that match nothing change nothing
+        matched_only = del_rows is not None and mode == "rewrite"
         if self.ts is None:
             touched = [] if updates.isEmpty() else ["__all"]
         else:
@@ -3761,14 +3763,10 @@ class ManifestTable:
             # violation even if by-source expansion happens to pull
             # its partition into the rewrite
             key_cols = [k for k in keys if k != self.ts]
-            outside = [os.path.join(self.root, e["path"])
-                       for v in live if v not in orig_touched
-                       for e in self._entries(mf, v)]
+            outside = self._part_records(
+                mf, [v for v in live if v not in orig_touched])
             if outside and key_cols:
-                strays = (self._read_files(
-                              spark, outside, mf,
-                              partitions=[v for v in live
-                                          if v not in orig_touched])
+                strays = (self._read_files(spark, outside, mf)
                           .join(updates.select(*key_cols).distinct(),
                                 key_cols, "left_semi"))
                 n = strays.count()
@@ -3797,7 +3795,7 @@ class ManifestTable:
                         mf, affected.drop("__rel", "__ri"), by_source[2])
                     feed += [(affected, "update_preimage"),
                              (closed, "update_postimage")]
-            if mode == "dv":
+            if mode == "dv" or matched_only:
                 # EVERY matched live row goes: an upsert replaces it, a
                 # delete-clause row removes it
                 gone = cur.join(src_keys, keys, "left_semi")
@@ -3826,7 +3824,8 @@ class ManifestTable:
             adds = ups if closed is None else ups.unionByName(closed)
             return cur.join(up_keys, keys, "left_anti"), gone, adds, feed
 
-        return self._stage_rows(spark, mf, mode, touched, change, cdf)
+        return self._stage_rows(spark, mf, mode, touched, change, cdf,
+                                matched_only=matched_only)
 
     def overwrite(self, df: DataFrame) -> None:
         """Atomic FULL REFRESH (the dbt ``table`` materialization):
@@ -3972,27 +3971,17 @@ class ManifestTable:
             raise FileNotFoundError(
                 f"{self.root} version {version}: committed without "
                 "cdf=True — no row-level change set was captured")
-        entries = mf["cdf"]
-        schema = list(mf.get("schema") or []) + [["_change_type",
-                                                  "string"]]
-        ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-        if not entries:
-            return local_frame(spark, [], ddl)
-        paths = [os.path.join(self.root, e["path"]) for e in entries]
+        # the change set is exactly what the commit wrote: no sidecar
+        # of its own snapshot addresses those files
+        records = [self._file_record(mf, e) for e in mf["cdf"]]
         if mf.get("cdf_kind") == "insert_files":
             # an append's feed IS its data files (pure inserts, zero
             # extra bytes on disk); the classification is a constant
-            return (self._read_files(spark, paths, mf)
+            return (self._read_files(spark, records, mf)
                     .withColumn("_change_type", F.lit("insert")))
-        cm = mf.get("colmap") or {}
-        phys_ddl = ", ".join(f"`{cm.get(n, n)}` {t}"
-                             for n, t in schema)
-        df = spark.read.schema(phys_ddl).parquet(*paths)
-        for n, _ in schema:
-            p = cm.get(n, n)
-            if p != n:
-                df = df.withColumnRenamed(p, n)
-        return df
+        return self._read_files(spark, records, {
+            **mf, "schema": list(mf.get("schema") or [])
+            + [["_change_type", "string"]]})
 
     def cdf_commit_action(self, v: int, mf: dict) -> str:
         """Classify one in-range commit for a change-feed walk:
@@ -4223,7 +4212,7 @@ class ManifestTable:
                 continue                      # identical by ref
             old_paths = ({e["path"] for e in self._entries(old, value)}
                          if old_ref is not None else set())
-            dvs = self._dv_paths(ref)
+            dvs = self._dvs(ref)
             out.extend(self._file_record(new, e, dvs)
                        for e in self._entries(new, value)
                        if e["path"] not in old_paths)
@@ -4239,7 +4228,7 @@ class ManifestTable:
         not the table size."""
         name = self._current_name()                      # one snapshot
         return self._read_files(
-            spark, self.added_files(since_version, name), self._raw(name))
+            spark, self._added_records(since_version, name), self._raw(name))
 
     def restore(self, version: int) -> None:
         """Delta's ``RESTORE TABLE ... TO VERSION`` analog: commit a
@@ -4318,8 +4307,7 @@ class ManifestTable:
             where = {on: (canon(b["lo"]), canon(b["hi"]))}
         name = self._current_name()                      # one snapshot
         plan = self.scan_plan(where, name)
-        return self._read_files(spark, plan["files"], self._raw(name),
-                                partitions=plan["partitions"]), plan
+        return self._read_files(spark, plan["records"], self._raw(name)), plan
 
     def build_text_index(self, spark: SparkSession, col: str,
                          m: int = 1 << 15, k: int = 5) -> dict:
@@ -4329,8 +4317,9 @@ class ManifestTable:
         non-alphanumeric runs), folds each file's distinct words into
         a Bloom filter JVM-side (the module hashing contract:
         md5 → two 60-bit halves → Kirsch-Mitzenmacher positions →
-        ``bit_or`` word masks — the exact build :meth:`_attach_blooms`
-        uses, so the driver probe replays it bit-for-bit), and stores
+        ``bit_or`` word masks — :func:`_bloom_words`, the build
+        :meth:`_attach_blooms` uses, so the driver probe replays it
+        bit-for-bit), and stores
         one sidecar JSON per partition next to the shards.
         :meth:`search_text` then drops whole files whose filter proves
         a term absent — at 100 TB, a needle-term search opens the
@@ -4353,52 +4342,22 @@ class ManifestTable:
             raise SchemaMismatch(
                 f"build_text_index: column {col!r} has type "
                 f"{dtypes.get(col)!r}; text indexing wants string")
-        rel_all = [e["path"] for v in mf["partitions"]
-                   for e in self._entries(mf, v)]
-        if not rel_all:
+        records = self._part_records(mf, list(mf["partitions"]))
+        if not records:
             return {}
-        import urllib.parse
-
-        def _canon_path(uri: str) -> str:
-            return os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(uri).path))
-
-        abs_to_rel = {os.path.abspath(os.path.join(self.root, r)): r
-                      for r in rel_all}
-        df = spark.read.parquet(
-            *[os.path.join(self.root, r) for r in rel_all])
-        seen = {_canon_path(r["_f"]) for r in
-                df.select(F.input_file_name().alias("_f"))
-                .distinct().collect()}
-        toks = (df.select(
-                    F.input_file_name().alias("_f"),
-                    F.explode(F.array_distinct(F.split(
-                        F.lower(F.col(p)), "[^a-z0-9]+")))
-                     .alias("_w0"))
-                .where(F.col("_w0") != ""))
-        hexc = F.md5(F.col("_w0"))
-        rows = (toks.select(
-                    "_f",
-                    F.conv(F.substring(hexc, 1, 15), 16, 10)
-                     .cast("long").alias("_h1"),
-                    F.conv(F.substring(hexc, 17, 15), 16, 10)
-                     .cast("long").alias("_h2"))
-                .withColumn("_step", F.expr(f"pmod(_h2, {m}) | 1L"))
-                .withColumn("_pos", F.explode(F.expr(
-                    f"transform(sequence(0, {k - 1}), "
-                    f"i -> pmod(_h1 + i * _step, {m}))")))
-                .select("_f",
-                        F.expr("cast(_pos div 64 as int)").alias("_w"),
-                        F.expr("shiftleft(1L, cast(pmod(_pos, 64) "
-                               "as int))").alias("_m"))
-                .groupBy("_f", "_w")
-                .agg(F.expr("bit_or(_m)").alias("_b")).collect())
+        abs_to_rel = {os.path.abspath(r["path"]): r["rel"]
+                      for r in records}
+        df = spark.read.parquet(*[r["path"] for r in records])
+        seen, words = _bloom_words(
+            df, {col: F.explode(F.array_remove(F.array_distinct(
+                F.split(F.lower(F.col(p)), "[^a-z0-9]+")), ""))},
+            m, k)
         per_file: dict[str, dict] = {
             rel: {} for ab, rel in abs_to_rel.items() if ab in seen}
-        for r in rows:
-            rel = abs_to_rel.get(_canon_path(r["_f"]))
+        for path, _, w, b in words:
+            rel = abs_to_rel.get(path)
             if rel is not None and rel in per_file:
-                per_file[rel][str(r["_w"])] = r["_b"]
+                per_file[rel][w] = b
         sdir = os.path.join(self.root, _SHARD_DIR)
         os.makedirs(sdir, exist_ok=True)
 
@@ -4427,7 +4386,7 @@ class ManifestTable:
             return {"partitions": parts}
 
         self._transact(build)
-        return {"files": len(rel_all), "indexed": len(per_file)}
+        return {"files": len(records), "indexed": len(per_file)}
 
     def search_text(self, spark: SparkSession, col: str, terms,
                     manifest_name: str | None = None):
@@ -4449,8 +4408,7 @@ class ManifestTable:
                                           str(t).lower()) if w]
         if not words:
             raise ValueError(f"no searchable words in {terms!r}")
-        kept_files: list[str] = []
-        kept_parts: list[str] = []
+        kept: list[dict] = []
         total = pruned = 0
         for value, ref in mf["partitions"].items():
             tidx = ((ref.get("tidx") or {}).get(col)
@@ -4460,6 +4418,7 @@ class ManifestTable:
                 with open(os.path.join(self.root,
                                        tidx["shard"])) as f:
                     fmap = json.load(f)
+            dvs = self._dvs(ref)
             for e in self._entries(mf, value):
                 total += 1
                 bc = fmap.get(e["path"])
@@ -4469,10 +4428,8 @@ class ManifestTable:
                         for w in words):
                     pruned += 1
                     continue
-                kept_files.append(os.path.join(self.root, e["path"]))
-                if not kept_parts or kept_parts[-1] != value:
-                    kept_parts.append(value)
-        df = self._read_files(spark, kept_files, mf, partitions=kept_parts)
+                kept.append(self._file_record(mf, e, dvs))
+        df = self._read_files(spark, kept, mf)
         pred = None
         for w in words:
             one = F.lower(F.col(col)).rlike(
@@ -4732,17 +4689,13 @@ class ManifestTable:
             for v, r in mf["partitions"].items())
         if not old_files <= live_files or dv_grew:
             return _full_fallback()
-        new_by_val = {v: [e for e in es if e["path"] not in old_files]
-                      for v, es in live_entries.items()}
-        paths = [p if os.path.isabs(p) else os.path.join(self.root, p)
-                 for es in new_by_val.values() for e in es
-                 for p in [e["path"]]]
-        if not paths:
+        new = [self._file_record(mf, e, self._dvs(mf["partitions"][v]))
+               for v, es in live_entries.items() for e in es
+               if e["path"] not in old_files]
+        if not new:
             merged = {**prior}
         else:
-            frame = self._read_files(
-                spark, paths, mf,
-                partitions=[v for v, es in new_by_val.items() if es])
+            frame = self._read_files(spark, new, mf)
             fresh = self._column_stats(frame, cols, approx=True)
             dtypes = dict(mf.get("schema") or [])
             merged = {**prior}
@@ -4768,7 +4721,7 @@ class ManifestTable:
                             p_["ddq"]["buckets"],
                             sketches.ddq_buckets(frame, c, s))}
         return {**self._record_colstats(mf, merged, True),
-                "scanned_files": len(paths)}
+                "scanned_files": len(new)}
 
     def estimate_frequency(self, col: str, value) -> int:
         """Estimated row count of ``value`` in ``col`` from the
@@ -5520,7 +5473,7 @@ class ManifestTable:
             spark, mf, mode, plan["partitions"],
             lambda cur: (cur.where(~hit), cur.where(hit), None,
                          [(cur.where(hit), "delete")]),
-            cdf, files=plan["files"], matched_only=True)
+            cdf, records=plan["records"], matched_only=True)
         if not ch.removed:
             return {"rows_deleted": 0, "partitions_rewritten": 0,
                     "partitions_dropped": 0}
@@ -5584,7 +5537,8 @@ class ManifestTable:
                                     (new, "update_postimage")]
 
         ch = self._stage_rows(spark, mf, "dv", plan["partitions"], change,
-                              cdf, files=plan["files"], matched_only=True)
+                              cdf, records=plan["records"],
+                              matched_only=True)
         if not ch.removed:
             return {"rows_updated": 0, "partitions_rewritten": 0,
                     "partitions_touched": 0}
@@ -5793,10 +5747,8 @@ class ManifestTable:
         if not todo_vals:
             return {"partitions": 0, "files_before": 0, "files_after": 0}
         files_before = sum(live[v]["files"] for v in todo_vals)
-        paths = [os.path.join(self.root, e["path"])
-                 for v in todo_vals for e in self._entries(mf, v)]
-        frame = self._read_files(spark, paths, mf,
-                                 partitions=todo_vals)
+        frame = self._read_files(spark, self._part_records(mf, todo_vals),
+                                 mf)
         sort_cols, drop_after = cluster_by, None
         if zorder_by:
             dtypes = {f.name: f.dataType.simpleString()

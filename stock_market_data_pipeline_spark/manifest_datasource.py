@@ -31,7 +31,9 @@ one commit-object read — ``ManifestTable.scan_plan`` for the batch
 read and the stream's catch-up batch, its ``_added_records`` twin
 for an incremental micro-batch — and :func:`_file_partitions` turns
 them into tasks (packing included); nothing here re-derives a file's
-DV sidecars, adopted fill or size.  Executor-side, :func:`_conform`
+DV sidecars, adopted fill or size.  The JVM reader,
+``ManifestTable._read_files``, reads the same records: it anti-joins
+exactly the sidecars they carry.  Executor-side, :func:`_conform`
 is the one Arrow reconciliation to the pinned schema (colmap renames,
 adopted fills, NULL-filled added columns, pin order, widening and
 canonical casts) for the file, packed and CDF reads alike.
@@ -219,7 +221,8 @@ def _file_partitions(records: list[dict], pack: int) -> list:
     budget bins when ``pack`` (a :func:`_pack_opt` value) asks.  The
     batch reader, both stream branches and :func:`expected_scan_tasks`
     all plan through here."""
-    out = [ManifestFilePartition(r["path"], r["rel"], r["dv"], r["fill"])
+    out = [ManifestFilePartition(r["path"], r["rel"],
+                                 [d["path"] for d in r["dv"]], r["fill"])
            for r in records]
     if pack and len(out) > 1:
         sizes = {r["rel"]: r["bytes"] for r in records}
@@ -1187,7 +1190,7 @@ def _commit_staged(root: str, ts: str | None, staged: dict,
             from pyspark.sql import SparkSession
             t._enforce_constraints(
                 SparkSession.getActiveSession(), cons, staged,
-                mf.get("colmap") or {})
+                schema_sig, mf.get("colmap") or {})
         streams = dict(mf.get("streams", {}))
         if stream is not None:
             if streams.get(stream[0], -1) >= stream[1]:

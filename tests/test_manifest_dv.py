@@ -62,8 +62,7 @@ def test_dv_rel_addresses_match_driver_relpath(spark, dvt):
     root-relative path for every live file — this is what makes DV
     addresses stable across URI renderings and table moves."""
     mf = dvt._raw()
-    files = [os.path.join(dvt.root, e["path"])
-             for v in mf["partitions"] for e in dvt._entries(mf, v)]
+    files = dvt._part_records(mf, list(mf["partitions"]))
     df = dvt._read_files(spark, files, mf, keep_pos=True)
     rels = {r["__rel"] for r in df.select("__rel").distinct().collect()}
     expected = {e["path"] for v in mf["partitions"]
@@ -651,3 +650,35 @@ def test_dv_driver_budget_guard_disqualifies_unknown_sizes():
     assert not _dv_fits_driver_budget([{"path": "a"}])
     assert not _dv_fits_driver_budget(
         [{"path": "a", "bytes": 0}, {"path": "b"}])
+
+
+def _plans_anti_join(df) -> bool:
+    return "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_reads_of_files_no_sidecar_addresses_plan_no_anti_join(
+        spark, tmp_path):
+    """A JVM read plans the DV anti-join only for the sidecars of the
+    files it reads: the incremental read and the change feed of an
+    append into a clean partition touch no file a DV addresses, so a
+    sidecar elsewhere in the table must not put a join in their plans
+    (each would cost the DV'd table, not the change)."""
+    rows = [("A", "2024-01-02", 1.0), ("B", "2024-01-02", 2.0),
+            ("A", "2024-01-03", 3.0)]
+    t = ManifestTable.create(
+        spark.createDataFrame(rows, "ticker string, d string, close double"),
+        str(tmp_path / "t"), ts="d")
+    t.delete_where(spark, "ticker = 'B'", mode="dv")
+    assert t._raw()["partitions"]["2024-01-02"].get("dv")
+    assert _plans_anti_join(t.read(spark))       # the DV'd snapshot
+    v = t.version()
+    t.append(spark.createDataFrame([("C", "2024-01-04", 4.0)],
+                                   "ticker string, d string, close double"),
+             cdf=True)
+    inc = t.read_incremental(spark, v)
+    feed = t.changes(spark, t.version())
+    assert not _plans_anti_join(inc)
+    assert not _plans_anti_join(feed)
+    assert [tuple(r) for r in inc.collect()] == [("C", "2024-01-04", 4.0)]
+    assert [(r.ticker, r._change_type) for r in feed.collect()] == [
+        ("C", "insert")]

@@ -192,3 +192,35 @@ def test_crash_before_commit_leaves_old_snapshot(spark, table):
                     _crash_before_commit=True)
     assert _snap(spark, table) == sorted(
         (t, d, c) for t, d, c in BASE)
+
+
+def test_rewrite_merge_of_unmatched_marked_rows_restages_nothing(
+        spark, tmp_path):
+    """A rewrite MERGE whose only source row is delete-marked and
+    matches no live row changes nothing, so it must neither restage
+    the partition the row names nor burn a version (dv mode already
+    commits nothing); ``merge_batch`` still commits its ledger entry,
+    with every partition kept by shard ref."""
+    schema = "ticker string, d string, close double"
+    t = ManifestTable.create(
+        spark.createDataFrame([("A", "2024-01-02", 1.0),
+                               ("B", "2024-01-02", 2.0),
+                               ("A", "2024-01-03", 3.0)], schema),
+        str(tmp_path / "t"), ts="d")
+    t.delete_where(spark, "ticker = 'B'", mode="dv")
+    t.append(spark.createDataFrame([("C", "2024-01-04", 4.0)], schema),
+             cdf=True)
+    src = spark.createDataFrame([("Z", "2024-01-03", -1.0)], schema)
+    v0, parts0 = t.version(), t._raw()["partitions"]
+    t.merge(spark, src, ["ticker", "d"], when_matched_delete="close < 0")
+    assert t.version() == v0
+    assert t._raw()["partitions"] == parts0
+    assert t.merge_batch(spark, src, ["ticker", "d"], "s", 0,
+                         when_matched_delete="close < 0")
+    mf = t._raw()
+    assert mf["version"] == v0 + 1 and mf["streams"] == {"s": 0}
+    assert ({v: r["shard"] for v, r in mf["partitions"].items()}
+            == {v: r["shard"] for v, r in parts0.items()})
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        ("A", "2024-01-02", 1.0), ("A", "2024-01-03", 3.0),
+        ("C", "2024-01-04", 4.0)]
